@@ -174,7 +174,7 @@ def summarize(tracer: tr.Tracer, ops: list[dict], event_dir: str,
         )
 
     # exec.s and exec.jobs: the action (plan, run, deliver) and the jobs
-    # behind it. The stage and task sums cover every job the window ran,
+    # behind it. The stage and task sums cover every job the pass ran,
     # whichever layer fired it: builders, sinks and micro-batches run on the
     # same executors.
     m["exec.s"] = layer_self("exec")
@@ -229,7 +229,7 @@ def summarize(tracer: tr.Tracer, ops: list[dict], event_dir: str,
     m["harness.s"] = sum(self_s[s.id] for s in roots)
     closed = sum(1 for s in roots if self_s[s.id] <= 0.05 * (s.end - s.start))
     m["trace.closure_frac"] = closed / len(roots) if roots else 0.0
-    m["trace.wall_s"] = result["passes"][0] if result["passes"] else 0.0
+    m["trace.wall_s"] = result["wall_s"]
     ranking = sorted(
         ((layer, layer_self(layer)) for layer in SELF_LAYERS), key=lambda kv: -kv[1]
     )

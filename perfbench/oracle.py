@@ -6,10 +6,11 @@ Spark result and its DuckDB oracle hash equal exactly when the parity test
 would call them equal.
 
 Oracle hashes are expensive (the dedup family's oracles are O(n^2) SQL), so
-they are computed once per (query, dataset digest, oracle-SQL digest) and
-filed in ``oracle_hashes.json`` beside this file. A run recomputes only the
-entries whose key changed, outside every timed region, and keeps them in the
-work directory.
+they are computed once per (query, sf, oracle-SQL digest) and filed in
+``oracle_hashes.json`` beside this file. The runner looks them up before the
+workload process starts, so DuckDB never runs in a timed region, in set-up
+or in the process tree whose memory is measured. It recomputes only the
+entries whose oracle SQL changed and keeps them in the work directory.
 
 Refresh the committed cache (and check, on every query, that the Arrow
 rendering the benchmark times hashes the same as the ``collect()`` rendering
@@ -110,13 +111,13 @@ def oracle_hash(con, sql: str) -> tuple[str, int]:
 
 
 class OracleCache:
-    """Oracle hashes for one dataset, keyed by query and oracle-SQL digest.
+    """Oracle hashes for one sf, keyed by query and oracle-SQL digest.
 
     Reads the committed file, then the work directory's overlay; writes only
     the overlay."""
 
-    def __init__(self, data_digest: str, overlay_path: str):
-        self.data_digest = data_digest
+    def __init__(self, sf: str, overlay_path: str):
+        self.sf = sf
         self.overlay_path = overlay_path
         self.entries: dict[str, dict] = {}
         for path in (COMMITTED, overlay_path):
@@ -125,7 +126,7 @@ class OracleCache:
                     doc = json.load(fh)
             except FileNotFoundError:
                 continue
-            if doc.get("data_digest") == data_digest:
+            if doc.get("sf") == sf:
                 self.entries.update(doc["queries"])
 
     def lookup(self, name: str, sql: str) -> dict | None:
@@ -155,30 +156,41 @@ class OracleCache:
         os.makedirs(os.path.dirname(path), exist_ok=True)
         with open(path, "w", encoding="utf-8") as fh:
             json.dump(
-                {"data_digest": self.data_digest,
+                {"sf": self.sf,
                  "queries": dict(sorted(self.entries.items()))},
                 fh, indent=1,
             )
             fh.write("\n")
 
 
+def expected(names: list[str], log=print) -> dict[str, dict]:
+    """The oracle entry (hash and row count) of every query in ``names``,
+    computing the ones the cache lacks."""
+    import workloads
+
+    if workloads.ROOT not in sys.path:
+        sys.path.insert(0, workloads.ROOT)
+    from notion_timetracking_etl_spark.queries import REGISTRY
+
+    cache = OracleCache(workloads.SF, workloads.work_dir("oracle_hashes.json"))
+    cache.fill([REGISTRY[q] for q in names], workloads.SF_DIR, log=log)
+    return {q: cache.lookup(q, REGISTRY[q].oracle) for q in names}
+
+
 def _refresh() -> int:
     """Recompute every workload query's oracle hash into the committed file
     and check Arrow-vs-collect rendering parity on Spark for each one."""
-    import datagen
     import workloads
 
     sys.path.insert(0, workloads.ROOT)
     from notion_timetracking_etl_spark.queries import REGISTRY
     from notion_timetracking_etl_spark.operators.dedup import release_scoped_caches
 
-    sf_dir, digest = datagen.ensure_dataset(
-        workloads.work_dir("data"), workloads.SF, workloads.DATA_SEED
-    )
+    sf_dir = workloads.SF_DIR
     names = sorted(
         {q for w in workloads.WORKLOADS.values() for q in workloads.oracle_queries(w)}
     )
-    cache = OracleCache(digest, COMMITTED)
+    cache = OracleCache(workloads.SF, COMMITTED)
     cache.entries = {}
     cache.fill([REGISTRY[n] for n in names], sf_dir)
     tmp = workloads.work_dir("tmp")

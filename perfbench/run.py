@@ -1,28 +1,29 @@
 """Benchmark runner: one workload, one fresh process, one JSON result line.
 
-    python3 perfbench/run.py --workload etl_star --seed 1 --seconds 20 --trace 0
-    python3 perfbench/run.py --workload all --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload etl_star --seed 1 --seconds 30 --trace 0
+    python3 perfbench/run.py --workload all --seed 1 --seconds 30 --trace 0
 
-Run from the repository root. Before anything is timed the runner generates
-the dataset (once per checkout, from ``datagen.py``) and makes sure every
-oracle hash the workload needs is known (``oracle.py``). It then starts the
-workload process (``worker.py``) with ``PYTHONPATH`` at the repository root
-on ``local[<nproc>]``, samples the resident memory of that process tree
-(the Python process, the JVM and the Python workers) until it exits, and prints the
-metrics. ``--trace 0`` prints the end-to-end metrics; ``--trace 1`` turns on
-the Spark event log, the streaming listener and the layer spans and prints
-the per-layer metrics.
+Run from the repository root. Before the workload process starts, the runner
+looks up the oracle hash of every query the workload checks (``oracle.py``),
+computing any the cache lacks. It then starts the workload process
+(``worker.py``) with ``PYTHONPATH`` at the repository root on
+``local[<nproc>]``, waits for it and prints the metrics. ``--trace 0``
+prints the end-to-end metrics; ``--trace 1`` turns on the Spark event log,
+the streaming listener and the layer spans and prints the per-layer metrics.
 
 End-to-end metrics:
 
 - ``setup_s``: process start to ready (interpreter, package import,
   SparkSession, JVM and Python-worker warm-up). Oracle work is excluded.
-- ``wall_s``: the first pass of the closed loop in a fresh session, summed
+- ``wall_s``: the one pass of the closed loop in a fresh session, summed
   over its operations (build, plan, execute, Arrow delivery, and for
   ``etl_star`` the publish). Every per-operation latency is printed too.
-- ``peak_rss_mb``: peak resident memory of the workload's process tree
-  (the Python process, the JVM and the Python workers), as proportional
-  set size.
+- ``retained_mb``: what the session still holds after the pass, once its
+  garbage is collected: the JVM heap in use after a full collection (cached
+  tables, broadcast and model blocks) plus the driver's Python proportional
+  set size. Work moved into session caches shows here. Peak resident memory
+  is not used: under the package's own heap settings it follows when the
+  collector grows the heap, and varies by a fifth between runs.
 
 A failed operation (exception, oracle-hash mismatch, sink row-count mismatch)
 counts in ``failed`` and makes ``correct`` false; it is never skipped.
@@ -43,7 +44,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 DEADLINE_S = 170.0  # a run must end within 180 s
 
-E2E_UNITS = {"setup_s": "s", "wall_s": "s", "peak_rss_mb": "MB"}
+E2E_UNITS = {"setup_s": "s", "wall_s": "s", "retained_mb": "MB"}
 
 
 def _fail(msg: str) -> None:
@@ -66,23 +67,6 @@ def _group_pids(pgid: int) -> list[int]:
     return out
 
 
-def _pss_bytes(pids: list[int]) -> int:
-    """Proportional set size summed over ``pids``: resident pages, each
-    shared page split among the processes sharing it, so forked Python
-    workers and the JVM's spawn helper are not counted twice."""
-    total = 0
-    for pid in pids:
-        try:
-            with open(f"/proc/{pid}/smaps_rollup", encoding="utf-8") as fh:
-                for line in fh:
-                    if line.startswith("Pss:"):
-                        total += int(line.split()[1]) * 1024
-                        break
-        except OSError:
-            pass
-    return total
-
-
 def _stop_group(pgid: int) -> None:
     """Kill whatever is left of the workload's process group and wait until
     every member has gone."""
@@ -98,17 +82,18 @@ def _stop_group(pgid: int) -> None:
     _fail(f"processes {pids} did not exit")
 
 
-def run_workload(name: str, seed: int, seconds: float, trace: int, t_start: float) -> dict:
-    import datagen
+def run_workload(name: str, seed: int, trace: int, t_start: float) -> dict:
+    import oracle
     import workloads
 
-    sf_dir, digest = datagen.ensure_dataset(
-        workloads.work_dir("data"), workloads.SF, workloads.DATA_SEED
-    )
     run_dir = workloads.work_dir("runs", f"{name}-s{seed}-t{trace}")
     tmp = os.path.join(run_dir, "tmp")
     shutil.rmtree(run_dir, ignore_errors=True)
     os.makedirs(tmp)
+    expect = os.path.join(run_dir, "expect.json")
+    with open(expect, "w", encoding="utf-8") as fh:
+        json.dump(oracle.expected(workloads.oracle_queries(workloads.WORKLOADS[name]),
+                                  log=lambda m: print(m, file=sys.stderr)), fh)
     out = os.path.join(run_dir, "result.json")
     env = dict(
         os.environ,
@@ -121,18 +106,16 @@ def run_workload(name: str, seed: int, seconds: float, trace: int, t_start: floa
     )
     cmd = [
         sys.executable, os.path.join(HERE, "worker.py"), "--workload", name,
-        "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace),
-        "--sf-dir", sf_dir, "--data-digest", digest, "--out", out,
+        "--seed", str(seed), "--trace", str(trace),
+        "--expect", expect, "--out", out,
     ]
     log_path = os.path.join(run_dir, "worker.log")
-    peak = 0
     with open(log_path, "wb") as log:
         env["PERFBENCH_SPAWN_TIME"] = repr(time.time())
         proc = subprocess.Popen(cmd, cwd=ROOT, env=env, stdout=log, stderr=log,
                                 start_new_session=True)
         try:
             while proc.poll() is None:
-                peak = max(peak, _pss_bytes(_group_pids(proc.pid)))
                 if time.monotonic() - t_start > DEADLINE_S:
                     _fail(f"workload {name} did not finish within {DEADLINE_S:.0f} s")
                 time.sleep(0.2)
@@ -145,18 +128,16 @@ def run_workload(name: str, seed: int, seconds: float, trace: int, t_start: floa
             tail = fh.read()[-3000:]
         _fail(f"workload process exited {proc.returncode}:\n{tail}")
     with open(out, encoding="utf-8") as fh:
-        res = json.load(fh)
-    res["peak_rss_mb"] = peak / 1e6
-    return res
+        return json.load(fh)
 
 
 def report(res: dict, trace: int) -> dict:
     """Human-readable lines on stdout, then the metrics dict."""
-    print(f"workload {res['workload']} seed {res['seed']}: {len(res['ops'])} operations"
-          f" in {res['window_s']:.1f} s, {len(res['passes'])} whole passes")
+    print(f"workload {res['workload']} seed {res['seed']}: {len(res['ops'])} operations")
     print("  latency: " + ", ".join(f"{op['name']} {op['s']:.3f}s" for op in res["ops"]))
     for f in res["failures"]:
-        print(f"  FAILED {f['op']} (pass {f['pass']}): {f['error']}")
+        print(f"  FAILED {f['op']}: {f['error']}")
+    print("  memory: " + ", ".join(f"{k} {v:.1f}" for k, v in res["memory"].items()))
     if trace:
         import layers
 
@@ -165,8 +146,8 @@ def report(res: dict, trace: int) -> dict:
             f"{k} {v:.3f}s" for k, v in lay["self_ranking"]))
         print(f"  jobs {lay['jobs_total']} ({lay['jobs_unattributed']} outside every span)")
         return {k: {"value": v, "unit": layers.UNITS[k]} for k, v in lay["metrics"].items()}
-    e2e = {"setup_s": res["setup_s"], "wall_s": res["passes"][0],
-           "peak_rss_mb": res["peak_rss_mb"]}
+    e2e = {"setup_s": res["setup_s"], "wall_s": res["wall_s"],
+           "retained_mb": sum(res["memory"].values())}
     return {k: {"value": v, "unit": E2E_UNITS[k]} for k, v in e2e.items()}
 
 
@@ -180,6 +161,9 @@ def main() -> int:
     ap = argparse.ArgumentParser(description="perfbench runner")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
+    # A run measures one whole pass of fixed work, which takes about
+    # BENCHMARK.json's run_seconds; --seconds is accepted but cuts nothing,
+    # so every run times the same operations.
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
@@ -196,7 +180,7 @@ def main() -> int:
     attempted = failed = 0
     for name in names:
         t0 = t_start if len(names) == 1 else time.monotonic()
-        res = run_workload(name, args.seed, args.seconds, args.trace, t0)
+        res = run_workload(name, args.seed, args.trace, t0)
         m = report(res, args.trace)
         for k, v in m.items():
             print(f"  {k} = {v['value']:.6g} {v['unit']}")

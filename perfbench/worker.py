@@ -8,7 +8,7 @@ Timed per operation: the query builder (plan construction plus any jobs it
 fires), Catalyst and execution, and delivery of every column of every row to
 this process as Arrow (``DataFrame.toArrow()``). The result is hashed and
 compared with the oracle only after the clock stops. ``etl_star`` adds a
-publish operation per pass: ``run_derive`` over the canon, written through
+publish operation to its pass: ``run_derive`` over the canon, written through
 the JSONL and parquet sinks and the Power BI wipe-and-reload on an in-memory
 transport.
 """
@@ -105,14 +105,12 @@ class Publisher:
         self.spark, self.sf_dir, self.out_dir = spark, sf_dir, out_dir
         self.expected = expected  # table -> oracle-checked row count
         self.clock = VirtualClock()
-        # one governor for the session: repeated publishes share the quota
         self.governor = RefreshGovernor(now_s=self.clock.now, sleep=self.clock.sleep)
         self.transport = PbiTransport()
         self.rows = 0
         self.bytes = 0
-        self.n = 0
 
-    def run(self) -> None:
+    def run(self, span) -> None:
         from notion_timetracking_etl_spark.plans.derive import run_derive
         from notion_timetracking_etl_spark.plans.model import build_model_relationships
         from notion_timetracking_etl_spark.queries.pipeline import synth_canon
@@ -131,9 +129,9 @@ class Publisher:
             validate_spec,
         )
 
-        self.n += 1
-        base = os.path.join(self.out_dir, f"publish{self.n}")
-        c = synth_canon(self.spark, self.sf_dir)
+        base = self.out_dir
+        with span("synth_canon", "queries"):
+            c = synth_canon(self.spark, self.sf_dir)
         result = run_derive(c["defs"], c["stages"], c["clean"])
         for name, df in result.tables.items():
             write_jsonl(df, base, "derived", name, "2024-01-31")
@@ -141,28 +139,28 @@ class Publisher:
             result.tables["FactTimeslices"], os.path.join(base, "lake"),
             ["Workflow Definition"],
         )
-        spec = spec_from_frames(
-            "TimeTracking", result.tables, build_model_relationships()
-        )
-        validate_spec(spec)
-        t = self.transport
-        client = PowerBiClient(
-            t, TokenProvider(t, "tenant", "client", "secret",
-                             now_s=self.clock.now, sleep=self.clock.sleep),
-            sleep=self.clock.sleep, now_s=self.clock.now,
-        )
-        dataset_id = ensure_dataset(client, base, "g-bench", "TimeTracking", spec)
+        with span("pbi_provision", "sinks"):
+            spec = spec_from_frames(
+                "TimeTracking", result.tables, build_model_relationships()
+            )
+            validate_spec(spec)
+            t = self.transport
+            client = PowerBiClient(
+                t, TokenProvider(t, "tenant", "client", "secret",
+                                 now_s=self.clock.now, sleep=self.clock.sleep),
+                sleep=self.clock.sleep, now_s=self.clock.now,
+            )
+            dataset_id = ensure_dataset(client, base, "g-bench", "TimeTracking", spec)
         t.posted = {}
         execute_wipe_and_reload(
             client, "g-bench", dataset_id, spec, result.tables, governor=self.governor
         )
-        self._base = base
 
     def check(self) -> str | None:
         """Sink and Power BI row counts against the oracle rows; None = ok."""
         from notion_timetracking_etl_spark.sources.jsonl import dataset_dir
 
-        base = self._base
+        base = self.out_dir
         bad = []
         for table, n in self.expected.items():
             got = _jsonl_rows(dataset_dir(base, "derived", table))
@@ -201,6 +199,32 @@ def warm_up(spark, sf_dir: str) -> None:
     )
 
 
+def retained_memory(spark) -> dict[str, float]:
+    """What the session still holds once the pass is over and its garbage
+    is collected, in MB: the JVM heap in use after a full collection (cached
+    tables, broadcast and model blocks, plan caches) and the proportional
+    set size of the driver's Python process (results and models the package
+    keeps on the driver)."""
+    import gc
+
+    gc.collect()
+    jvm = spark.sparkContext._jvm
+    heap = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+    # A collection queues what the ContextCleaner and py4j then release, and
+    # the blocks they free go only at a later collection: collect once a
+    # second until two readings agree, and at least three times.
+    used: list[int] = []
+    while len(used) < 3 or (len(used) < 8 and abs(used[-1] - used[-2]) > 0.01 * used[-2]):
+        if used:
+            time.sleep(1)
+        jvm.java.lang.System.gc()
+        used.append(heap.getHeapMemoryUsage().getUsed())
+    with open("/proc/self/smaps_rollup", encoding="utf-8") as fh:
+        pss = next(int(line.split()[1]) for line in fh if line.startswith("Pss:"))
+    return {"jvm_live_mb": used[-1] / 1e6,
+            "py_pss_mb": pss * 1024 / 1e6}
+
+
 def run_op(name: str, spark, sf_dir: str, expect: dict, publisher, span) -> dict:
     """One closed-loop operation: timed, then checked after the clock stops.
     ``span(name, layer)`` opens a trace span (a no-op when not tracing)."""
@@ -212,7 +236,7 @@ def run_op(name: str, spark, sf_dir: str, expect: dict, publisher, span) -> dict
     try:
         with span(name, "op"):
             if name == "publish":
-                publisher.run()
+                publisher.run(span)
             else:
                 with span("build", "queries"):
                     df = REGISTRY[name].spark(spark, sf_dir)
@@ -241,10 +265,8 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, default=0)
-    ap.add_argument("--sf-dir", required=True)
-    ap.add_argument("--data-digest", required=True)
+    ap.add_argument("--expect", required=True)
     ap.add_argument("--out", required=True)
     args = ap.parse_args()
     spawned = float(os.environ["PERFBENCH_SPAWN_TIME"])
@@ -252,20 +274,15 @@ def main() -> int:
     run_dir = os.path.dirname(args.out)
 
     from notion_timetracking_etl_spark.operators.dedup import release_scoped_caches
-    from notion_timetracking_etl_spark.queries import REGISTRY
 
+    sf_dir = workloads.SF_DIR
     event_dir = os.path.join(run_dir, "eventlog") if args.trace else None
     spark = workloads.build_bench_session(os.environ["TMPDIR"], event_dir)
-    warm_up(spark, args.sf_dir)
+    warm_up(spark, sf_dir)
     setup_s = time.time() - spawned
 
-    # oracle hashes: from the cache, or computed now (DuckDB), before the
-    # measuring window opens
-    cache = oracle.OracleCache(args.data_digest, workloads.work_dir("oracle_hashes.json"))
-    needed = workloads.oracle_queries(w)
-    cache.fill([REGISTRY[q] for q in needed], args.sf_dir,
-               log=lambda m: print(m, file=sys.stderr))
-    expect = {q: cache.lookup(q, REGISTRY[q].oracle) for q in needed}
+    with open(args.expect, encoding="utf-8") as fh:
+        expect = json.load(fh)  # oracle hash and rows per query, from run.py
 
     tracer = None
     span = lambda name, layer: contextlib.nullcontext()  # noqa: E731
@@ -281,51 +298,41 @@ def main() -> int:
     publisher = None
     if w.publish:
         publisher = Publisher(
-            spark, args.sf_dir, os.path.join(run_dir, "sinks"),
+            spark, sf_dir, os.path.join(run_dir, "sinks"),
             {t: expect[q]["rows"] for t, q in workloads.PUBLISHED_TABLES.items()},
         )
 
-    # The window lasts --seconds but always holds the whole first pass.
-    rng = random.Random(args.seed)
+    # One pass in a seed-permuted order; publish first, as a refresh does,
+    # so the queries then read the star.
+    order = list(w.queries)
+    random.Random(args.seed).shuffle(order)
+    if publisher:
+        order.insert(0, "publish")
     ops: list[dict] = []
-    passes: list[float] = []
-    t_window = time.perf_counter()
-    done = False
-    while not done:
-        order = list(w.queries)
-        rng.shuffle(order)
-        if publisher:
-            # publish first, as a refresh does; the queries then read the star
-            order.insert(0, "publish")
-        first = len(ops)
-        for name in order:
-            group = f"perfbench-op-{len(ops)}"
-            spark.sparkContext.setJobGroup(group, name)
-            if tracer:
-                tracer.current_op = len(ops)
-            op = run_op(name, spark, args.sf_dir, expect, publisher, span)
-            op["group"], op["pass"] = group, len(passes)
-            df = op.pop("df", None)
-            if tracer:
-                if df is not None:
-                    layers.record_catalyst(tracer, df, len(ops))
-                layers.record_storage(spark, op)
-            release_scoped_caches()
-            ops.append(op)
-            done = time.perf_counter() - t_window >= args.seconds
-            if done and passes:
-                break
-        else:
-            passes.append(sum(op["s"] for op in ops[first:]))
+    for name in order:
+        group = f"perfbench-op-{len(ops)}"
+        spark.sparkContext.setJobGroup(group, name)
+        if tracer:
+            tracer.current_op = len(ops)
+        op = run_op(name, spark, sf_dir, expect, publisher, span)
+        op["group"] = group
+        df = op.pop("df", None)
+        if tracer:
+            if df is not None:
+                layers.record_catalyst(tracer, df, len(ops))
+            layers.record_storage(spark, op)
+        release_scoped_caches()
+        ops.append(op)
     spark.sparkContext.setJobGroup("perfbench-teardown", "teardown")
+    memory = retained_memory(spark)
 
     failures = [
-        {"op": op["name"], "pass": op["pass"], "error": op["error"]}
+        {"op": op["name"], "error": op["error"]}
         for op in ops if "error" in op
     ]
     result = {
         "workload": w.name, "seed": args.seed, "setup_s": setup_s,
-        "window_s": time.perf_counter() - t_window, "passes": passes, "ops": ops,
+        "wall_s": sum(op["s"] for op in ops), "ops": ops, "memory": memory,
         "failures": failures,
     }
     if tracer:

@@ -4,8 +4,12 @@ Every workload is a closed loop with one client over a fixed list of
 registered queries: the queries run one after another in an order the run's
 seed permutes, and each result is delivered whole to the client as Arrow.
 The lists are fixed subsets of the query families each workload stands for,
-sized so that a run (fresh process, set-up, one cold pass) takes under a
+sized so that a run (fresh process, set-up, one cold pass) takes about a
 minute on 4 cores.
+
+The input is a copy of the synthetic sf0.01 testdata (TESTDATA.md:
+lineitem 60k rows, events 10k, 500 documents and 500 embeddings), committed
+under ``data/`` because a run may read only its own checkout.
 """
 
 from __future__ import annotations
@@ -16,19 +20,17 @@ from dataclasses import dataclass
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-# Generated dataset: TESTDATA.md's correctness-tier size (lineitem 60k rows,
-# events 10k, 500 documents and embeddings). Fixed, so oracle hashes are
-# computed once; the run seed permutes the query order.
-SF = 0.01
-DATA_SEED = 42
-HEAP = "2g"
+# Fixed input, so oracle hashes are computed once; the run seed permutes the
+# query order.
+SF = "sf0.01"
+SF_DIR = os.path.join(HERE, "data", SF)
 
 
 @dataclass(frozen=True)
 class Workload:
     name: str
     queries: tuple[str, ...]
-    publish: bool = False  # add the etl publish operation to every pass
+    publish: bool = False  # add the etl publish operation to the pass
 
 
 WORKLOADS = {
@@ -43,6 +45,7 @@ WORKLOADS = {
             (
                 "pipeline_fact_timeslices", "notion_extract_scalars",
                 "pipeline_dim_stage", "pipeline_occupancy_hourly",
+                "pipeline_canon_stages", "occupancy_hourly", "dim_date_spine",
             ),
             publish=True,
         ),
@@ -80,7 +83,8 @@ def oracle_queries(w: Workload) -> list[str]:
 
 
 def work_dir(*parts: str) -> str:
-    """Run-time files (data, logs, sink output) live here, git-ignored."""
+    """Run-time files (logs, sink output, oracle overlay) live here,
+    git-ignored."""
     return os.path.join(HERE, ".work", *parts)
 
 
@@ -89,18 +93,15 @@ def cpus() -> int:
 
 
 def build_bench_session(tmp: str, event_log_dir: str | None = None):
-    """The package's own session factory on local[<nproc>], with every
-    temporary path under ``tmp``."""
+    """The package's own session factory on local[<nproc>], with its own
+    memory settings and every temporary path under ``tmp``."""
     from notion_timetracking_etl_spark.session import build_session
 
     os.makedirs(tmp, exist_ok=True)
     conf = {
         "spark.local.dir": tmp,
         "spark.sql.warehouse.dir": os.path.join(tmp, "warehouse"),
-        # a fixed heap: resident memory then tracks what the run touches,
-        # not when the collector chose to grow the heap
-        "spark.driver.memory": HEAP,
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -Xms{HEAP}",
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp}",
         "spark.sql.streaming.checkpointLocation": os.path.join(tmp, "ckpt"),
     }
     if event_log_dir:
