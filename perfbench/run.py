@@ -1,7 +1,7 @@
 """Benchmark runner: one workload, one fresh process, one JSON result line.
 
-    python3 perfbench/run.py --workload etl_star --seed 1 --seconds 30 --trace 0
-    python3 perfbench/run.py --workload all --seed 1 --seconds 30 --trace 0
+    python3 perfbench/run.py --workload etl_star --seed 1 --seconds 40 --trace 0
+    python3 perfbench/run.py --workload all --seed 1 --seconds 40 --trace 0
 
 Run from the repository root. Before the workload process starts, the runner
 looks up the oracle hash of every query the workload checks (``oracle.py``),

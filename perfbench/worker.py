@@ -321,6 +321,9 @@ def main() -> int:
             if df is not None:
                 layers.record_catalyst(tracer, df, len(ops))
             layers.record_storage(spark, op)
+        # A live DataFrame pins its plan and blocks in the JVM; the last
+        # one would count in retained_mb (about 70 MB for some queries).
+        del df
         release_scoped_caches()
         ops.append(op)
     spark.sparkContext.setJobGroup("perfbench-teardown", "teardown")

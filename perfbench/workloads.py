@@ -50,14 +50,20 @@ WORKLOADS = {
             publish=True,
         ),
         # The iterative and incremental paths: eager builder jobs,
-        # connected-components rounds, Lloyd's iterations and checkpoints
-        # (dedup, clusters, kmeans) beside micro-batches with state stores,
-        # WAL and offset commits and the file sink (streaming).
+        # connected-components rounds over three pair graphs, Lloyd's
+        # iterations and checkpoints (dedup, clusters, kmeans) beside
+        # micro-batches with state stores, a stream-stream join, WAL and
+        # offset commits and the file sink (streaming). Ten queries, so that
+        # its pass is about as long as etl_star's and a run averages over
+        # enough work to be steady.
         Workload(
             "dedup_stream",
             (
-                "dedup_clusters", "kmeans_embeddings", "streaming_hourly_rollup",
-                "streaming_stateful_user_stats", "streaming_lake_ingest",
+                "dedup_clusters", "dedup_simhash_cluster_summary",
+                "similarity_embedding_dup_clusters", "kmeans_embeddings",
+                "streaming_hourly_rollup", "streaming_session_window",
+                "streaming_interval_join", "streaming_stateful_user_stats",
+                "streaming_cdc_upsert", "streaming_lake_ingest",
             ),
         ),
     )
