@@ -24,9 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from notion_timetracking_etl_spark.operators.dedup import (  # noqa: E402
-    release_scoped_caches,
-)
+from notion_timetracking_etl_spark.lifecycle import release_scoped_caches  # noqa: E402
 from notion_timetracking_etl_spark.queries import REGISTRY  # noqa: E402
 from notion_timetracking_etl_spark.session import build_session  # noqa: E402
 
@@ -75,13 +73,9 @@ def main() -> None:
         # count() executes the full plan without driver-side row transfer cost
         REGISTRY[name].spark(spark, sf_dir).count()
         dt = time.perf_counter() - t0
-        # Operators persist() intra-query intermediates (shingles, candidate
-        # pairs) scoped to one execution; release exactly those so repeated
-        # invocations in this shared session don't accumulate cached blocks.
-        # NOT clearCache(): that would also evict the pipeline family's
-        # session-lifetime canon/derived caches (a deliberate materialize-
-        # once-read-many design). Outside the timed region: cache teardown
-        # isn't query work.
+        # Free this query's query-scoped intermediates (never clearCache():
+        # see notion_timetracking_etl_spark/lifecycle.py). Outside the timed
+        # region: cache teardown isn't query work.
         release_scoped_caches()
         # GC-settle barrier: a heavy query's freed cache/checkpoint blocks
         # leave JVM GC pressure that bleeds ~1-3s into whatever runs next

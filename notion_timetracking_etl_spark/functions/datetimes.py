@@ -75,25 +75,9 @@ def la_date_iso(ts: Column, tz: str = LA_TZ) -> Column:
     return F.concat(local_day, F.lit("T00:00:00.000Z"))
 
 
-def la_run_date(now: Column, tz: str = LA_TZ) -> Column:
-    """F30 — LA-local ``YYYY-MM-DD`` run date; ``now`` injected for determinism
-    (reference: quality/timeslices.ts:5-10)."""
-    return F.date_format(F.from_utc_timestamp(now, tz), "yyyy-MM-dd")
-
-
 def utc_date_stamp(now: Column) -> Column:
     """F31 — UTC ``YYYY-MM-DD`` partition stamp (reference: lib/time.ts:1-3)."""
     return F.date_format(now, "yyyy-MM-dd")
-
-
-def month_short_name(d: Column) -> Column:
-    """F32 — 'Jan'..'Dec' (reference: derive/index.ts:27-30)."""
-    return F.date_format(d, "MMM")
-
-
-def day_short_name(d: Column) -> Column:
-    """F32 — 'Mon'..'Sun' (reference: derive/index.ts:31-34)."""
-    return F.date_format(d, "EEE")
 
 
 def la_snapshot_label(ts: Column, tz: str = LA_TZ) -> Column:
@@ -114,19 +98,3 @@ def date_key(ts: Column, tz: str | None = None) -> Column:
     """
     local = F.from_utc_timestamp(ts, tz) if tz else ts
     return F.date_format(local, "yyyyMMdd").cast("int")
-
-
-def coalesce_event_time(*candidates: Column) -> Column:
-    """F36 — first non-null of the timestamp fallback chain
-    (reference: derive/index.ts:151,576-580)."""
-    return F.coalesce(*candidates)
-
-
-def normalize_stage_number(n: Column) -> Column:
-    """``max(1, round(n))``, default 1 (reference: derive/index.ts:331-336)."""
-    return F.greatest(F.lit(1).cast("long"), F.coalesce(round_half_up(n), F.lit(1)).cast("long"))
-
-
-def normalize_stage_number_or_null(n: Column) -> Column:
-    """``round(n)`` or null (reference: derive/index.ts:338-343)."""
-    return round_half_up(n).cast("long")

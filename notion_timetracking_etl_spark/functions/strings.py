@@ -25,11 +25,6 @@ def stable_entity_id(prefix: str, raw_id: Column) -> Column:
     return F.concat(F.lit(prefix + "_"), F.coalesce(cleaned, F.lit("unknown")))
 
 
-def timeslice_id_from_page_id(page_id: Column) -> Column:
-    """F14 (reference: canon/rules.ts:11-13)."""
-    return stable_entity_id("timeslice", page_id)
-
-
 def sort_key(*parts: Column) -> Column:
     """F17/O6 — null→'', trim, join with '|', lowercase (reference: canon/rules.ts:34-39)."""
     safe = [F.coalesce(F.trim(p.cast("string")), F.lit("")) for p in parts]
@@ -56,14 +51,6 @@ def issue_id(run_date: Column, dataset: Column, entity_id: Column, rule: Column)
     """F21 — sha256 of ``runDate|dataset|entityId|rule``
     (reference: quality/timeslices.ts:163)."""
     return F.sha2(F.concat_ws("|", run_date, dataset, entity_id, rule), 256)
-
-
-def digest_attributes(attributes: Column) -> Column:
-    """F22 — sha256 of canonical (key-sorted) JSON of the attributes map
-    (reference: canon/rules.ts:41-43; key-sorting replaces JS insertion-order
-    for a deterministic digest — documented divergence)."""
-    sorted_map = F.map_from_entries(F.array_sort(F.map_entries(attributes)))
-    return F.sha2(F.to_json(sorted_map), 256)
 
 
 def color_index(key: Column, palette_size: int = 36) -> Column:

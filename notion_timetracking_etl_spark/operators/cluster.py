@@ -26,7 +26,7 @@ and therefore the component min (the min node's own label never rises).
 
 Driver involvement is one ``count()`` per round (the convergence check) —
 O(log diameter) tiny jobs, never data through the driver. Each round's
-labels are eager-checkpointed via ``_flat_checkpoint`` (localCheckpoint +
+labels are eager-checkpointed via ``flat_checkpoint`` (localCheckpoint +
 origin-stats strip), not merely persisted: persist caches the DATA but the
 logical plan keeps the full multi-round lineage, so analysis/AQE planning
 cost grows per round (measured: 1.7 s → 3.3 s per round at two rounds;
@@ -35,15 +35,15 @@ the checkpoint: Spark 4's ``localCheckpoint`` forwards the origin plan's
 size estimate, and the loop's join plans MULTIPLY those estimates round
 over round — a geometric BigInt blow-up that put the driver into minutes
 of ``BigInteger.multiply`` once jumps were composed (see
-``dedup._flat_checkpoint``).
+``lifecycle.flat_checkpoint``).
 Superseded checkpoints are freed at the RDD level each round
-(``_free_checkpoint_blocks`` — plain ``unpersist()`` never reaches
+(``lifecycle.free`` — plain ``unpersist()`` never reaches
 RDD-persisted checkpoint blocks), so peak storage is ~3×|nodes| (previous
 + stepped + new) regardless of round count, and the final labels are
-registered with the scoped-cache pool so multi-query harnesses release
-them between queries. On a real cluster, swap ``localCheckpoint``
-(executor-local, lost on executor failure) for ``checkpoint()`` against
-reliable storage if rounds are expensive enough to be worth replaying.
+query-scoped so multi-query harnesses release them between queries. On a
+real cluster, swap ``localCheckpoint`` (executor-local, lost on executor
+failure) for ``checkpoint()`` against reliable storage if rounds are
+expensive enough to be worth replaying.
 
 Broadcast joins are disabled inside the loop: each round's label table is
 small enough that AQE would rebuild and re-broadcast it every round — a
@@ -56,13 +56,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from .dedup import (
-    _conf_isolated_session,
-    _flat_checkpoint,
-    _free_checkpoint_blocks,
-    _rebind_session,
-    _scoped_persist,
-    _SCOPED_CACHES,
+from ..lifecycle import (
+    conf_isolated_session,
+    flat_checkpoint,
+    free,
+    query_scoped,
+    rebind_session,
+    scoped_flat_checkpoint,
+    scoped_persist,
 )
 
 
@@ -87,8 +88,8 @@ def connected_components(
     # Persist the raw edge list FIRST: the undirected union reads it twice
     # (once per direction), and edges often arrive as an expensive upstream
     # pipeline (e.g. the full MinHash near-dup DAG) that must not run twice.
-    e = _scoped_persist(edges.select(F.col(a).alias("ea"), F.col(b).alias("eb")))
-    # not persisted: the union materializes ONCE below (_flat_checkpoint)
+    e = scoped_persist(edges.select(F.col(a).alias("ea"), F.col(b).alias("eb")))
+    # not persisted: the union materializes ONCE below (flat_checkpoint)
     # and the loop reads only that checkpoint
     und = e.select(F.col("ea").alias("src"), F.col("eb").alias("dst")).union(
         e.select(F.col("eb").alias("src"), F.col("ea").alias("dst"))
@@ -115,24 +116,21 @@ def connected_components(
     # queries) would race the conf at plan time. The materialized undirected
     # edge RDD is re-homed into the child, the loop runs entirely there, and
     # the final labels re-home back to the caller's session.
-    child = _conf_isolated_session(spark)
+    child = conf_isolated_session(spark)
     child.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
     child.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    und_c = _rebind_session(_flat_checkpoint(und), child)
     # the checkpoint backing und_c must outlive the loop but not the query
-    _SCOPED_CACHES.append(und_c)
+    und_c = rebind_session(scoped_flat_checkpoint(und), child)
     labels = (
         und_c.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    labels = _flat_checkpoint(labels)
+    labels = flat_checkpoint(labels)
     labels = _propagate(und_c, labels, max_rounds, stats)
     # the final checkpoint backs the returned plan — it must survive this
-    # function but not the query; hand it to the scoped-cache pool so
-    # release_scoped_caches frees its blocks like every other intermediate
-    _SCOPED_CACHES.append(labels)
-    return _rebind_session(labels, spark).select(
+    # function but not the query
+    return rebind_session(query_scoped(labels), spark).select(
         "node", F.col("label").alias("component")
     )
 
@@ -163,7 +161,7 @@ def _propagate(
         # non-increasing, so the fixpoint/convergence argument is
         # unchanged: a no-change round implies one hop alone changes
         # nothing. Per-round stats stay O(64)-bit: the round plan reads
-        # only _flat_checkpoint leaves.
+        # only flat_checkpoint leaves.
         cur = labels.select("node", "label", F.col("label").alias("old_label"))
         for _ in range(flood_steps):
             nbr_min = (
@@ -181,7 +179,7 @@ def _propagate(
         # eager checkpoint materializes the flooded step AND truncates
         # lineage, so the jump below self-joins a flat cached scan instead
         # of recomputing the flood chain twice
-        stepped = _flat_checkpoint(cur)
+        stepped = flat_checkpoint(cur)
         # pointer jumping: label := label(label). Labels are node ids, so the
         # lookup is a node-sized self-join; left + coalesce covers the
         # (impossible in practice) dangling-pointer case. This is what turns
@@ -215,23 +213,23 @@ def _propagate(
                 (F.col("label") != F.col("old_label")).alias("_changed"),
             )
         )
-        new_labels = _flat_checkpoint(new_labels)
+        new_labels = flat_checkpoint(new_labels)
         # sum over zero rows is NULL — an EMPTY graph is converged, not stuck
         changed = new_labels.agg(
             F.sum(F.col("_changed").cast("int")).alias("n")
         ).collect()[0]["n"] or 0
         # superseded checkpoints are unreachable from the new (truncated)
-        # plan — free their RDD blocks now (plain unpersist() can't; see
-        # _free_checkpoint_blocks) to cap peak storage at ~3×|nodes|
-        _free_checkpoint_blocks(labels)
-        _free_checkpoint_blocks(stepped)
+        # plan — free their RDD blocks now (plain unpersist() can't) to cap
+        # peak storage at ~3×|nodes|
+        free(labels)
+        free(stepped)
         labels = new_labels
         if changed == 0:
             if stats is not None:
                 stats["rounds"] = round_no + 1
             break
     else:
-        _free_checkpoint_blocks(labels)  # don't leak the last round on raise
+        free(labels)  # don't leak the last round on raise
         raise RuntimeError(
             f"connected_components did not converge in {max_rounds} rounds"
         )

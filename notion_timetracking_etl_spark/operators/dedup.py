@@ -21,172 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
-
-# Query-scoped persists (shingle/candidate tables) live here so harnesses
-# that run MANY queries in one session can release exactly these between
-# queries — without nuking session-lifetime caches like the pipeline
-# family's shared canon/derived tables (spark.catalog.clearCache would).
-_SCOPED_CACHES: list[DataFrame] = []
-
-
-def _scoped_persist(df: DataFrame) -> DataFrame:
-    out = df.persist()
-    _SCOPED_CACHES.append(out)
-    return out
-
-
-def _free_checkpoint_blocks(df: DataFrame) -> None:
-    """Free the storage behind a ``localCheckpoint``-ed DataFrame NOW.
-
-    ``df.unpersist()`` only uncaches CacheManager entries; a checkpointed
-    Dataset is backed by an RDD-level persist that CacheManager never sees,
-    so without this the blocks linger until the JVM garbage-collects the
-    plan (measured: they survive ``unpersist()`` AND driver-side gc). The
-    checkpointed plan is a ``LogicalRDD`` whose ``rdd`` field is exactly the
-    persisted RDD — unpersist it directly. Safe no-op on non-checkpoint
-    plans and stopped sessions."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-def _flat_checkpoint(df: DataFrame) -> DataFrame:
-    """``localCheckpoint(eager=True)`` WITHOUT the origin-stats rewrite.
-
-    Spark 4's ``Dataset.checkpoint`` copies the origin plan's size estimate
-    onto the new ``LogicalRDD`` (``LogicalRDD.rewriteStatsAndConstraints``).
-    Inside an iterative loop that is a planning-time time bomb: each
-    round's join plan MULTIPLIES its children's size estimates
-    (``SizeInBytesOnlyStatsPlanVisitor.visitJoin`` — a BigInt product), and
-    the checkpoint hands that product to the next round as a leaf estimate,
-    so the estimate's bit-length grows geometrically with round count —
-    measured on the CC loop: ~2× bits/round with one pointer jump, 2^j× with
-    j composed jumps, until the driver spends MINUTES in
-    ``BigInteger.multiply`` (Karatsuba/Toom-Cook frames in the thread dump).
-    Re-wrapping the checkpoint's materialized row RDD via
-    ``internalCreateDataFrame`` builds the same ``LogicalRDD`` with NO
-    origin stats: leaves fall back to ``defaultSizeInBytes`` and every
-    round's stats stay O(64) bits. The rows were already copied and
-    persisted by the checkpoint, so this adds no data work; partitioning
-    metadata is dropped, which no call site relies on (every consumer
-    re-shuffles by a different key). Auto-broadcast decisions are
-    unaffected where this is used — the iterative loops disable broadcast
-    anyway. ``_free_checkpoint_blocks`` keeps working: the plan is a
-    ``LogicalRDD`` whose ``rdd()`` is exactly the persisted RDD."""
-    ck = df.localCheckpoint(eager=True)
-    plan = ck._jdf.queryExecution().analyzed()
-    if plan.getClass().getSimpleName() != "LogicalRDD":  # defensive: API drift
-        return ck
-    spark = df.sparkSession
-    jdf = spark._jsparkSession.internalCreateDataFrame(
-        plan.rdd(), ck._jdf.schema(), False
-    )
-    return DataFrame(jdf, spark)
-
-
-def fan_out(df: DataFrame, *keys: str) -> DataFrame:
-    """Hash-repartition ``df`` to the session's default parallelism when its
-    SCAN would land on fewer partitions than the session has cores — the
-    tiny-file fan-out ``shingle_table`` applies to documents, generalized
-    (guide §2: a parquet file under ``spark.sql.files.maxPartitionBytes``
-    scans as ONE partition, so CPU-heavy per-row work — interpreted HOF
-    folds, sha256 chains, fixed-point argmins — runs single-task no matter
-    how many cores the cluster has; measured: the embedding family's 8-core
-    and 32-core bench times were IDENTICAL before this).
-
-    Scale-adaptive, not a local[] constant: the trigger is the optimizer's
-    size estimate vs ``maxPartitionBytes`` — a corpus-sized input (estimate
-    >= cores × split size) already scans wide and is returned UNCHANGED, so
-    no 100 TB table ever pays a concentrating shuffle; a sub-split file pays
-    one narrow row shuffle to buy full parallelism. Plan-time metadata only
-    (no job). Keyed repartition (deterministic hash), never round-robin —
-    round-robin pays a per-partition sort and is retry-unsafe on
-    non-deterministic input (guide §2.5)."""
-    spark = df.sparkSession
-    p = spark.sparkContext.defaultParallelism
-    try:
-        size = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        max_pb = spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-        unit = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "b": 1}
-        s = str(max_pb).strip().lower().removesuffix("b") or "134217728"
-        split = int(s[:-1]) * unit[s[-1]] if s[-1] in unit else int(s)
-        if size >= p * split:
-            return df
-    except Exception:
-        pass  # estimate unavailable — fan out (the safe local default)
-    return df.repartition(p, *[F.col(k) for k in keys])
-
-
-def _conf_isolated_session(spark):
-    """A cloned SparkSession (same SparkContext, cache manager and runtime
-    conf VALUES, fresh SQLConf OBJECT) whose ``conf.set`` is invisible to the
-    parent — the reentrancy fix for operators that tune session-level conf
-    around an eager loop (``cluster.connected_components``). With the loop's
-    conf private, independent legs of a multi-leg query can run in parallel
-    driver threads (guide §2.6) without racing plan-time conf reads.
-
-    ``cloneSession`` (not ``newSession``): the clone COPIES the parent's
-    current runtime conf (timezone, nanosAsLong, AQE flags), where a new
-    session would reset to the SparkContext defaults and silently drop any
-    runtime overrides a harness applied after startup."""
-    from pyspark.sql import SparkSession
-
-    return SparkSession(
-        spark.sparkContext, jsparkSession=spark._jsparkSession.cloneSession()
-    )
-
-
-def _rebind_session(df: DataFrame, spark) -> DataFrame:
-    """Re-wrap a ``_flat_checkpoint``-ed DataFrame's materialized row RDD
-    into ``spark`` (another session on the SAME SparkContext). The rows are
-    already persisted; this only re-homes the ``LogicalRDD`` so downstream
-    plans resolve against the target session's conf/state. No-op when the
-    plan is not a ``LogicalRDD`` (defensive: API drift) or the session
-    already matches."""
-    if df.sparkSession is spark:
-        return df
-    plan = df._jdf.queryExecution().analyzed()
-    if plan.getClass().getSimpleName() != "LogicalRDD":
-        return df
-    jdf = spark._jsparkSession.internalCreateDataFrame(
-        plan.rdd(), df._jdf.schema(), False
-    )
-    return DataFrame(jdf, spark)
-
-
-def _scoped_flat_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager :func:`_flat_checkpoint` registered with the scoped-cache pool
-    — for intermediates that MANY downstream legs re-reference in one big
-    plan (the forget reports union ~10 legs over the same base table). A
-    plain persist caches the DATA but every leg's LOGICAL plan still
-    carries the full upstream lineage, and Catalyst re-analyzes it per leg:
-    measured on deletion_propagation_semgate_state, the driver spent 7.3 s
-    of an 18 s run in a zero-stage planning gap before the final job. The
-    checkpoint truncates the lineage to a flat ``LogicalRDD`` leaf (guide
-    §3.3 — materialize to cut planning time), and the stats strip keeps
-    size estimates O(64) bits. Blocks are freed by
-    :func:`release_scoped_caches` like every scoped persist."""
-    out = _flat_checkpoint(df)
-    _SCOPED_CACHES.append(out)
-    return out
-
-
-def release_scoped_caches() -> None:
-    """Unpersist every query-scoped intermediate registered since the last
-    release. Call after the consuming action completes (bench.py and
-    tests/parity.py do); safe to call twice or on a stopped session."""
-    while _SCOPED_CACHES:
-        df = _SCOPED_CACHES.pop()
-        try:
-            df.unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
-        _free_checkpoint_blocks(df)
+from ..lifecycle import fan_out, scoped_persist
+from ..lifecycle import release_scoped_caches  # noqa: F401  (re-exported for harnesses)
 
 
 def words(text: Column) -> Column:
@@ -423,9 +259,9 @@ def minhash_near_dup_pairs(
     between queries. persist() defaults to MEMORY_AND_DISK_DESER, so even an
     unreleased cache spills rather than evicting hot blocks.
     """
-    sh = _scoped_persist(shingle_table(df, id_col, text_col, shingle_n))
+    sh = scoped_persist(shingle_table(df, id_col, text_col, shingle_n))
     sigs = minhash_signatures(sh, num_hashes)
-    cands = _scoped_persist(lsh_candidate_pairs(sigs, num_hashes, bands))
+    cands = scoped_persist(lsh_candidate_pairs(sigs, num_hashes, bands))
     return jaccard_verify(cands, sh, threshold)
 
 
@@ -455,11 +291,6 @@ def simhash_from_hashes(hashes: Column, n_bits: int = 16) -> Column:
     for bit in bits[1:]:
         out = out + bit
     return out.cast("long")
-
-
-def simhash16(text: Column) -> Column:
-    """16-bit SimHash over word hashes (bit-voting), engine-independent."""
-    return simhash_from_hashes(word_hashes(text))
 
 
 # ---------------------------------------------------------------------------
@@ -835,7 +666,7 @@ def simhash_hamming_pairs(
     # fan_out BEFORE the signature chain: a documents file under the scan
     # split size lands on one partition, and the sha256-per-word + n_bits
     # bit-vote fold would fill the persist single-task (guide §2).
-    sig = _scoped_persist(
+    sig = scoped_persist(
         fan_out(
             df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t")),
             "doc",
@@ -870,7 +701,7 @@ def ngram_jaccard_pairs(
     threshold anyway. This is the standard DF-pruning trade on inverted-
     index similarity joins at corpus scale.
     """
-    sh = _scoped_persist(shingle_table(df, id_col, text_col, shingle_n))
+    sh = scoped_persist(shingle_table(df, id_col, text_col, shingle_n))
     doc_freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     rare = sh.join(
         doc_freq.filter(F.col("df") <= max_doc_freq).select("sh"), "sh"

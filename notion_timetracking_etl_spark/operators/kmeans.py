@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from .dedup import _free_checkpoint_blocks, _scoped_persist, _SCOPED_CACHES, fan_out
+from ..lifecycle import fan_out, free, query_scoped, scoped_persist
 
 # exact order-independent fold of (a-b)^2 over the dim pairs, in scale-12
 # fixed point: double multiply → floor(x*1e12 + 0.5) → DECIMAL(38,0) sum
@@ -133,7 +133,7 @@ def kmeans_fit(
     ``release_scoped_caches`` (one-query lifetime); pass ``False`` when the
     caller owns the model's lifetime (e.g. a session-cached fitted
     quantizer reused across queries) — the k-row checkpoint then persists
-    until the caller frees it via ``_free_checkpoint_blocks``."""
+    until the caller frees it."""
     # scoped persist + fan_out: the loop reads vec 2x per iteration
     # (assign + update) plus the final assignment, and the per-read argmin —
     # a k-wide transform folding fixed-point DECIMAL(38,0) aggregates over
@@ -142,7 +142,7 @@ def kmeans_fit(
     # (measured: the 8-core and 32-core times of the kmeans family were
     # identical before this). One narrow exchange fills a wide cache the
     # whole loop reads. kmeans_embeddings A/B: 2.40 -> 1.93 s (wins 3/3).
-    vec = _scoped_persist(fan_out(_as_double_vec(emb, id_col, vec_col), "vec_id"))
+    vec = scoped_persist(fan_out(_as_double_vec(emb, id_col, vec_col), "vec_id"))
     cent = (
         emb.orderBy(id_col)
         .limit(k)
@@ -155,11 +155,11 @@ def kmeans_fit(
     for i in range(iters - 1):
         asg = _assign(vec, cent)
         new_cent = _update(vec, asg, cent).localCheckpoint(eager=True)
-        _free_checkpoint_blocks(cent)
+        free(cent)
         cent = new_cent
     if scoped:
         # the last checkpoint backs the final plan until the query is consumed
-        _SCOPED_CACHES.append(cent)
+        query_scoped(cent)
     return _assign(vec, cent), cent
 
 

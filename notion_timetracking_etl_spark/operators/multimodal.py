@@ -530,10 +530,11 @@ def phash_wide_near_dup_pairs(
     machinery. Same two-stage verify discipline: summed per-word
     ``bit_count(xor)`` in the join projection, then the exact 272-cell L1
     on survivors only."""
-    from .dedup import _scoped_persist, hamming_pairs_from_word_sigs
+    from ..lifecycle import scoped_persist
+    from .dedup import hamming_pairs_from_word_sigs
 
     word_cols = [f"w{j}" for j in range(PHASH_WIDE_WORDS)]
-    sig = _scoped_persist(sig.select("media_id", *word_cols, "px"))
+    sig = scoped_persist(sig.select("media_id", *word_cols, "px"))
     cands = hamming_pairs_from_word_sigs(
         sig, "media_id", word_cols, max_hamming, level
     )
@@ -557,15 +558,12 @@ def phash_wide_cross_near_dups(
     fits one word's arithmetic; both sides must block identically. The
     corpus side is persisted before counting (the phash_cross_near_dups
     ADVICE discipline)."""
-    from .dedup import (
-        _scoped_persist,
-        pigeonhole_buckets_multi,
-        pigeonhole_level,
-    )
+    from ..lifecycle import scoped_persist
+    from .dedup import pigeonhole_buckets_multi, pigeonhole_level
 
     word_cols = [f"w{j}" for j in range(PHASH_WIDE_WORDS)]
     n_bits = 64 * PHASH_WIDE_WORDS
-    sig_corpus = _scoped_persist(
+    sig_corpus = scoped_persist(
         sig_corpus.select("media_id", *word_cols, "px")
     )
     if level is None:
@@ -639,11 +637,12 @@ def phash_near_dup_pairs(
     blocking stays correct but buckets coarsen; that regime's lever is a
     wider signature (256-bit pHash) through the same machinery.
     """
-    from .dedup import PIGEONHOLE_TARGET, _scoped_persist, pigeonhole_level
+    from ..lifecycle import scoped_persist
+    from .dedup import PIGEONHOLE_TARGET, pigeonhole_level
 
     # the signature table feeds 4 consumers (both self-join branches, both
     # pixel-verify joins); persist so the Python decode seam runs ONCE.
-    sig = _scoped_persist(sig.select("media_id", "phash", "px"))
+    sig = scoped_persist(sig.select("media_id", "phash", "px"))
     if level is None:
         # the count also warms the persist exactly once before the self-join
         if target is None:
@@ -745,7 +744,8 @@ def phash_cross_near_dups(
     side's observed count (both sides must block identically); a streaming
     caller that drains many batches against one persisted corpus computes
     the level once and passes it explicitly (streaming/visualgate.py)."""
-    from .dedup import _scoped_persist, pigeonhole_level
+    from ..lifecycle import scoped_persist
+    from .dedup import pigeonhole_level
 
     if level is None:
         # persist BEFORE counting (ADVICE r10): the corpus side feeds the
@@ -754,7 +754,7 @@ def phash_cross_near_dups(
         # decode seam once per consumer (same discipline as
         # phash_near_dup_pairs; a no-op recache when the caller already
         # persisted, since the filter reads from the parent's cached blocks)
-        sig_corpus = _scoped_persist(sig_corpus.select("media_id", "phash", "px"))
+        sig_corpus = scoped_persist(sig_corpus.select("media_id", "phash", "px"))
         level = pigeonhole_level(sig_corpus.count(), 64, max_hamming)
     left = _phash_block_buckets(
         sig_new.select("media_id", "phash", "px"), max_hamming, level

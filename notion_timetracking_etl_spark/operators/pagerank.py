@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from .dedup import _free_checkpoint_blocks, _scoped_persist, _SCOPED_CACHES
+from ..lifecycle import free, query_scoped, scoped_persist
 
 DAMPING = 0.85
 
@@ -39,15 +39,15 @@ def pagerank(
     """``iters`` power iterations over the undirected (``a``, ``b``) pair
     list; returns (node, degree, pagerank). Deterministic for a fixed
     iteration count."""
-    e = _scoped_persist(edges.select(F.col(a).alias("ea"), F.col(b).alias("eb")))
+    e = scoped_persist(edges.select(F.col(a).alias("ea"), F.col(b).alias("eb")))
     und = e.select(F.col("ea").alias("src"), F.col("eb").alias("dst")).union(
         e.select(F.col("eb").alias("src"), F.col("ea").alias("dst"))
     )
     deg = und.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # edges pre-joined with source degree once — each iteration then joins
     # only the (node, p) table
-    und_deg = _scoped_persist(und.join(deg, "src"))
-    nodes = _scoped_persist(und.select(F.col("src").alias("node")).distinct())
+    und_deg = scoped_persist(und.join(deg, "src"))
+    nodes = scoped_persist(und.select(F.col("src").alias("node")).distinct())
     n_nodes = nodes.count()  # driver scalar, like CC's convergence count
     if n_nodes == 0:
         # empty graph: no nodes, no ranks — short-circuit before the 1/n
@@ -88,9 +88,9 @@ def pagerank(
             )
             .localCheckpoint(eager=True)
         )
-        _free_checkpoint_blocks(p)
+        free(p)
         p = new_p
-    _SCOPED_CACHES.append(p)
+    query_scoped(p)
     return p.join(deg, p.node == deg.src).select(
         "node", F.col("deg").alias("degree"), F.col("p").alias("pagerank")
     )

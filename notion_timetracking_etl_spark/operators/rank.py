@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
-from .dedup import _SCOPED_CACHES
+from ..lifecycle import scoped_persist
 
 
 def ntile_from_rank(rn: Column, n: int, k: int) -> Column:
@@ -74,13 +74,11 @@ def with_global_ranks(
 
     spark = df.sparkSession
     p = num_partitions or spark.sparkContext.defaultParallelism
-    parts = (
+    parts = scoped_persist(
         df.repartitionByRange(p, *sort_cols)
         .sortWithinPartitions(*sort_cols)
         .withColumn("_pid", F.spark_partition_id())
-        .persist()
     )
-    _SCOPED_CACHES.append(parts)
 
     # ≤ p rows to the driver: the ONLY driver-side data, independent of input
     # size. Offsets = exclusive prefix sums in partition order.
@@ -119,13 +117,11 @@ def with_global_prefix_sum(
 
     spark = df.sparkSession
     p = num_partitions or spark.sparkContext.defaultParallelism
-    parts = (
+    parts = scoped_persist(
         df.repartitionByRange(p, *sort_cols)
         .sortWithinPartitions(*sort_cols)
         .withColumn("_pid", F.spark_partition_id())
-        .persist()
     )
-    _SCOPED_CACHES.append(parts)
     # Coalesce to 0: a partition whose val_col values are all NULL sums to
     # NULL, which must contribute nothing to downstream offsets (the operator
     # contract requires only an integral column, not a non-null one).

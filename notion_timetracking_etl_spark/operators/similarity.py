@@ -65,7 +65,7 @@ def topk_bruteforce(
     ``queries``: (query_id, query_vec); ``corpus``: (vec_id, embedding).
     Ties break on vec_id ascending for determinism.
     """
-    from .dedup import fan_out
+    from ..lifecycle import fan_out
 
     queries = queries.withColumn("q_norm", F.sqrt(norm_sq(F.col("query_vec"))))
     # fan_out: the scored projection below is |corpus| x |queries| exact
@@ -336,7 +336,7 @@ def srp_near_dup_pairs(
     vectors join back for exact cosine verification, so vector bytes move
     at most twice and the pair space stays per-bucket.
     """
-    from .dedup import _scoped_persist, fan_out
+    from ..lifecycle import fan_out, scoped_persist
 
     planes = srp_planes(bits, dims)
     # fan_out: both persisted tables below are filled by HOF folds over the
@@ -350,7 +350,7 @@ def srp_near_dup_pairs(
     # zip_with+aggregate HOFs per row — the dominant per-row cost of this
     # operator; the before-plan carried the fold under two separate parquet
     # scans). The persisted table is tiny: (vec_id, band, bucket) per band.
-    entries = _scoped_persist(
+    entries = scoped_persist(
         corpus.select(
             "vec_id",
             F.explode(
@@ -374,7 +374,7 @@ def srp_near_dup_pairs(
     )
     # same rationale: the verify join reads the normed vectors on both the
     # a- and b-side — persist so the corpus scan + norm fold run once
-    normed = _scoped_persist(
+    normed = scoped_persist(
         corpus.select(
             "vec_id",
             F.col("embedding").alias("v"),

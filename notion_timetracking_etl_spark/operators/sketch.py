@@ -26,7 +26,7 @@ shape:
 
 Only phase 2 re-reads the stream (required for exactness) and only the
 candidate-matching rows enter its shuffle. The k+1-row-per-partition summary
-is persisted scoped (see ``operators.dedup.release_scoped_caches``) so the
+is persisted query-scoped (``lifecycle.scoped_persist``) so the
 candidate extraction and the ``n`` aggregation share the single MG pass.
 
 Reference scope note: the reference engine has no sketch operators; this
@@ -42,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from .dedup import _scoped_persist
+from ..lifecycle import scoped_persist
 
 # candidate rows: (item, NULL); one sentinel per partition: (NULL, n_p)
 SUMMARY_SCHEMA = "item string, n_part bigint"
@@ -96,7 +96,7 @@ def heavy_hitters(items: DataFrame, item_col: str, k: int) -> DataFrame:
     )
     # k+1 rows per partition — tiny; persisting it lets the candidate set and
     # the global n share the single map-side MG scan of the raw stream.
-    summary = _scoped_persist(misra_gries_summary(stream, "item", k))
+    summary = scoped_persist(misra_gries_summary(stream, "item", k))
     candidates = summary.filter(F.col("item").isNotNull()).select("item").distinct()
     total = summary.filter(F.col("item").isNull()).select(
         F.sum("n_part").cast("bigint").alias("n")

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
-from ..operators.dedup import _scoped_persist
+from ..lifecycle import scoped_persist
 from ..sources.tpch import load_table
 from .helpers import _finite, ordered_small
 from .registry import register
@@ -71,19 +71,19 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Query-scoped persist (released by bench/parity harnesses): at cluster
     # scale this is the standard scan-once trade — MEMORY_AND_DISK, sized
     # to the funnel types only, not the full event log.
-    evf = _scoped_persist(
+    evf = scoped_persist(
         ev.filter(F.col("event_type").isin(*FUNNEL_STEPS)).select(
             "event_type", "user_id", "ts"
         )
     )
-    reached = _scoped_persist(
+    reached = scoped_persist(
         evf.filter(F.col("event_type") == FUNNEL_STEPS[0])
         .groupBy("user_id")
         .agg(F.min("ts").alias("t"))
     )
     counts = [(1, FUNNEL_STEPS[0], reached)]
     for i, step in enumerate(FUNNEL_STEPS[1:], start=1):
-        nxt = _scoped_persist(
+        nxt = scoped_persist(
             evf.filter(F.col("event_type") == step)
             .join(reached.select("user_id", F.col("t").alias("prev_t")), "user_id")
             .filter(F.col("ts") > F.col("prev_t"))
@@ -796,19 +796,19 @@ def _windowed_funnel_oracle(days: int) -> str:
 )
 def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    evf = _scoped_persist(
+    evf = scoped_persist(
         ev.filter(F.col("event_type").isin(*FUNNEL_STEPS)).select(
             "event_type", "user_id", "ts"
         )
     )
-    reached = _scoped_persist(
+    reached = scoped_persist(
         evf.filter(F.col("event_type") == FUNNEL_STEPS[0])
         .groupBy("user_id")
         .agg(F.min("ts").alias("t"))
     )
     counts = [(1, FUNNEL_STEPS[0], reached)]
     for i, step in enumerate(FUNNEL_STEPS[1:], start=1):
-        nxt = _scoped_persist(
+        nxt = scoped_persist(
             evf.filter(F.col("event_type") == step)
             .join(reached.select("user_id", F.col("t").alias("prev_t")), "user_id")
             .filter(
@@ -1076,7 +1076,7 @@ def frequent_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     items = li.select(
         F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
     ).distinct()
-    items = _scoped_persist(items)
+    items = scoped_persist(items)
     freq = (
         items.groupBy("item")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
@@ -1094,7 +1094,7 @@ def frequent_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both sides of the pair self-join (the streamed a-side and the
     # broadcast-built b-side) read bitems — persist so the freq/narrow
     # joins over the 600k-row items cache run once, not twice
-    bitems = _scoped_persist(fitems.join(narrow, "basket"))
+    bitems = scoped_persist(fitems.join(narrow, "basket"))
     a = bitems.select(
         "basket", F.col("item").alias("pa"), F.col("cnt").alias("cnt_a")
     )

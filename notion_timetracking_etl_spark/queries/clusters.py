@@ -152,8 +152,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_simhash_cluster_summary(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
+    from ..lifecycle import scoped_persist
     from ..operators.dedup import (
-        _scoped_persist,
         hamming_pairs_from_sigs,
         simhash_from_hashes,
         word_hashes,
@@ -162,7 +162,7 @@ def dedup_simhash_cluster_summary(
     docs = load_table(spark, sf_dir, "documents")
     # per-doc signatures feed the distinct-sig collapse AND the doc->cluster
     # attach — persist so the sha256-per-word chain runs once
-    sigs = _scoped_persist(
+    sigs = scoped_persist(
         docs.select(
             "doc_id", "n_chars", word_hashes(F.col("text")).alias("_hl")
         ).select(
@@ -171,7 +171,7 @@ def dedup_simhash_cluster_summary(
             simhash_from_hashes(F.col("_hl"), 32).alias("s"),
         )
     )
-    ds = _scoped_persist(sigs.select("s").distinct())
+    ds = scoped_persist(sigs.select("s").distinct())
     pairs = hamming_pairs_from_sigs(ds, "s", "s", n_bits=32, max_hamming=2)
     cc = connected_components(pairs.select("a", "b"), "a", "b")
     assign = sigs.join(cc, sigs.s == cc.node, "left").select(
@@ -276,7 +276,7 @@ def dedup_simhash_cluster_summary(
 def similarity_embedding_dup_clusters(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.dedup import _scoped_persist
+    from ..lifecycle import scoped_persist
     from ..operators.similarity import cosine, cosine_prenormed, norm_sq
     from .similarity import load_embeddings
 
@@ -285,7 +285,7 @@ def similarity_embedding_dup_clusters(
     # distinct-vector collapse: one node per (label, embedding) group; the
     # self-cosine flag decides whether the group's members interlink (the
     # exact pair-query predicate, NULL-safe via try_divide -> coalesce)
-    dv = _scoped_persist(
+    dv = scoped_persist(
         labeled.groupBy("label", "embedding")
         .agg(F.min("vec_id").cast("bigint").alias("node"))
         .select(

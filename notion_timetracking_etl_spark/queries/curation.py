@@ -657,7 +657,7 @@ def _weight_micro_sql(col: str = "lang") -> str:
 def mixture_plan_drift_adjustment(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.dedup import _scoped_persist
+    from ..lifecycle import scoped_persist
 
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
@@ -701,7 +701,7 @@ def mixture_plan_drift_adjustment(
         ).alias("drift_cold"),
     )
     # consumed by both budget minima and the final projection
-    w = _scoped_persist(
+    w = scoped_persist(
         adj.select(
             "*",
             F.expr(

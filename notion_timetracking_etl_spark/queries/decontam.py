@@ -24,13 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
-from ..operators.dedup import (
-    _SCOPED_CACHES,
-    hash64,
-    shingle_table,
-    shingles_from_words,
-    words,
-)
+from ..lifecycle import scoped_persist
+from ..operators.dedup import hash64, shingle_table, shingles_from_words, words
 from ..sources.tpch import load_table
 from .dedup import _hash64_sql, _shingles_cte, _WORDS_SQL
 from .registry import register
@@ -66,12 +61,10 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize+gram fan-out runs a single time. shingle_table binds the
     # words array before shingling (the re-tokenization trap) AND carries
     # the family's NULL-text contract (zero shingles for NULL docs).
-    grams = (
+    grams = scoped_persist(
         shingle_table(docs, "doc_id", "text", 5)
         .withColumnRenamed("doc", "doc_id")
-        .persist()
     )
-    _SCOPED_CACHES.append(grams)
     train = grams.filter(F.col("doc_id") % 20 != 0)
     eval_grams = grams.filter(F.col("doc_id") % 20 == 0).select("sh").distinct()
     n = train.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
@@ -280,18 +273,19 @@ def text_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_words") >= n)
         .repartition(par, "doc_id")
     )
-    pos = ww.select(
-        "doc_id",
-        "n_words",
-        F.posexplode(shingles_from_words(F.col("ws"), n)).alias("p", "gram"),
-    ).select(
-        "doc_id",
-        "n_words",
-        (F.col("p") + 1).alias("start_tok"),
-        (F.col("p") + n).alias("end_tok"),
-        hash64("span", F.col("gram")).alias("g"),
-    ).persist()
-    _SCOPED_CACHES.append(pos)
+    pos = scoped_persist(
+        ww.select(
+            "doc_id",
+            "n_words",
+            F.posexplode(shingles_from_words(F.col("ws"), n)).alias("p", "gram"),
+        ).select(
+            "doc_id",
+            "n_words",
+            (F.col("p") + 1).alias("start_tok"),
+            (F.col("p") + n).alias("end_tok"),
+            hash64("span", F.col("gram")).alias("g"),
+        )
+    )
     # A gram is "duplicated" when it occurs >1 time anywhere — including
     # twice inside one document (intra-doc repetition is still duplication
     # for span-removal purposes). 32-bit hash collisions are deterministic
@@ -440,8 +434,7 @@ def text_scrub_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n = _SPAN_N
     ww, pos = _positional_grams(spark, sf_dir, n)
-    pos = pos.persist()
-    _SCOPED_CACHES.append(pos)
+    pos = scoped_persist(pos)
     keep = pos.groupBy("g").agg(F.min("k").alias("keep_k"))
     marked = (
         pos.join(keep, "g")
@@ -532,12 +525,10 @@ _DECONTAM_THRESHOLD_PCT = 30  # drop train docs with >30% eval-gram overlap
 )
 def contamination_scrub_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    grams = (
+    grams = scoped_persist(
         shingle_table(docs, "doc_id", "text", 5)
         .withColumnRenamed("doc", "doc_id")
-        .persist()
     )
-    _SCOPED_CACHES.append(grams)
     train = grams.filter(F.col("doc_id") % 20 != 0)
     eval_grams = (
         grams.filter(F.col("doc_id") % 20 == 0).select("sh").distinct()

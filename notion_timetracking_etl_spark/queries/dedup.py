@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
+from ..lifecycle import session_cached
 from ..operators.dedup import (
     exact_dedup,
     minhash_near_dup_pairs,
@@ -154,27 +155,21 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_dup_pairs_cached(spark, sf_dir).orderBy("a", "b")
 
 
-# The verified pair list is the materialized intermediate three queries
-# consume (this one, dedup_clusters, pagerank_dup_graph) — the in-memory
-# analogue of a production pipeline writing near-dup pairs to the lake once
-# per corpus snapshot and reading them many times. Session-lifetime like
-# pipeline's canon cache: an eager localCheckpoint NOT registered for
-# scoped release (multi-query harnesses must not evict it between
-# queries); O(near-dup pairs) rows, kilobytes at bench scale.
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def near_dup_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PAIRS_CACHE.get(key)
-    if cached is None:
-        docs = load_table(spark, sf_dir, "documents")
-        cached = minhash_near_dup_pairs(
-            docs, "doc_id", "text", num_hashes=12, bands=3, threshold=0.5,
-            shingle_n=3,
-        ).localCheckpoint(eager=True)
-        _PAIRS_CACHE[key] = cached
-    return cached
+    """The verified pair list three queries consume (dedup_minhash_lsh,
+    dedup_clusters, pagerank_dup_graph), checkpointed once per corpus
+    (session scope) — the in-memory analogue of a production pipeline
+    writing near-dup pairs to the lake once per corpus snapshot and reading
+    them many times. O(near-dup pairs) rows, kilobytes at bench scale."""
+    return session_cached(
+        spark,
+        sf_dir,
+        "near_dup_pairs",
+        lambda: minhash_near_dup_pairs(
+            load_table(spark, sf_dir, "documents"), "doc_id", "text",
+            num_hashes=12, bands=3, threshold=0.5, shingle_n=3,
+        ).localCheckpoint(eager=True),
+    )
 
 
 @register(
@@ -358,8 +353,8 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..lifecycle import scoped_persist
     from ..operators.dedup import (
-        _scoped_persist,
         jaccard_verify,
         lsh_cross_candidates,
         minhash_signatures,
@@ -367,7 +362,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = _scoped_persist(shingle_table(docs, "doc_id", "text", 3))
+    sh = scoped_persist(shingle_table(docs, "doc_id", "text", 3))
     is_new = F.col("doc") % 10 == 9
     cands = lsh_cross_candidates(
         minhash_signatures(sh.filter(is_new)),
@@ -415,8 +410,8 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def minhash_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..lifecycle import scoped_persist
     from ..operators.dedup import (
-        _scoped_persist,
         containment_verify,
         lsh_candidate_pairs,
         minhash_signatures,
@@ -424,6 +419,6 @@ def minhash_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = _scoped_persist(shingle_table(docs, "doc_id", "text"))
-    cands = _scoped_persist(lsh_candidate_pairs(minhash_signatures(sh)))
+    sh = scoped_persist(shingle_table(docs, "doc_id", "text"))
+    cands = scoped_persist(lsh_candidate_pairs(minhash_signatures(sh)))
     return ordered_small(containment_verify(cands, sh), "a", "b")

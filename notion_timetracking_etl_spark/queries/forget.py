@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
+from ..lifecycle import write_once, written
 from ..operators.cluster import connected_components
 from ..sources.tpch import load_table
 from .dedup import MINHASH_PAIRS_CTES, near_dup_pairs_cached
@@ -554,9 +555,6 @@ def deletion_propagation_sketch_lake(
 
 DELETED_VEC_PRED = "vec_id % 100 = 7"
 
-_FORGET_MODELS: set[str] = set()
-
-
 def _forget_model_paths(sf_dir: str) -> tuple[str, str]:
     from .lake import _lake_path
 
@@ -594,23 +592,19 @@ def ann_model_forget_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .kmeans import fitted_model
     from .similarity import load_embeddings
 
+    from ..operators.model_store import save_kmeans_model
+
     stale_path, fresh_path = _forget_model_paths(sf_dir)
     emb = load_embeddings(spark, sf_dir)
-    if stale_path not in _FORGET_MODELS:
-        from ..operators.model_store import save_kmeans_model
-
-        _asg_tr, cent_tr = fitted_model(spark, sf_dir)
-        save_kmeans_model(cent_tr, stale_path)
-        _FORGET_MODELS.add(stale_path)
-    write_fresh = fresh_path not in _FORGET_MODELS
+    write_once(
+        stale_path,
+        lambda: save_kmeans_model(fitted_model(spark, sf_dir)[1], stale_path),
+    )
+    write_fresh = not written(fresh_path)
     out = ann_model_sweep_frames(
         spark, emb, stale_path, fresh_path, DELETED_VEC_PRED, write_fresh
     )
-    # memoize only AFTER the sweep's writes completed (ADVICE r11: adding
-    # before meant a mid-sweep failure left every later call in the process
-    # reading a missing/partial artifact with write_fresh=False; matches the
-    # _COMPACT_APPLY_LAKES ordering)
-    _FORGET_MODELS.add(fresh_path)
+    write_once(fresh_path, lambda: None)  # the sweep's writes completed
     return out
 
 
@@ -625,7 +619,7 @@ def ann_model_sweep_frames(
     """The sweep itself, parameterized over (corpus, persisted stale model,
     tombstone predicate) so tests can drive it over synthetic corpora —
     including the emptied-cell fixture (every member of a cell deleted)."""
-    from ..operators.dedup import _scoped_persist
+    from ..lifecycle import scoped_persist
     from ..operators.kmeans import _as_double_vec, _assign, _update
     from ..operators.model_store import load_kmeans_model, save_kmeans_model
 
@@ -633,13 +627,13 @@ def ann_model_sweep_frames(
     asg_loaded, cent_stale = load_kmeans_model(spark, emb, stale_path)
     # consumed by touched-cell detection, the survivor filter, the refit
     # and the re-route anti-join — persist once (O(n) two-column rows)
-    asg_all = _scoped_persist(asg_loaded.select("vec_id", "cid"))
+    asg_all = scoped_persist(asg_loaded.select("vec_id", "cid"))
 
-    touched = _scoped_persist(
+    touched = scoped_persist(
         asg_all.join(dead, "vec_id").select("cid").distinct()
     )
     asg_alive = asg_all.join(dead, "vec_id", "left_anti")
-    refit_members = _scoped_persist(asg_alive.join(F.broadcast(touched), "cid"))
+    refit_members = scoped_persist(asg_alive.join(F.broadcast(touched), "cid"))
 
     vec_all = _as_double_vec(emb, "vec_id", "embedding")
     cent_refit = _update(vec_all, refit_members, cent_stale)
@@ -976,7 +970,7 @@ def _mm_forget_oracle_sql() -> str:
 def deletion_propagation_multimodal(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.dedup import _scoped_flat_checkpoint, _scoped_persist
+    from ..lifecycle import scoped_flat_checkpoint, scoped_persist
     from ..operators.multimodal import (
         PHASH_MIN_CHARS,
         attach_media_columns,
@@ -997,7 +991,7 @@ def deletion_propagation_multimodal(
     # semgate sweep (guide §3.3). The honest REBUILD leg below keeps its
     # own full second-decode lineage; only the shared state table is
     # truncated.
-    sig = _scoped_flat_checkpoint(phash_media(media))
+    sig = scoped_flat_checkpoint(phash_media(media))
     dead = F.broadcast(
         sig.filter(F.col("media_id") % 100 == 7).select("media_id")
     )
@@ -1047,12 +1041,12 @@ def deletion_propagation_multimodal(
     arr = sig.filter(is_arr)
     corpus_b = sig.filter(~is_arr)
     corpus_a = corpus_b.join(dead, "media_id", "left_anti")
-    gb = _scoped_persist(
+    gb = scoped_persist(
         phash_cross_near_dups(
             arr, corpus_b, max_hamming=MM_MAX_HAMMING, px_l1_max=MM_PX_L1_MAX
         )
     )
-    ga = _scoped_persist(
+    ga = scoped_persist(
         phash_cross_near_dups(
             arr, corpus_a, max_hamming=MM_MAX_HAMMING, px_l1_max=MM_PX_L1_MAX
         )
@@ -1061,7 +1055,7 @@ def deletion_propagation_multimodal(
     ma = ga.select(F.col("a").alias("media_id")).distinct()
 
     # (3) pair lake FILTERED + cluster re-canonicalization
-    pairs = _scoped_persist(
+    pairs = scoped_persist(
         phash_near_dup_pairs(
             sig, max_hamming=MM_MAX_HAMMING, px_l1_max=MM_PX_L1_MAX
         ).select("a", "b")
@@ -1210,7 +1204,7 @@ def semgate_forget_frames(
     the invariant being checked, not assumed). Gate consequence: arrivals
     re-gate against the swept state — flags_before/after and the
     must-be-zero flags-to-dead count."""
-    from ..operators.dedup import _scoped_flat_checkpoint, _scoped_persist
+    from ..lifecycle import scoped_flat_checkpoint, scoped_persist
     from ..operators.kmeans import _as_double_vec, _assign
     from ..operators.similarity import cosine_prenormed
     from .kmeans import SEM_MAX_CELL, SEMDEDUP_T, sem_bits_agg, sem_state_base
@@ -1226,7 +1220,7 @@ def semgate_forget_frames(
         # instead (kmeans.sem_state_base_cached — the same physical state
         # the semdedup cells derive from).
         asg = _assign(_as_double_vec(emb, "vec_id", "embedding"), cent)
-        base = _scoped_flat_checkpoint(sem_state_base(emb, asg))
+        base = scoped_flat_checkpoint(sem_state_base(emb, asg))
     dead = F.broadcast(base.filter(F.expr(dead_pred)).select("vec_id"))
     swept = base.join(dead, "vec_id", "left_anti")
 
@@ -1264,7 +1258,7 @@ def semgate_forget_frames(
     # giant expression trees (the full SRP plane folds + the fixed-point
     # argmin) no longer ride the final report plan through Catalyst, which
     # was the measured post-base residual of the §3.3 planning gap
-    cells_rebuilt = _scoped_flat_checkpoint(cells(base_rebuilt, bits_of(swept)))
+    cells_rebuilt = scoped_flat_checkpoint(cells(base_rebuilt, bits_of(swept)))
 
     state_fp = F.conv(
         F.substring(
@@ -1313,7 +1307,7 @@ def semgate_forget_frames(
             .select("vec_id", "mv")
         )
 
-    gate_after_pairs = _scoped_persist(gate(cells_swept))
+    gate_after_pairs = scoped_persist(gate(cells_swept))
     dead_mv = F.broadcast(dead.select(F.col("vec_id").alias("mv")))
 
     # single-pass report (see _report_union): replaces 9 crossJoin(
@@ -1492,9 +1486,6 @@ def deletion_propagation_semgate_state(
     )
 
 
-_FORGET_PQ_MODELS: set[str] = set()
-
-
 def pq_model_sweep_frames(
     spark: SparkSession,
     emb: DataFrame,
@@ -1513,7 +1504,7 @@ def pq_model_sweep_frames(
     models byte-identically (NULL-safe comparison — a writer that loses an
     entry flips the flag red), and only touched entries' survivors
     re-encode in that subspace. All counts aggregate across subspaces."""
-    from ..operators.dedup import _scoped_persist
+    from ..lifecycle import scoped_persist
     from ..operators.kmeans import _as_double_vec, _assign, _update
     from ..operators.model_store import load_pq_model, save_pq_model
 
@@ -1547,12 +1538,12 @@ def pq_model_sweep_frames(
         # persist, NOT the semgate-style flat checkpoint (measured 5.32 ->
         # 5.54 s, 0/3): eight per-subspace EAGER materializations serialize
         # at build time, costing more than the per-leg plan shrinkage saves
-        asg_j = _scoped_persist(asg_loaded.select("vec_id", "cid"))
-        touched = _scoped_persist(
+        asg_j = scoped_persist(asg_loaded.select("vec_id", "cid"))
+        touched = scoped_persist(
             asg_j.join(dead, "vec_id").select("cid").distinct()
         )
         alive = asg_j.join(dead, "vec_id", "left_anti")
-        refit = _scoped_persist(alive.join(F.broadcast(touched), "cid"))
+        refit = scoped_persist(alive.join(F.broadcast(touched), "cid"))
         vec_j = _as_double_vec(
             emb.select(
                 "vec_id", F.slice(F.col("embedding"), j * per + 1, per).alias("sub")
@@ -1589,7 +1580,7 @@ def pq_model_sweep_frames(
         # and its lineage (parquet scan + refit join + broadcast argmin) is
         # the deepest subtree of the final plan, so truncating it here also
         # collapses the plan the 9 output aggregates have to replicate
-        re_routed = _scoped_persist(
+        re_routed = scoped_persist(
             _assign(
                 vec_j.join(refit.select("vec_id"), "vec_id"), cent_fresh_j
             ).select("vec_id", "cid")
@@ -1611,7 +1602,7 @@ def pq_model_sweep_frames(
         fresh_codes_u = cj if fresh_codes_u is None else fresh_codes_u.unionByName(cj)
         rerouted_u = xj if rerouted_u is None else rerouted_u.unionByName(xj)
 
-    touched_u = _scoped_persist(touched_u)
+    touched_u = scoped_persist(touched_u)
     # single-pass report (see _report_union): every column's source rows are
     # tagged and unioned, ONE conditional aggregate produces the row —
     # replaces 9 crossJoin(broadcast(<agg>)) subqueries (94 jobs, ~5 s of
@@ -1785,13 +1776,14 @@ def deletion_propagation_pq_model(
 
     stale_path = _lake_path(sf_dir, "pq_model_stale")
     fresh_path = _lake_path(sf_dir, "pq_model_forget")
-    emb = load_embeddings(spark, sf_dir)
-    if stale_path not in _FORGET_PQ_MODELS:
-        from ..operators.model_store import save_pq_model
+    from ..operators.model_store import save_pq_model
 
-        save_pq_model(fitted_pq_model(spark, sf_dir), stale_path)
-        _FORGET_PQ_MODELS.add(stale_path)
-    write_fresh = fresh_path not in _FORGET_PQ_MODELS
+    emb = load_embeddings(spark, sf_dir)
+    write_once(
+        stale_path,
+        lambda: save_pq_model(fitted_pq_model(spark, sf_dir), stale_path),
+    )
+    write_fresh = not written(fresh_path)
     out = ordered_small(
         pq_model_sweep_frames(
             spark, emb, stale_path, fresh_path, DELETED_VEC_PRED,
@@ -1799,9 +1791,7 @@ def deletion_propagation_pq_model(
         ),
         "n_tombstones",
     )
-    # memoize only AFTER pq_model_sweep_frames' writes completed (ADVICE
-    # r11 — same ordering as _COMPACT_APPLY_LAKES / _FORGET_MODELS)
-    _FORGET_PQ_MODELS.add(fresh_path)
+    write_once(fresh_path, lambda: None)  # the sweep's writes completed
     return out
 
 
@@ -1822,25 +1812,21 @@ def deletion_propagation_pq_model(
 STREAM_DELETED_USER_PRED = "user_id % 16 = 3"
 _STREAM_USER_WAVES = (3, 19, 35)  # user_id % 48 residues; union = % 16 = 3
 
-_FORGET_STREAM_STAGING: dict[tuple[str, str], str] = {}
-
-
 def _stage_waves(
     spark: SparkSession, sf_dir: str, kind: str, waves: list[DataFrame]
 ) -> str:
     """Write each wave DataFrame as one parquet file under a fresh staging
-    dir (memoized per process x sf_dir x kind); file order drives the
+    dir (written once per process x sf_dir x kind); file order drives the
     micro-batch split."""
     import tempfile
 
-    key = (sf_dir, kind)
-    path = _FORGET_STREAM_STAGING.get(key)
-    if path is None:
+    def stage() -> str:
         path = tempfile.mkdtemp(prefix=f"sg_forget_{kind}_") + "/waves"
         for w in waves:
             w.coalesce(1).write.mode("append").parquet(path)
-        _FORGET_STREAM_STAGING[key] = path
-    return path
+        return path
+
+    return write_once(("forget_waves", sf_dir, kind), stage)
 
 
 def sketch_forget_step_factory(
@@ -2058,16 +2044,10 @@ def streaming_forget_multimodal(
     )
     media = attach_media_columns(docs, "doc_id", "text")
     sig_path = _lake_path(sf_dir, "mm_sig_lake_stream")
-    sig_schema = None
-    if sig_path not in _FORGET_MODELS:
-        sig = phash_media(media)
-        sig_schema = sig.schema
-        # the persisted surface the stream sweeps: a physical parquet lake
-        sig.write.mode("overwrite").parquet(sig_path)
-        _FORGET_MODELS.add(sig_path)
-    if sig_schema is None:
-        sig_schema = phash_media(media.limit(0)).schema
-    lake0 = spark.read.schema(sig_schema).parquet(sig_path)
+    sig = phash_media(media)
+    # the persisted surface the stream sweeps: a physical parquet lake
+    write_once(sig_path, lambda: sig.write.mode("overwrite").parquet(sig_path))
+    lake0 = spark.read.schema(sig.schema).parquet(sig_path)
 
     dead_all = lake0.filter(F.col("media_id") % 100 == 7).select("media_id")
     waves_dir = _stage_waves(

@@ -75,10 +75,6 @@ def fmt_ts(col: Column) -> Column:
     return F.date_format(col, TS_FMT_SPARK)
 
 
-def fmt_ts_sql(expr: str) -> str:
-    return f"strftime(({expr}), '{TS_FMT_DUCK}')"
-
-
 def ordered_small(df, *cols: str):
     """Total order for a small result set in a single plan execution.
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
+from ..lifecycle import flat_checkpoint, session_cached
 from ..operators.kmeans import kmeans_fit
 from ..sources.tpch import load_table
 from .helpers import ordered_small
@@ -19,88 +20,24 @@ from .similarity import load_embeddings
 K = 8
 ITERS = 3
 
-# Fitted quantizer cached per (session, sf_dir) — the train-once/serve-many
-# shape: kmeans_embeddings and similarity_topk_ivf_kmeans share one model,
-# exactly like the pipeline family's canon/derived session caches. The
-# cached centroid table is k rows (a localCheckpoint NOT registered for
-# scoped release, so bench/parity harnesses can't evict it between
-# queries); assignments rebuild from it as a cheap shuffle-free plan.
-#
-# Lifetime hygiene (r8 verdict task #7): both model caches are BOUNDED —
-# a long-lived session cycling through many sf_dirs (multi-tenant serving,
-# tests over many tmp_path lakes) evicts least-recently-used entries and
-# frees their checkpoint blocks instead of pinning executor block-manager
-# memory forever — and expose an explicit release for callers that know a
-# corpus is done (tests/teardown, a tenant unload).
-_MODEL_MAX_ENTRIES = 4
-_MODEL_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
-def _cache_get(cache: dict, key):
-    """LRU read: move the hit to the most-recent position."""
-    val = cache.pop(key, None)
-    if val is not None:
-        cache[key] = val
-    return val
-
-
-def _evict_lru(cache: dict, free) -> None:
-    """Bound the cache, freeing the evicted entry's checkpoint blocks.
-
-    Lifetime contract: eviction frees the blocks that physically BACK any
-    DataFrame previously handed out for that (app, sf_dir) — a lazy plan
-    built on an evicted model must be executed before touching
-    ``_MODEL_MAX_ENTRIES`` further corpora in the same session, or its
-    collect fails with a missing-checkpoint-block error instead of
-    recomputing (localCheckpoint forfeits lineage by design; see the
-    ADVICE r8 resolution note). Bench/driver/test sessions touch <= 3
-    sf_dirs and execute eagerly, so they never hit this; a user-facing
-    session API would need refcounting here first."""
-    while len(cache) > _MODEL_MAX_ENTRIES:
-        oldest = next(iter(cache))
-        free(cache.pop(oldest))
-
-
-def _free_model(model: tuple[DataFrame, DataFrame]) -> None:
-    from ..operators.dedup import _free_checkpoint_blocks
-
-    _asg, cent = model
-    _free_checkpoint_blocks(cent)
-
-
-def _free_cells(mem: DataFrame) -> None:
-    from ..operators.dedup import _free_checkpoint_blocks
-
-    _free_checkpoint_blocks(mem)
-
-
-def release_session_models() -> None:
-    """Free every cached fitted model and refined-cell membership NOW
-    (checkpoint blocks included). Safe on a stopped session; later calls
-    to :func:`fitted_model` / :func:`_refined_cells` simply re-fit."""
-    for model in list(_MODEL_CACHE.values()):
-        _free_model(model)
-    _MODEL_CACHE.clear()
-    for mem in list(_CELLS_CACHE.values()):
-        _free_cells(mem)
-    _CELLS_CACHE.clear()
-    for base in list(_SEM_BASE_CACHE.values()):
-        _free_cells(base)
-    _SEM_BASE_CACHE.clear()
-
-
 def fitted_model(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(assignments, centroids) for the session-shared (k=K, ITERS) model."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _cache_get(_MODEL_CACHE, key)
-    if cached is None:
-        emb = load_embeddings(spark, sf_dir)
-        cached = kmeans_fit(
-            emb, "vec_id", "embedding", k=K, iters=ITERS, scoped=False
-        )
-        _MODEL_CACHE[key] = cached
-        _evict_lru(_MODEL_CACHE, _free_model)
-    return cached
+    """(assignments, centroids) for the session-shared (k=K, ITERS) model:
+    trained once per corpus, shared by kmeans_embeddings and
+    similarity_topk_ivf_kmeans. The centroid table is a k-row checkpoint;
+    assignments rebuild from it as a cheap shuffle-free plan."""
+    return session_cached(
+        spark,
+        sf_dir,
+        "kmeans_model",
+        lambda: kmeans_fit(
+            load_embeddings(spark, sf_dir),
+            "vec_id",
+            "embedding",
+            k=K,
+            iters=ITERS,
+            scoped=False,
+        ),
+    )
 
 
 def kmeans_ctes(
@@ -265,16 +202,6 @@ def _sem_cell_ctes(a_last: str) -> list[str]:
     ]
 
 
-# Refined-cell membership cached per (session, sf_dir) like _MODEL_CACHE:
-# semdedup_embeddings and semdedup_incremental consume the same partition,
-# and a production pipeline materializes cell assignments once per corpus
-# snapshot anyway (they are the routing table every ingest batch joins).
-# Same LRU bound + release path as _MODEL_CACHE (r8 verdict task #7 /
-# ADVICE: an un-scoped localCheckpoint per sf_dir would otherwise pin
-# executor block-manager memory unboundedly across corpora).
-_CELLS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def sem_bits_agg(df: DataFrame) -> DataFrame:
     """One-row (bits INT) aggregate of the corpus-count refinement bits,
     WITH the saturation guard: past the adaptive range the computation
@@ -317,29 +244,23 @@ def sem_state_base(emb: DataFrame, asg: DataFrame) -> DataFrame:
     )
 
 
-# The materialized routing lake (vec_id, cid, embedding, nrm, sig) — the
-# table sem_state_base's docstring names as what production PERSISTS once
-# per corpus snapshot. Session-cached exactly like _MODEL_CACHE /
-# _CELLS_CACHE (train-once/serve-many; first consumer pays the full
-# assign+hash inside its timed region; release_session_models frees it):
-# both the semdedup cells derivation and the semgate deletion sweep read
-# the same physical state instead of re-planning and re-hashing the
-# assign+SRP chain per consumer.
-_SEM_BASE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def sem_state_base_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _cache_get(_SEM_BASE_CACHE, key)
-    if cached is None:
-        from ..operators.dedup import _flat_checkpoint
-
-        asg, _cent = fitted_model(spark, sf_dir)
-        emb = load_embeddings(spark, sf_dir)
-        cached = _flat_checkpoint(sem_state_base(emb, asg))
-        _SEM_BASE_CACHE[key] = cached
-        _evict_lru(_SEM_BASE_CACHE, _free_cells)
-    return cached
+    """The materialized routing lake (vec_id, cid, embedding, nrm, sig) —
+    the table sem_state_base's docstring names as what production PERSISTS
+    once per corpus snapshot, flat-checkpointed once per corpus: both the
+    semdedup cells derivation and the semgate deletion sweep read the same
+    physical state instead of re-planning and re-hashing the assign+SRP
+    chain per consumer."""
+    return session_cached(
+        spark,
+        sf_dir,
+        "sem_state_base",
+        lambda: flat_checkpoint(
+            sem_state_base(
+                load_embeddings(spark, sf_dir), fitted_model(spark, sf_dir)[0]
+            )
+        ),
+    )
 
 
 def _refined_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -348,14 +269,24 @@ def _refined_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     The bits scalar rides a one-row broadcast aggregate (no driver count
     round-trip), with the same saturation guard as knn_graph_stats: past
     the adaptive range the query fails loudly instead of silently
-    re-entering linear cell growth."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _cache_get(_CELLS_CACHE, key)
-    if cached is not None:
-        return cached
+    re-entering linear cell growth.
+
+    Checkpointed once per corpus (session scope): semdedup_embeddings and
+    semdedup_incremental consume the same partition, and a production
+    pipeline materializes cell assignments once per corpus snapshot anyway
+    (they are the routing table every ingest batch joins)."""
+    return session_cached(
+        spark,
+        sf_dir,
+        "refined_cells",
+        lambda: _fill_refined_cells(spark, sf_dir),
+    )
+
+
+def _fill_refined_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = sem_state_base_cached(spark, sf_dir)
     bits = sem_bits_agg(base)
-    mem = (
+    return (
         base.crossJoin(F.broadcast(bits))
         .withColumn(
             "cell",
@@ -366,17 +297,8 @@ def _refined_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .drop("sig", "bits")
-        # materialize once per (session, corpus): the membership is the
-        # routing table both semdedup queries (and every ingest batch in
-        # production) join against — recomputing the signature + assignment
-        # per consumer is pure waste. NOT scope-released (session model
-        # cache, same LRU-bounded lifetime policy as the fitted quantizer;
-        # release_session_models() frees it explicitly).
         .localCheckpoint(eager=True)
     )
-    _CELLS_CACHE[key] = mem
-    _evict_lru(_CELLS_CACHE, _free_cells)
-    return mem
 
 
 def _semdedup_oracle_sql(k: int, iters: int, threshold: float) -> str:
@@ -859,10 +781,7 @@ def ann_refresh_frames(
     and pin sampled-vs-full recall agreement (audit_k over-sized = exact
     full truth).
     """
-    from ..operators.dedup import (
-        _scoped_flat_checkpoint,
-        _scoped_persist,
-    )
+    from ..lifecycle import scoped_flat_checkpoint, scoped_persist
     from ..operators.kmeans import _as_double_vec, _assign, _update, kmeans_fit
     from ..operators.similarity import topk_bruteforce, topk_ivf_kmeans
 
@@ -875,7 +794,7 @@ def ann_refresh_frames(
     # tree through Catalyst (the measured §3.3 planning-gap term of the
     # forget sweeps; this query showed a 2.8 s zero-stage gap before its
     # final report job)
-    asg_all = _scoped_flat_checkpoint(_assign(vec_all, cent_stale))
+    asg_all = scoped_flat_checkpoint(_assign(vec_all, cent_stale))
 
     coh = asg_all.groupBy("cid").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members"),
@@ -887,7 +806,7 @@ def ann_refresh_frames(
         F.sum("n_members").cast("bigint").alias("t_m"),
         F.sum("n_arrivals").cast("bigint").alias("t_a"),
     )
-    hot = _scoped_persist(
+    hot = scoped_persist(
         coh.crossJoin(F.broadcast(tot))
         .filter(
             F.col("n_arrivals") * F.col("t_m")
@@ -901,7 +820,7 @@ def ann_refresh_frames(
     # — checkpoint it flat like the fit loop checkpoints its per-iteration
     # centroids, so the m-step lineage leaves the search legs' plans
     asg_hot = asg_all.join(F.broadcast(hot), "cid")
-    cent_fresh = _scoped_flat_checkpoint(_update(vec_all, asg_hot, cent_stale))
+    cent_fresh = scoped_flat_checkpoint(_update(vec_all, asg_hot, cent_stale))
     hot_members = asg_hot.select("vec_id")
     re_routed = _assign(vec_all.join(hot_members, "vec_id"), cent_fresh)
     asg_fresh = asg_all.select("vec_id", "cid").join(
@@ -915,7 +834,7 @@ def ann_refresh_frames(
     # the audit corpus: audit_k smallest deterministic hashes — a
     # TakeOrderedAndProject (distributed partial top-k), never a global
     # window; searches AND truth all run against this fixed-size sample
-    audit = _scoped_flat_checkpoint(
+    audit = scoped_flat_checkpoint(
         emb.select("vec_id", "embedding")
         .withColumn("_ah", _audit_hash_col())
         .orderBy("_ah", "vec_id")
@@ -925,7 +844,7 @@ def ann_refresh_frames(
     # truth feeds BOTH hit aggregates — checkpoint the O(n_queries * topk)
     # result so the reuse is guaranteed and the brute-force window leaves
     # the aggregates' plans
-    truth = _scoped_flat_checkpoint(
+    truth = scoped_flat_checkpoint(
         topk_bruteforce(audit, queries, k=topk).select("query_id", "vec_id")
     )
     stale_k = topk_ivf_kmeans(

@@ -30,15 +30,11 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
+from ..lifecycle import write_once
 from ..sinks.parquet import write_bucketed_table, write_partitioned_lake
 from ..sources.tpch import load_table
 from .helpers import DATE_FMT_SPARK, dsum, dsum_sql, ordered_small
 from .registry import register
-
-# lake paths already written by this process (idempotent overwrite on first
-# use; NOT cross-process — a fresh driver process rebuilds from source)
-_MATERIALIZED: set[str] = set()
-
 
 def _lake_path(sf_dir: str, leaf: str) -> str:
     """Scratch path for a derived lake of ``sf_dir``: one sanitize rule,
@@ -65,9 +61,10 @@ def events_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.to_date("ts")
     )
-    if path not in _MATERIALIZED:
-        write_partitioned_lake(ev, path, ["event_date"], sort_cols=["ts"])
-        _MATERIALIZED.add(path)
+    write_once(
+        path,
+        lambda: write_partitioned_lake(ev, path, ["event_date"], sort_cols=["ts"]),
+    )
     # Explicit schema (source schema + the partition column): an EMPTY
     # events table writes a lake with zero partition directories, where
     # schema/partition inference has nothing to look at and raises
@@ -209,8 +206,6 @@ def lake_bucketed_cohort_activity(spark: SparkSession, sf_dir: str) -> DataFrame
 # raw events are too big to rescan per question.
 # ---------------------------------------------------------------------------
 
-_SKETCH_LAKES: set[str] = set()
-
 
 def _sketch_lake_path(sf_dir: str) -> str:
     return _lake_path(sf_dir, "events_kmv_by_date")
@@ -297,9 +292,12 @@ def kmv_sketch_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     the empty-events case (zero partition directories — ROBUSTNESS §1)."""
     path = _sketch_lake_path(sf_dir)
     partials = kmv_partial_sketches(kmv_dated_hashes(spark, sf_dir))
-    if path not in _SKETCH_LAKES:
-        write_partitioned_lake(partials, path, ["event_date"], sort_cols=["g", "h"])
-        _SKETCH_LAKES.add(path)
+    write_once(
+        path,
+        lambda: write_partitioned_lake(
+            partials, path, ["event_date"], sort_cols=["g", "h"]
+        ),
+    )
     return spark.read.schema(partials.schema).parquet(path)
 
 
@@ -463,8 +461,6 @@ def kmv_sketch_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # maintained per partition and merged on read.
 # ---------------------------------------------------------------------------
 
-_HLL_LAKES: set[str] = set()
-
 
 def _hll_lake_path(sf_dir: str) -> str:
     return _lake_path(sf_dir, "events_hll_by_date")
@@ -504,11 +500,12 @@ def hll_merge_registers(partials: DataFrame) -> DataFrame:
 def hll_sketch_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _hll_lake_path(sf_dir)
     partials = hll_partial_registers(hll_dated_fields(spark, sf_dir))
-    if path not in _HLL_LAKES:
-        write_partitioned_lake(
+    write_once(
+        path,
+        lambda: write_partitioned_lake(
             partials, path, ["event_date"], sort_cols=["g", "idx"]
-        )
-        _HLL_LAKES.add(path)
+        ),
+    )
     return spark.read.schema(partials.schema).parquet(path)
 
 
@@ -696,8 +693,6 @@ def hll_sketch_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lake whose raw events are never rescanned.
 # ---------------------------------------------------------------------------
 
-_QS_LAKES: set[str] = set()
-
 
 def _qs_lake_path(sf_dir: str) -> str:
     return _lake_path(sf_dir, "events_qs_by_date")
@@ -760,9 +755,12 @@ def qs_merge_sample(partials: DataFrame) -> DataFrame:
 def qs_sketch_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _qs_lake_path(sf_dir)
     partials = qs_partial_samples(qs_dated_values(spark, sf_dir))
-    if path not in _QS_LAKES:
-        write_partitioned_lake(partials, path, ["event_date"], sort_cols=["g", "h"])
-        _QS_LAKES.add(path)
+    write_once(
+        path,
+        lambda: write_partitioned_lake(
+            partials, path, ["event_date"], sort_cols=["g", "h"]
+        ),
+    )
     return spark.read.schema(partials.schema).parquet(path)
 
 
@@ -929,8 +927,6 @@ def quantile_sketch_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # schema evolution: mergeSchema read over an evolving lake
 # ---------------------------------------------------------------------------
 
-_DRIFT_LAKES: set[str] = set()
-
 
 def _drift_lake_path(sf_dir: str) -> str:
     return _lake_path(sf_dir, "orders_evolving")
@@ -970,7 +966,7 @@ def _drift_lake_path(sf_dir: str) -> str:
 )
 def lake_schema_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _drift_lake_path(sf_dir)
-    if path not in _DRIFT_LAKES:
+    def write_generations() -> None:
         orders = load_table(spark, sf_dir, "orders")
         v1 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
             F.lit(1).alias("gen"), "o_orderkey"
@@ -985,7 +981,8 @@ def lake_schema_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         v1.write.mode("overwrite").parquet(path)
         v2.write.mode("append").parquet(path)
-        _DRIFT_LAKES.add(path)
+
+    write_once(path, write_generations)
     merged = spark.read.option("mergeSchema", "true").parquet(path)
     return ordered_small(
         merged.groupBy("gen")
@@ -1010,8 +1007,6 @@ def lake_schema_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sketch (merge is associative/commutative/idempotent on the hash set), so
 # compacted == daily-direct is a hashed equality, not a tolerance.
 # ---------------------------------------------------------------------------
-
-_COMPACT_LAKES: set[str] = set()
 
 # Grain pivot: daily partials strictly BEFORE this date compact to ISO-week
 # grain; later dates stay daily (the hot tail an ingest keeps fine-grained).
@@ -1059,11 +1054,12 @@ def kmv_compacted_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     process from the daily lake and read back with an explicit schema."""
     path = _compact_lake_path(sf_dir)
     compacted = kmv_compact_partials(kmv_sketch_lake(spark, sf_dir))
-    if path not in _COMPACT_LAKES:
-        write_partitioned_lake(
+    write_once(
+        path,
+        lambda: write_partitioned_lake(
             compacted, path, ["grain_date"], sort_cols=["g", "h"]
-        )
-        _COMPACT_LAKES.add(path)
+        ),
+    )
     return spark.read.schema(compacted.schema).parquet(path)
 
 
@@ -1277,8 +1273,6 @@ def kmv_sketch_lake_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # monoid-agnostic, exactly like the r9 merge-seam trio.
 # ---------------------------------------------------------------------------
 
-_HLL_COMPACT_LAKES: set[str] = set()
-
 
 def _hll_compact_lake_path(sf_dir: str) -> str:
     return _lake_path(sf_dir, "events_hll_compacted")
@@ -1304,11 +1298,12 @@ def hll_compact_partials(
 def hll_compacted_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _hll_compact_lake_path(sf_dir)
     compacted = hll_compact_partials(hll_sketch_lake(spark, sf_dir))
-    if path not in _HLL_COMPACT_LAKES:
-        write_partitioned_lake(
+    write_once(
+        path,
+        lambda: write_partitioned_lake(
             compacted, path, ["grain_date"], sort_cols=["g", "idx"]
-        )
-        _HLL_COMPACT_LAKES.add(path)
+        ),
+    )
     return spark.read.schema(compacted.schema).parquet(path)
 
 
@@ -1508,8 +1503,6 @@ def hll_sketch_lake_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mirrors the r9 merge trio exactly (bottom-k / register-MAX / value sample).
 # ---------------------------------------------------------------------------
 
-_QS_COMPACT_LAKES: set[str] = set()
-
 
 def _qs_compact_lake_path(sf_dir: str) -> str:
     return _lake_path(sf_dir, "events_qs_compacted")
@@ -1552,11 +1545,12 @@ def qs_compact_partials(
 def qs_compacted_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _qs_compact_lake_path(sf_dir)
     compacted = qs_compact_partials(qs_sketch_lake(spark, sf_dir))
-    if path not in _QS_COMPACT_LAKES:
-        write_partitioned_lake(
+    write_once(
+        path,
+        lambda: write_partitioned_lake(
             compacted, path, ["grain_date"], sort_cols=["g", "h"]
-        )
-        _QS_COMPACT_LAKES.add(path)
+        ),
+    )
     return spark.read.schema(compacted.schema).parquet(path)
 
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
+from ..lifecycle import write_once
 from ..operators.rank import ntile_from_rank, with_global_ranks
 from ..sinks.parquet import write_partitioned_lake
 from ..sources.tpch import load_table
@@ -135,8 +136,6 @@ def corpus_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("shard_id")
     )
-    # the ranged intermediate persisted by with_global_ranks is query-scoped;
-    # the harness releases it after the consuming action (release_scoped_caches)
     return out
 
 
@@ -213,9 +212,6 @@ def lake_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 ROWS_PER_INFILE = 16  # docs per ingest file in the small-file before-lake
 APPLY_TARGET_BYTES = 16384  # compacted output bin target (test-scale)
 
-_COMPACT_APPLY_LAKES: set[str] = set()
-
-
 def _docs_with_infile(docs: DataFrame) -> DataFrame:
     """documents + the deterministic ingest-file id: per-source doc_id rank
     bucketed by ROWS_PER_INFILE. The per-source window is bounded by that
@@ -278,7 +274,7 @@ def compacted_docs_lakes(
             "doc_id", "text", "lang", "n_chars", "source"
         )
     )
-    if before_path not in _COMPACT_APPLY_LAKES:
+    def write_lakes() -> None:
         write_partitioned_lake(
             docs, before_path, ["source", "in_file"], sort_cols=["doc_id"]
         )
@@ -307,7 +303,8 @@ def compacted_docs_lakes(
         write_partitioned_lake(
             compacted, after_path, ["source", "bin_id"], sort_cols=["doc_id"]
         )
-        _COMPACT_APPLY_LAKES.add(before_path)
+
+    write_once(before_path, write_lakes)
     before = spark.read.schema(docs.schema).parquet(before_path)
     after_schema = docs.drop("in_file").withColumn(
         "bin_id", F.lit(0).cast("bigint")
@@ -592,9 +589,6 @@ def lake_zorder_extent_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Z-order keeps BOTH sums high simultaneously; a linear sort keeps one.
 # ---------------------------------------------------------------------------
 
-_ZORDER_APPLY_LAKES: set[str] = set()
-
-
 def _zorder_coded_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_id, zx, zy, event_type, value): the SAME coordinate recipe as
     lake_zorder_extent_stats (NULL coordinates route to cell 0 on both
@@ -631,7 +625,7 @@ def zordered_events_lakes(
     after_path = _lake_path(sf_dir, "events_zordered_files")
     coded = _zorder_coded_events(spark, sf_dir)
     schema = coded.withColumn("file_id", F.lit(0).cast("bigint")).schema
-    if before_path not in _ZORDER_APPLY_LAKES:
+    def write_lakes() -> None:
         ranked, _ = with_global_ranks(
             coded, [F.col("event_id")], rank_col="rn"
         )
@@ -662,9 +656,8 @@ def zordered_events_lakes(
         write_partitioned_lake(
             zdf, after_path, ["file_id"], sort_cols=["zx", "zy", "event_id"]
         )
-        # memoize only AFTER both writes completed (the _COMPACT_APPLY_LAKES
-        # / ADVICE-r11 ordering)
-        _ZORDER_APPLY_LAKES.add(before_path)
+
+    write_once(before_path, write_lakes)
     before = spark.read.schema(schema).parquet(before_path)
     after = spark.read.schema(schema).parquet(after_path)
     return before, after
@@ -913,7 +906,6 @@ def corpus_shard_route_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # physical stitched read.
 # ---------------------------------------------------------------------------
 
-_COMPACT_INCR_LAKES: set[str] = set()
 
 COMPACT_ARRIVAL_PRED = "doc_id % 10 = 9"  # the established ingest split
 
@@ -959,7 +951,7 @@ def incremental_compaction_lakes(
         "bin_id", F.lit(0).cast("bigint")
     ).schema
 
-    if base_small_p not in _COMPACT_INCR_LAKES:
+    def write_lakes() -> None:
         write_partitioned_lake(
             base, base_small_p, ["source", "in_file"], sort_cols=["doc_id"]
         )
@@ -1076,7 +1068,8 @@ def incremental_compaction_lakes(
         write_partitioned_lake(
             rewrite, rewrite_p, ["source", "bin_id"], sort_cols=["doc_id"]
         )
-        _COMPACT_INCR_LAKES.add(base_small_p)
+
+    write_once(base_small_p, write_lakes)
 
     return (
         spark.read.schema(base_schema).parquet(base_small_p),
@@ -1377,9 +1370,6 @@ ZORDER_ARRIVAL_SQL = (
     " WHERE event_id IS NOT NULL)"
 )
 
-_ZORDER_INCR_LAKES: set[str] = set()
-
-
 def zorder_cell_lakes(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -1430,7 +1420,7 @@ def zorder_cell_lakes(
     arrivals = coded.filter(F.col("_is_arr")).drop("_is_arr")
     corpus = coded.filter(~F.col("_is_arr")).drop("_is_arr")
     schema = corpus.schema
-    if corpus_path not in _ZORDER_INCR_LAKES:
+    def write_lakes() -> None:
         write_partitioned_lake(
             corpus, corpus_path, ["cell_id"], sort_cols=["zx", "zy", "event_id"]
         )
@@ -1457,8 +1447,8 @@ def zorder_cell_lakes(
             rewritten, incr_path, ["cell_id"],
             sort_cols=["zx", "zy", "event_id"],
         )
-        # memoize only AFTER both writes completed (ADVICE-r11 ordering)
-        _ZORDER_INCR_LAKES.add(corpus_path)
+
+    write_once(corpus_path, write_lakes)
     stored = spark.read.schema(schema).parquet(corpus_path)
     rewritten = spark.read.schema(schema).parquet(incr_path)
     return stored, rewritten, arrivals

@@ -380,7 +380,7 @@ MM_INCR_ORACLE_SQL = f"""
     oracle=MM_INCR_ORACLE_SQL,
 )
 def multimodal_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _scoped_persist
+    from ..lifecycle import scoped_persist
     from ..operators.multimodal import phash_cross_near_dups
 
     docs = load_table(spark, sf_dir, "documents").filter(
@@ -388,7 +388,7 @@ def multimodal_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFra
     )
     media = attach_media_columns(docs, "doc_id", "text")
     # ONE decode-seam pass for both sides: persist, then split by id
-    sig = _scoped_persist(phash_media(media))
+    sig = scoped_persist(phash_media(media))
     is_new = F.col("media_id") % 10 == 5
     pairs = phash_cross_near_dups(
         sig.filter(is_new),
@@ -825,7 +825,7 @@ _WIDE_INCR_ORACLE_SQL = f"""
 def multimodal_incremental_near_dup_wide(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.dedup import _scoped_persist
+    from ..lifecycle import scoped_persist
     from ..operators.multimodal import phash_wide_cross_near_dups
 
     docs = load_table(spark, sf_dir, "documents").filter(
@@ -834,7 +834,7 @@ def multimodal_incremental_near_dup_wide(
     )
     media = attach_media_columns(docs, "doc_id", "text")
     # ONE decode-seam pass for both sides: persist, then split by id
-    sig = _scoped_persist(phash_media_wide(media))
+    sig = scoped_persist(phash_media_wide(media))
     is_new = F.col("media_id") % 10 == MM_WIDE_ARR_RESIDUE
     pairs = phash_wide_cross_near_dups(
         sig.filter(is_new),
@@ -945,7 +945,7 @@ def multimodal_near_dup_wide_clusters(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from ..operators.cluster import connected_components
-    from ..operators.dedup import _scoped_persist
+    from ..lifecycle import scoped_persist
     from ..operators.multimodal import phash_wide_near_dup_pairs
 
     word_cols = [f"w{j}" for j in range(PHASH_WIDE_WORDS)]
@@ -955,8 +955,8 @@ def multimodal_near_dup_wide_clusters(
     )
     media = attach_media_columns(docs, "doc_id", "text")
     # ONE decode-seam pass feeds the collapse AND the member attach
-    sig = _scoped_persist(phash_media_wide(media))
-    dv = _scoped_persist(
+    sig = scoped_persist(phash_media_wide(media))
+    dv = scoped_persist(
         sig.groupBy(*word_cols, "px").agg(
             F.min("media_id").cast("bigint").alias("node")
         )
@@ -1055,7 +1055,7 @@ def multimodal_audio_dup_clusters(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from ..operators.cluster import connected_components
-    from ..operators.dedup import _scoped_persist
+    from ..lifecycle import scoped_persist
     from ..operators.multimodal import audio_fingerprint_media
 
     docs = load_table(spark, sf_dir, "documents").filter(
@@ -1064,14 +1064,14 @@ def multimodal_audio_dup_clusters(
     media = attach_media_columns(docs, "doc_id", "text")
     # ONE decode-seam pass; renamed to the (phash, px) shape the shared
     # blocking/verify operator consumes (the pair twin's convention)
-    sig = _scoped_persist(
+    sig = scoped_persist(
         audio_fingerprint_media(media).select(
             "media_id",
             F.col("afp").alias("phash"),
             F.col("energy").alias("px"),
         )
     )
-    dv = _scoped_persist(
+    dv = scoped_persist(
         sig.groupBy("phash", "px").agg(
             F.min("media_id").cast("bigint").alias("node")
         )

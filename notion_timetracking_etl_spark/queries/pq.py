@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
+from ..lifecycle import session_cached
 from ..operators.pq import PqModel, pq_fit, pq_search
 from ..sources.tpch import load_table
 from .helpers import ordered_small
@@ -23,26 +24,25 @@ DIMS = 64
 TOPK = 10
 SHORTLIST = 100
 
-# Session-cached fitted PQ codebooks, mirroring queries/kmeans._MODEL_CACHE:
-# in production the quantizer is trained ONCE and amortized over every
-# search, so per-query re-training would misrepresent the operator's cost
-# model. Deterministic fit → cached and fresh models are identical, so
-# correctness hashes are unaffected. NOT evicted by release_scoped_caches
-# (scoped=False trainings); spark.catalog.clearCache() must stay banned in
-# shared harnesses (see bench.py note).
-_PQ_MODEL_CACHE: dict[tuple[str, str], PqModel] = {}
-
-
 def fitted_pq_model(spark: SparkSession, sf_dir: str) -> PqModel:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PQ_MODEL_CACHE.get(key)
-    if cached is None:
-        emb = load_embeddings(spark, sf_dir)
-        cached = pq_fit(
-            emb, m=M_SUBS, k=PQ_K, iters=PQ_ITERS, dims=DIMS, scoped=False
-        )
-        _PQ_MODEL_CACHE[key] = cached
-    return cached
+    """The PQ codebooks, trained once per corpus (session scope): in
+    production the quantizer is trained ONCE and amortized over every
+    search, so per-query re-training would misrepresent the operator's cost
+    model. The fit is deterministic, so cached and fresh models hash the
+    same."""
+    return session_cached(
+        spark,
+        sf_dir,
+        "pq_model",
+        lambda: pq_fit(
+            load_embeddings(spark, sf_dir),
+            m=M_SUBS,
+            k=PQ_K,
+            iters=PQ_ITERS,
+            dims=DIMS,
+            scoped=False,
+        ),
+    )
 
 _FIXED = "CAST(floor((v.val-c.val)*(v.val-c.val)*1e12 + 0.5) AS DECIMAL(38,0))"
 

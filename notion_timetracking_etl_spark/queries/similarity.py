@@ -886,7 +886,7 @@ def knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         srp_signature_bands,
     )
 
-    from ..operators.dedup import _scoped_persist, fan_out
+    from ..lifecycle import fan_out, scoped_persist
 
     planes = srp_planes(KNN_MAX_BITS, dims=EMB_DIMS)
     # Scoped persist: base feeds the bits scalar, the coarse projection AND
@@ -895,7 +895,7 @@ def knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # embeddings scan + signature subtree 3x upstream of the counted
     # persist). fan_out: the fill's 32-plane fold would otherwise run
     # single-task off the sub-split-size embeddings scan (guide §2).
-    base = _scoped_persist(
+    base = scoped_persist(
         fan_out(load_embeddings(spark, sf_dir), "vec_id").select(
             "vec_id",
             "embedding",
@@ -942,7 +942,7 @@ def knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of this operator; without it each consumer recomputes the signatures.
     # On a cluster this is the checkpoint of the routing table; in-memory
     # persistence is the local[] equivalent (spills, scope-released).
-    counted = _scoped_persist(
+    counted = scoped_persist(
         coarse.join(ref, "ccell")
         .withColumn("cell", F.expr("substring(sig, 1, blen)"))
         .drop("sig", "bits", "ccell", "blen")
@@ -1096,7 +1096,7 @@ def knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def embedding_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _scoped_persist
+    from ..lifecycle import scoped_persist
     from ..operators.similarity import norm_sq
 
     emb = load_embeddings(spark, sf_dir)
@@ -1124,10 +1124,10 @@ def embedding_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stats feeds two consumers (sa/sc_) and means feeds two (ma/mc) —
     # persist both tiny tables (2 and 2x64 rows) so the corpus scan and
     # the per-dimension explode run ONCE, not once per consumer
-    stats = _scoped_persist(stats)
+    stats = scoped_persist(stats)
     # per-dimension floor-micro sums -> floor-divided micro MEAN vectors:
     # |mean| <= ~1e7, so the 64-term dot/norm sums below stay exact int64
-    means = _scoped_persist(
+    means = scoped_persist(
         base.select("cohort", F.posexplode("embedding").alias("pos", "val"))
         .select(
             "cohort",

@@ -190,9 +190,6 @@ def streaming_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_table(stream).orderBy("window_start", "event_type")
 
 
-_INGEST_LAKES: dict[str, str] = {}  # sf_dir -> drained lake path (this process)
-
-
 @register(
     "streaming_lake_ingest",
     "S6-analog-stream,S8-analog",
@@ -219,10 +216,10 @@ def streaming_lake_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pyspark.sql.functions as F
 
+    from ..lifecycle import write_once
     from ..sinks.parquet import stream_to_parquet_lake
 
-    path = _INGEST_LAKES.get(sf_dir)
-    if path is None:
+    def drain() -> str:
         # fresh base per (process, sf_dir): no stale-lake risk across driver
         # rounds; within the process, the checkpoint makes re-drains no-ops
         base = tempfile.mkdtemp(prefix="sg_stream_lake_")
@@ -233,7 +230,9 @@ def streaming_lake_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_to_parquet_lake(
             stream, path, f"{base}/ckpt", partition_cols=("event_date",)
         )
-        _INGEST_LAKES[sf_dir] = path
+        return path
+
+    path = write_once(("streaming_lake_ingest", sf_dir), drain)
     ev = read_events_stream(spark, sf_dir)  # schema donor (batch twin below)
     lake = spark.read.schema(
         ev.schema.add("event_date", "date")
@@ -300,9 +299,6 @@ def streaming_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CDC_STAGING: dict[str, tuple[str, str]] = {}
-
-
 @register(
     "streaming_cdc_upsert",
     "S8-analog-stream,A6-analog",
@@ -351,12 +347,12 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pyspark.sql.functions as F
 
+    from ..lifecycle import write_once
     from ..sources.tpch import load_table
     from ..streaming import upsert_drain
     from .cdc import changelog_from_orders
 
-    changelog_dir = _CDC_STAGING.get(sf_dir)
-    if changelog_dir is None:
+    def stage() -> str:
         changelog_dir = tempfile.mkdtemp(prefix="sg_cdc_upsert_") + "/changelog"
         changelog = changelog_from_orders(load_table(spark, sf_dir, "orders"))
         # one file per seq wave -> maxFilesPerTrigger=1 yields one
@@ -365,7 +361,9 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             changelog.filter(F.col("seq") == seq).coalesce(1).write.mode(
                 "append"
             ).parquet(changelog_dir)
-        _CDC_STAGING[sf_dir] = changelog_dir
+        return changelog_dir
+
+    changelog_dir = write_once(("streaming_cdc_upsert", sf_dir), stage)
     # checkpoint is FRESH per drain: reusing one would mark the backlog
     # consumed and turn a re-run into a zero-batch no-op (acc = None)
     final, _ = upsert_drain(
@@ -853,7 +851,7 @@ def streaming_semdedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    from ..operators.dedup import _scoped_persist
+    from ..lifecycle import scoped_persist
     from ..operators.kmeans import _as_double_vec, _assign
     from ..operators.similarity import norm_sq, srp_planes, srp_signature_bands
     from ..streaming.rollup import _is_directory
@@ -888,7 +886,7 @@ def streaming_semdedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     mem = _refined_cells(spark, sf_dir)
     is_new = F.col("vec_id") % 10 == 9
     cw = Window.partitionBy("cell").orderBy("vec_id")
-    corpus = _scoped_persist(
+    corpus = scoped_persist(
         mem.filter(~is_new)
         .withColumn("crn", F.row_number().over(cw))
         .filter(F.col("crn") <= SEM_MAX_CELL)
@@ -989,7 +987,7 @@ def streaming_multimodal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pyspark.sql.functions as F
 
-    from ..operators.dedup import _scoped_persist
+    from ..lifecycle import scoped_persist
     from ..operators.multimodal import (
         PHASH_MIN_CHARS,
         attach_media_columns,
@@ -1006,7 +1004,7 @@ def streaming_multimodal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = F.col("doc_id") % 10 == 5
     # the persisted ingest state: corpus-side signatures, decoded ONCE
     docs = load_table(spark, sf_dir, "documents").filter(visual & ~is_new)
-    corpus_sig = _scoped_persist(
+    corpus_sig = scoped_persist(
         phash_media(attach_media_columns(docs, "doc_id", "text"))
     )
 

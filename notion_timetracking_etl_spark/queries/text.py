@@ -529,7 +529,7 @@ def text_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort = F.when(F.col("doc_id") % 10 == 5, F.lit("arrivals")).otherwise(
         F.lit("corpus")
     )
-    from ..operators.dedup import _scoped_persist
+    from ..lifecycle import scoped_persist
 
     toks = docs.select(
         cohort.alias("cohort"), F.explode(words(F.col("text"))).alias("token")
@@ -537,7 +537,7 @@ def text_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts feeds three consumers (head, arr, tot) — persist the
     # vocabulary-sized table so the token explode over the corpus runs
     # ONCE; the cohort totals are then a sum over counts, not a rescan
-    counts = _scoped_persist(
+    counts = scoped_persist(
         toks.groupBy("cohort", "token").agg(
             F.count(F.lit(1)).cast("bigint").alias("cnt")
         )

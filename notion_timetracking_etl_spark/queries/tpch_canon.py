@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
-from ..operators.dedup import _scoped_persist
+from ..lifecycle import scoped_persist
 from ..sources.tpch import load_table
 from .helpers import dsum, dsum_sql, ordered_small
 from .registry import register
@@ -415,7 +415,7 @@ def tpch_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     )
-    revenue = _scoped_persist(
+    revenue = scoped_persist(
         li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
             dsum(F.expr(_REVENUE)).alias("total_revenue")
         )
@@ -684,7 +684,7 @@ def tpch_min_balance_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").filter(
         F.col("p_size").between(10, 15) & (F.col("p_type") == "ECONOMY")
     ).select("p_partkey", "p_name")
-    cand = _scoped_persist(
+    cand = scoped_persist(
         part.join(ps, part.p_partkey == ps.l_partkey)
         .join(F.broadcast(eu), ps.l_suppkey == eu.s_suppkey)
         .select("p_partkey", "p_name", "s_suppkey", "s_name", "n_name",

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
-from ..operators.dedup import release_scoped_caches
+from ..lifecycle import release_scoped_caches
 from ..operators.rank import ntile_from_rank, with_global_ranks
 
 

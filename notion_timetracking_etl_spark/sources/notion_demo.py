@@ -79,11 +79,6 @@ class DemoNotionTransport:
         }
 
 
-def demo_transport() -> DemoNotionTransport:
-    """The ``module:callable`` factory used in DataSource options."""
-    return DemoNotionTransport()
-
-
 def small_demo_transport() -> DemoNotionTransport:
     """A 5-page variant so driver-vs-datasource equality tests stay fast."""
     return DemoNotionTransport(pages_per_database=5)

@@ -136,12 +136,8 @@ def compare_query(spark, con, spec, sf_dir: str) -> ParityResult:
     s_cols = [c.lower() for c in sdf.columns]
     s_types = {c.lower(): _norm_spark_type(t) for c, t in sdf.dtypes}
     s_rows = [tuple(r) for r in sdf.collect()]
-    # Intra-query persists (shingle/candidate tables) are scoped to the plan
-    # execution above; release exactly those so a many-query session doesn't
-    # accumulate (clearCache would also evict session-lifetime shared caches).
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    # free the query-scoped intermediates (never clearCache(): see lifecycle)
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
 
     release_scoped_caches()
     if spec.oracle is None:

@@ -57,9 +57,7 @@ def test_cc_storage_flat_across_runs(spark, sf_dir):
     # bench/parity run many queries in one session and call
     # release_scoped_caches between them — CC's checkpoints (which plain
     # unpersist() cannot free) must not accumulate across runs.
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
 
     def persistent_ids():
         return set(
@@ -139,9 +137,7 @@ def test_quantile_approx_flags_green_and_counts_match_exact(spark, sf_dir):
 
 
 def test_pagerank_conserves_mass_and_ranks_hubs(spark):
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.pagerank import pagerank
 
     # star: hub 1 linked to 2..6 — the hub must dominate; undirected graph
@@ -158,9 +154,7 @@ def test_pagerank_conserves_mass_and_ranks_hubs(spark):
 
 
 def test_pagerank_deterministic_across_runs(spark):
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.pagerank import pagerank
 
     edges = _edges(spark, [(1, 2), (2, 3), (3, 4), (1, 4), (4, 5)])

@@ -236,16 +236,18 @@ def test_incremental_lsh_finds_planted_cross_dup(spark):
         [(1, base), (2, other), (3, other + " more"), (19, base + " extra")],
         "doc_id long, text string",
     )
+    from notion_timetracking_etl_spark.lifecycle import (
+        release_scoped_caches,
+        scoped_persist,
+    )
     from notion_timetracking_etl_spark.operators.dedup import (
-        _scoped_persist,
         jaccard_verify,
         lsh_cross_candidates,
         minhash_signatures,
-        release_scoped_caches,
         shingle_table,
     )
 
-    sh = _scoped_persist(shingle_table(docs, "doc_id", "text", 3))
+    sh = scoped_persist(shingle_table(docs, "doc_id", "text", 3))
     is_new = F.col("doc") % 10 == 9
     cands = lsh_cross_candidates(
         minhash_signatures(sh.filter(is_new), num_hashes=12),
@@ -319,9 +321,7 @@ def test_embedding_family_hostile_vectors(spark, tmp_path):
 
     import duckdb
 
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.queries import REGISTRY
     from notion_timetracking_etl_spark.queries.similarity import (
         VALID_EMB_PRED_SQL,
@@ -572,7 +572,7 @@ def test_shard_manifest_balanced_contiguous_disjoint(spark):
     """NTILE sharding over the sha256 permutation: shard sizes differ by at
     most 1, cover every document, and own disjoint ORDERED hash ranges (a
     trainer can address any shard by key range alone)."""
-    from notion_timetracking_etl_spark.operators.dedup import release_scoped_caches
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.queries.layout import (
         N_SHARDS,
         corpus_shard_manifest,
@@ -625,7 +625,7 @@ def test_zorder_prunes_on_both_dims_linear_only_one(spark):
     (On extent AREA alone a single-dim sort can match z-order — the win is
     two-sided prunability, not area.) Run at sf0.01 so both dims are dense
     (149 users -> zx covers the full 0..31 range)."""
-    from notion_timetracking_etl_spark.operators.dedup import release_scoped_caches
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.rank import with_global_ranks
     from notion_timetracking_etl_spark.queries.layout import ZORDER_BITS, _morton_col
     from notion_timetracking_etl_spark.sources.tpch import load_table
@@ -694,7 +694,7 @@ def test_keep_best_quality_picks_cluster_max(spark):
     """The kept representative is a member of its cluster and no member of
     that cluster has strictly higher quality (lower doc id breaks ties) —
     cross-checked against the independent dedup_clusters assignment."""
-    from notion_timetracking_etl_spark.operators.dedup import release_scoped_caches
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.text import quality_score
     from notion_timetracking_etl_spark.queries.clusters import (
         dedup_clusters,
@@ -861,7 +861,7 @@ def test_shard_routing_respects_frozen_boundaries(spark):
     and batch totals are conserved."""
     import hashlib
 
-    from notion_timetracking_etl_spark.operators.dedup import release_scoped_caches
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.queries.layout import (
         N_SHARDS,
         corpus_shard_route_batch,

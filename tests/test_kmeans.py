@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from notion_timetracking_etl_spark.operators.dedup import release_scoped_caches
+from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
 from notion_timetracking_etl_spark.operators.kmeans import kmeans
 from notion_timetracking_etl_spark.queries import REGISTRY
 from notion_timetracking_etl_spark.sources.tpch import load_table
@@ -90,9 +90,7 @@ def test_pq_rerank_recall_beats_adc_only(spark):
     # Thresholds leave margin for driver-side testdata regeneration.
     import numpy as np
 
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.pq import (
         pq_adc_topk,
         pq_fit,

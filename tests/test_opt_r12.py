@@ -196,18 +196,15 @@ def test_knn_graph_stats_persists_srp_base(spark, sf_dir):
     """Building the query must register the SRP-signature base as a scoped
     persist (plus the counted routing table) so the 32-plane fold runs once,
     not once per consumer."""
-    from notion_timetracking_etl_spark.operators.dedup import (
-        _SCOPED_CACHES,
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark import lifecycle
 
-    release_scoped_caches()
-    before = len(_SCOPED_CACHES)
+    lifecycle.release_scoped_caches()
+    before = len(lifecycle._SCOPED_CACHES)
     df = REGISTRY["knn_graph_stats"].spark(spark, sf_dir)
-    added = _SCOPED_CACHES[before:]
+    added = lifecycle._SCOPED_CACHES[before:]
     assert len(added) >= 2, "expected base + counted scoped persists"
     # the first registered persist is the base: it must carry the raw
     # signature column the downstream consumers substring
     assert "sig" in added[0].columns and "nrm" in added[0].columns
     df.count()  # the plan stays executable with the persists in place
-    release_scoped_caches()
+    lifecycle.release_scoped_caches()

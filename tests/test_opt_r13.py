@@ -13,7 +13,7 @@ refactor cannot silently undo it:
   untouched (the scale-adaptivity claim);
 - the semantic-gate routing lake is session-materialized once
   (sem_state_base_cached): flat LogicalRDD leaf, shared by the semdedup
-  cells and the semgate sweep, freed by release_session_models;
+  cells and the semgate sweep, freed by release_session_caches;
 - srp_near_dup_pairs keeps its bucket/norm tables scoped-persisted (the
   32-plane fold ran twice without them).
 """
@@ -24,11 +24,8 @@ import pyspark.sql.functions as F
 import pytest
 
 from notion_timetracking_etl_spark.operators.cluster import connected_components
-from notion_timetracking_etl_spark.operators.dedup import (
-    _SCOPED_CACHES,
-    fan_out,
-    release_scoped_caches,
-)
+from notion_timetracking_etl_spark import lifecycle
+from notion_timetracking_etl_spark.lifecycle import fan_out, release_scoped_caches
 
 
 def test_connected_components_is_conf_reentrant(spark):
@@ -91,7 +88,7 @@ def test_fan_out_widens_narrow_scans_only(spark, sf_dir):
 def test_sem_state_base_cached_is_flat_and_released(spark, sf_dir):
     from notion_timetracking_etl_spark.queries import kmeans as qk
 
-    qk.release_session_models()
+    lifecycle.release_session_caches()
     base = qk.sem_state_base_cached(spark, sf_dir)
     # one materialized flat leaf, session-cached
     assert (
@@ -117,8 +114,8 @@ def test_sem_state_base_cached_is_flat_and_released(spark, sf_dir):
     got = {(r.vec_id, r.cid, r.sig) for r in base.select("vec_id", "cid", "sig").collect()}
     want = {(r.vec_id, r.cid, r.sig) for r in fresh.select("vec_id", "cid", "sig").collect()}
     assert got == want
-    qk.release_session_models()
-    assert qk._SEM_BASE_CACHE == {}
+    lifecycle.release_session_caches()
+    assert not lifecycle._SESSION_CACHE
     release_scoped_caches()
 
 
@@ -134,9 +131,9 @@ def test_srp_near_dup_pairs_persists_fold_tables(spark):
             "transform(sequence(1, 64), i -> cast(pmod(id * i, 7) - 3 as float))"
         ).alias("embedding"),
     )
-    before = len(_SCOPED_CACHES)
+    before = len(lifecycle._SCOPED_CACHES)
     df = srp_near_dup_pairs(corpus, bits=32, bands=4, threshold=0.3)
-    added = _SCOPED_CACHES[before:]
+    added = lifecycle._SCOPED_CACHES[before:]
     assert len(added) >= 2, "expected entries + normed scoped persists"
     df.count()  # plan executable with the persists in place
     release_scoped_caches()

@@ -267,7 +267,7 @@ def test_layout_manifest_scans_never_read_text(spark, sf_dir):
         for s in schemas:
             cols = {c.split(":")[0] for c in s.split(",") if c}
             assert cols <= expected, f"{name}: scan reads {cols - expected}"
-        from notion_timetracking_etl_spark.operators.dedup import (
+        from notion_timetracking_etl_spark.lifecycle import (
             release_scoped_caches,
         )
 
@@ -279,7 +279,7 @@ def test_zorder_rank_has_no_single_partition_window(spark, sf_dir):
     the distributed ranking operator (range partition + per-partition
     row_number), never `Window [.. ORDER BY ..]` with no PARTITION BY
     (a single-task global sort)."""
-    from notion_timetracking_etl_spark.operators.dedup import release_scoped_caches
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
 
     plan = plan_of(spark, sf_dir, "lake_zorder_extent_stats")
     release_scoped_caches()
@@ -332,9 +332,7 @@ def test_maintenance_stats_scans_are_column_pruned(spark, sf_dir):
         for s in schemas:
             cols = {c.split(":")[0] for c in s.split(",") if c}
             assert cols <= cols_allowed, f"{name}: scan reads {cols - cols_allowed}"
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
 
     release_scoped_caches()
 
@@ -342,9 +340,7 @@ def test_maintenance_stats_scans_are_column_pruned(spark, sf_dir):
 def test_equidepth_rank_has_no_single_partition_window(spark, sf_dir):
     """Histogram bucketing ranks O(table) rows — it must ride the
     distributed range-partitioned rank, never an empty-PARTITION-BY window."""
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
 
     plan = plan_of(spark, sf_dir, "catalog_equidepth_histograms")
     release_scoped_caches()

@@ -11,7 +11,7 @@ from hypothesis import given, settings, strategies as st
 import pyspark.sql.functions as F
 
 from notion_timetracking_etl_spark.operators.cluster import connected_components
-from notion_timetracking_etl_spark.operators.dedup import release_scoped_caches
+from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
 from notion_timetracking_etl_spark.operators.sampling import (
     hash_draw,
     topk_per_group,
@@ -260,9 +260,7 @@ def test_registry_tolerates_empty_inputs(spark, tmp_path):
     from notion_timetracking_etl_spark.operators.cluster import (
         connected_components,
     )
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.pagerank import pagerank
 
     empty = spark.createDataFrame([], "a long, b long")

@@ -60,9 +60,9 @@ def test_multiword_blocking_complete_at_random_configs(spark, cfg, seed):
     for i in range(8, 18):
         rows.append((i, *_to_words(rng.getrandbits(n_bits), n_words)))
 
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.dedup import (
         hamming_pairs_from_word_sigs,
-        release_scoped_caches,
     )
 
     word_cols = [f"w{j}" for j in range(n_words)]

@@ -133,9 +133,9 @@ def test_simhash_summary_equals_pair_graph_closure(spark, sf_dir):
 def test_simhash_summary_mega_dup_fixture(spark):
     """A mega-duplicate pile (many docs, ONE text) plus a near-miss: the
     summary emits O(clusters) rows while the doc-pair space is quadratic."""
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.dedup import (
         hamming_pairs_from_sigs,
-        release_scoped_caches,
         simhash_from_hashes,
         word_hashes,
     )
@@ -159,9 +159,7 @@ def test_embedding_summary_degenerate_groups(spark):
     """Exact-dup vectors cluster through the group link; zero-norm groups
     (self-cosine NULL) stay singletons; NULL-label vectors stay singletons
     even when byte-identical."""
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.similarity import (
         cosine,
         norm_sq,
@@ -251,9 +249,9 @@ def test_multiword_pigeonhole_level_invariance(spark):
     level — including blocks that straddle 64-bit word boundaries."""
     import random
 
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.dedup import (
         hamming_pairs_from_word_sigs,
-        release_scoped_caches,
     )
 
     rng = random.Random(11)
@@ -368,9 +366,7 @@ def test_ann_model_sweep_emptied_cell_dropped(spark, tmp_path):
     refreshed persisted model (the Lloyd's carry-old fallback would
     re-persist deleted-data influence), untouched cells must round-trip
     byte-identically, and no tombstone may survive in the index."""
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.kmeans import kmeans_fit
     from notion_timetracking_etl_spark.operators.model_store import (
         save_kmeans_model,
@@ -420,9 +416,7 @@ def test_ann_model_sweep_refit_bounded_to_touched(spark, tmp_path):
     """Partial refit touches ONLY the tombstoned cells' survivors: refit
     mass equals the touched cells' surviving membership, and untouched
     centroids persist byte-identically."""
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.kmeans import kmeans_fit
     from notion_timetracking_etl_spark.operators.model_store import (
         save_kmeans_model,
@@ -458,9 +452,7 @@ def test_semgate_sweep_bits_threshold_crossing(spark):
     and the swept state still fingerprint-equals the honest rebuild."""
     import hashlib
 
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.kmeans import kmeans_fit
     from notion_timetracking_etl_spark.queries.forget import (
         semgate_forget_frames,
@@ -496,9 +488,7 @@ def test_ann_refresh_sampled_recall_agrees_with_full(spark, sf_dir):
     full-corpus truth on the driver corpus: same recovered verdict, recall
     estimates within a pinned bound (the sample is uniform, so this is a
     plain sampling-error bound, not a semantics change)."""
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.queries.kmeans import (
         ANN_AUDIT_K,
         ann_refresh_frames,
@@ -525,9 +515,7 @@ def test_ann_model_sweep_detects_lost_untouched_cell(spark, tmp_path):
     """r11 review finding: an untouched cell MISSING from the persisted
     fresh model must flip frozen_cells_unchanged red (NULL comparisons
     coalesce to False — min() alone would skip them)."""
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.kmeans import kmeans_fit
     from notion_timetracking_etl_spark.operators.model_store import (
         save_kmeans_model,
@@ -575,10 +563,10 @@ def test_multiword_pigeonhole_rejects_wide_blocks(spark):
     fail with a diagnosable ValueError at plan time (LongType mask/shift
     arithmetic cannot express it), and the adaptive path floors the level
     so it never constructs one."""
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.dedup import (
         hamming_pairs_from_word_sigs,
         pigeonhole_buckets_multi,
-        release_scoped_caches,
     )
 
     sig = spark.createDataFrame(

@@ -30,10 +30,10 @@ def test_multiword_pigeonhole_deep_levels_execute(spark):
     EXACTLY the brute-force pair set."""
     import random
 
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.dedup import (
         hamming_pairs_from_word_sigs,
         pigeonhole_buckets_multi,
-        release_scoped_caches,
     )
 
     rng = random.Random(12)
@@ -128,9 +128,7 @@ def test_cluster_summary_equals_pair_graph_closure(
 ):
     """(cluster_rep, cluster_size) from the O(clusters) summary == the
     closure computed the expensive way from the registered pair twin."""
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.multimodal import (
         AUDIO_FP_MIN_CHARS,
         PHASH_WIDE_MIN_CHARS,

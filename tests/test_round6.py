@@ -419,8 +419,6 @@ def test_containment_verify_operator_and_registered_pairs(spark, sf_dir):
 
 
 def test_schema_drift_report_ground_truth(spark, tmp_path):
-    import notion_timetracking_etl_spark.queries.lake as lake_mod
-
     d = dt.datetime(2024, 1, 1)
     orders = spark.createDataFrame(
         [(k, k, "O", 10.0 * k, d, "1-URGENT") for k in (1, 2, 3, 4)],
@@ -439,8 +437,6 @@ def test_schema_drift_report_ground_truth(spark, tmp_path):
     # gen1 = even keys (v1 schema, NULL discounts); gen2 = odd keys with
     # discount = floor(price * 0.1 * 1e6): 10.0 -> 1_000_000, 30.0 -> 3_000_000
     assert got == {1: (2, 2, 0), 2: (2, 0, 4_000_000)}
-    # staged lakes are keyed by sf_dir: drop this tmp one for other tests
-    lake_mod._DRIFT_LAKES.clear()
 
 
 def test_knn_graph_invariants(spark, sf_dir):

@@ -191,37 +191,48 @@ def test_null_event_type_group_is_audited_not_dropped(spark, null_type_lake):
 
 
 def test_release_session_models_frees_and_refits(spark, sf_dir):
+    from notion_timetracking_etl_spark import lifecycle
     from notion_timetracking_etl_spark.queries import kmeans as km
 
-    km.release_session_models()  # clean slate
+    lifecycle.release_session_caches()  # clean slate
     asg, _cent = km.fitted_model(spark, sf_dir)
     mem = km._refined_cells(spark, sf_dir)
     n_asg, n_mem = asg.count(), mem.count()
-    assert km._MODEL_CACHE and km._CELLS_CACHE
-    km.release_session_models()
-    assert not km._MODEL_CACHE and not km._CELLS_CACHE
+    corpus = (spark.sparkContext.applicationId, sf_dir)
+    assert {"kmeans_model", "refined_cells"} <= set(lifecycle._SESSION_CACHE[corpus])
+    lifecycle.release_session_caches()
+    assert not lifecycle._SESSION_CACHE
     # a released model re-fits cleanly (no dangling checkpoint references)
     asg2, _ = km.fitted_model(spark, sf_dir)
     assert asg2.count() == n_asg
     assert km._refined_cells(spark, sf_dir).count() == n_mem
-    km.release_session_models()
+    lifecycle.release_session_caches()
 
 
-def test_model_caches_are_lru_bounded():
-    from notion_timetracking_etl_spark.queries import kmeans as km
+def test_model_caches_are_lru_bounded(monkeypatch):
+    from types import SimpleNamespace
 
-    freed: list[str] = []
-    cache: dict = {}
-    for i in range(km._MODEL_MAX_ENTRIES + 3):
-        cache[("app", f"sf{i}")] = f"model{i}"
-        km._evict_lru(cache, freed.append)
-    assert len(cache) == km._MODEL_MAX_ENTRIES
-    assert freed == ["model0", "model1", "model2"]
-    # a read refreshes recency: the re-read entry survives the next insert
-    assert km._cache_get(cache, ("app", "sf3")) == "model3"
-    cache[("app", "new")] = "modelN"
-    km._evict_lru(cache, freed.append)
-    assert ("app", "sf3") in cache and freed[-1] == "model4"
+    from notion_timetracking_etl_spark import lifecycle
+
+    lifecycle.release_session_caches()
+    freed: list[dict] = []
+    monkeypatch.setattr(lifecycle, "_free_all", freed.extend)
+    app = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app"))
+    for i in range(lifecycle.MAX_CORPORA + 3):
+        lifecycle.session_cached(app, f"sf{i}", "model", lambda i=i: f"model{i}")
+    assert len(lifecycle._SESSION_CACHE) == lifecycle.MAX_CORPORA
+    assert freed == [{"model": "model0"}, {"model": "model1"}, {"model": "model2"}]
+    # a read refreshes recency: the re-read corpus survives the next insert
+    assert lifecycle.session_cached(app, "sf3", "model", lambda: "refit") == "model3"
+    lifecycle.session_cached(app, "new", "model", lambda: "modelN")
+    assert ("app", "sf3") in lifecycle._SESSION_CACHE
+    assert freed[-1] == {"model": "model4"}
+    # evicting a corpus frees all of its entries together
+    lifecycle.session_cached(app, "sf5", "cells", lambda: "cells5")
+    for i in range(lifecycle.MAX_CORPORA):
+        lifecycle.session_cached(app, f"more{i}", "model", lambda: "m")
+    assert {"model": "model5", "cells": "cells5"} in freed
+    lifecycle.release_session_caches()
 
 
 # ---------------------------------------------------------------------------
@@ -338,10 +349,10 @@ def test_streaming_semdedup_gate_split_equals_batch(spark, sf_dir, tmp_path):
     alone, so any split unions to the same set)."""
     import pyspark.sql.functions as F
 
-    from notion_timetracking_etl_spark.operators.dedup import (
+    from notion_timetracking_etl_spark.lifecycle import (
         release_scoped_caches,
+        release_session_caches,
     )
-    from notion_timetracking_etl_spark.queries import kmeans as km
 
     # stage a lake whose embeddings table is a DIRECTORY of 3 files —
     # maxFilesPerTrigger=1 then forces 3 micro-batches
@@ -358,7 +369,7 @@ def test_streaming_semdedup_gate_split_equals_batch(spark, sf_dir, tmp_path):
             os.symlink(f"{SRC_SF}/{t}.parquet", str(d / f"{t}.parquet"))
 
     lake = str(d)
-    km.release_session_models()  # fresh fit for the staged lake
+    release_session_caches()  # fresh fit for the staged lake
     try:
         streamed = {
             tuple(r)
@@ -371,7 +382,7 @@ def test_streaming_semdedup_gate_split_equals_batch(spark, sf_dir, tmp_path):
         }
         release_scoped_caches()
     finally:
-        km.release_session_models()
+        release_session_caches()
     assert streamed == batch and streamed
 
 
@@ -412,9 +423,7 @@ def test_phash_identical_payloads_hamming_zero(spark, tmp_path):
             os.symlink(f"{SRC_SF}/{t}.parquet", str(d / f"{t}.parquet"))
 
     rows = {(r.a, r.b): r for r in multimodal_near_dup(spark, str(d)).collect()}
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
 
     release_scoped_caches()
     # identical payloads: hamming 0, pixel distance 0 — across media types
@@ -518,9 +527,7 @@ def test_streaming_multimodal_gate_split_equals_batch(spark, sf_dir, tmp_path):
     on (arrival, corpus) alone, so any split unions to the same set)."""
     import pyspark.sql.functions as F
 
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
 
     # stage a lake whose documents table is a DIRECTORY of 3 files —
     # maxFilesPerTrigger=1 then forces 3 micro-batches
@@ -586,9 +593,7 @@ def test_audio_fp_identical_payloads_hamming_zero(spark, tmp_path):
     con.close()
     lake = _clone_lake(tmp_path, {"documents": out})
 
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
 
     try:
         rows = {
@@ -667,9 +672,7 @@ def test_multimodal_fingerprints_unicode_hostile_parity(spark, tmp_path):
     con.close()
     lake = _clone_lake(tmp_path, {"documents": out})
 
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
 
     con = duck_connection(lake)
     try:
@@ -745,7 +748,7 @@ def test_ann_index_drift_flags_hot_and_cold_cells(spark, tmp_path):
     cover both; every arrival (vec_id % 10 = 9) lands in cluster B."""
     import random
 
-    from notion_timetracking_etl_spark.queries import kmeans as km
+    from notion_timetracking_etl_spark.lifecycle import release_session_caches
     from notion_timetracking_etl_spark.queries.similarity import EMB_DIMS
 
     rng = random.Random(20260817)
@@ -780,7 +783,7 @@ def test_ann_index_drift_flags_hot_and_cold_cells(spark, tmp_path):
     con.close()
     lake = _clone_lake(tmp_path, {"embeddings": out})
 
-    km.release_session_models()  # fresh fit for the staged lake
+    release_session_caches()  # fresh fit for the staged lake
     try:
         got = REGISTRY["ann_index_drift"].spark(spark, lake).collect()
         assert sum(r.n_members for r in got) == len(rows)
@@ -799,7 +802,7 @@ def test_ann_index_drift_flags_hot_and_cold_cells(spark, tmp_path):
         finally:
             con.close()
     finally:
-        km.release_session_models()
+        release_session_caches()
 
 
 def test_text_drift_flags_shifted_vocabulary(spark, tmp_path):

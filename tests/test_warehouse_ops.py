@@ -103,9 +103,7 @@ def test_global_ranks_equal_builtin_window_functions(spark):
     # bit-for-bit, across sizes that exercise every ntile remainder class
     from pyspark.sql import Window
 
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.rank import (
         ntile_from_rank,
         with_global_ranks,
@@ -139,9 +137,7 @@ def test_global_ranks_equal_builtin_window_functions(spark):
 def test_global_prefix_sum_matches_builtin_running_total(spark):
     from pyspark.sql import Window
 
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.rank import (
         with_global_prefix_sum,
     )
@@ -164,9 +160,7 @@ def test_global_prefix_sum_all_null_partition(spark):
     """A range partition whose values are ALL NULL sums to NULL; the driver-
     side offset fold must treat it as 0, not raise TypeError. Keys are
     clustered so at least one partition is entirely NULL-valued."""
-    from notion_timetracking_etl_spark.operators.dedup import (
-        release_scoped_caches,
-    )
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.rank import (
         with_global_prefix_sum,
     )

@@ -21,9 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from notion_timetracking_etl_spark.operators.dedup import (  # noqa: E402
-    release_scoped_caches,
-)
+from notion_timetracking_etl_spark.lifecycle import release_scoped_caches  # noqa: E402
 from notion_timetracking_etl_spark.queries import REGISTRY  # noqa: E402
 from notion_timetracking_etl_spark.session import build_session  # noqa: E402
 

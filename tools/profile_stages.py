@@ -19,9 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 os.environ.setdefault("SPARK_GRAFT_UI", "true")
 
-from notion_timetracking_etl_spark.operators.dedup import (  # noqa: E402
-    release_scoped_caches,
-)
+from notion_timetracking_etl_spark.lifecycle import release_scoped_caches  # noqa: E402
 from notion_timetracking_etl_spark.queries import REGISTRY  # noqa: E402
 from notion_timetracking_etl_spark.session import build_session  # noqa: E402
 
