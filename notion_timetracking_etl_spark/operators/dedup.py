@@ -294,9 +294,12 @@ def simhash_from_hashes(hashes: Column, n_bits: int = 16) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Adaptive pigeonhole Hamming blocking (r9 verdict task #1) — shared by the
-# SimHash family here and the perceptual-hash family in
-# operators/multimodal.py.
+# Adaptive pigeonhole Hamming blocking (r9 verdict task #1): one bucket
+# function (pigeonhole_buckets) and one pair function (hamming_pairs), self-
+# and cross-side, behind every signature width — the 32-bit SimHash family
+# here and the 64-bit pHash, 64-bit audio-fingerprint and 256-bit wide pHash
+# families in operators/multimodal.py. This comment is the one home of the
+# completeness argument and the level budget.
 #
 # Classic pigeonhole (agreement level 1): split an n_bits signature into
 # max_hamming + 1 disjoint blocks; a pair within the radius agrees EXACTLY on
@@ -350,68 +353,14 @@ def _pigeonhole_widths(n_bits: int, n_blocks: int) -> tuple[list[int], list[int]
     return widths, [sum(widths[:i]) for i in range(n_blocks)]
 
 
-def pigeonhole_level(
-    n: int,
-    n_bits: int,
-    max_hamming: int,
-    target: int = PIGEONHOLE_TARGET,
-    max_level: int = PIGEONHOLE_MAX_LEVEL,
-) -> int:
-    """Smallest agreement level whose worst-case expected chance-candidate
-    count per signature (``n * C(m, c) / 2^w_min``, uniform-hash model, w_min
-    = the narrowest c-combination's combined width) stays within ``target``;
-    capped at ``max_level`` (correct but wider buckets beyond — see module
-    comment)."""
-    from math import comb
-
-    for c in range(1, max_level):
-        m = max_hamming + c
-        widths, _ = _pigeonhole_widths(n_bits, m)
-        w_min = sum(sorted(widths)[:c])
-        if n * comb(m, c) <= target * (1 << w_min):
-            return c
-    return max_level
-
-
-def pigeonhole_buckets(
-    df: DataFrame, hash_col: str, n_bits: int, max_hamming: int, level: int
-) -> DataFrame:
-    """One row per (input row, c-block combination): the input columns plus
-    ``bi`` (combination index) and ``bv`` (the combination's block values
-    packed into one non-negative long — the equality-join key). All
-    extraction is JVM-side bit arithmetic (arithmetic shift + mask, so the
-    signed-64 top block packs correctly)."""
-    from itertools import combinations
-
-    m = max_hamming + level
-    widths, shifts = _pigeonhole_widths(n_bits, m)
-
-    def block(i: int) -> Column:
-        return F.shiftright(hash_col, shifts[i]).bitwiseAND(
-            F.lit((1 << widths[i]) - 1)
-        )
-
-    structs = []
-    for j, combo in enumerate(combinations(range(m), level)):
-        bv = block(combo[0])
-        for i in combo[1:]:
-            bv = F.shiftleft(bv, widths[i]).bitwiseOR(block(i))
-        structs.append(
-            F.struct(F.lit(j).alias("bi"), bv.cast("long").alias("bv"))
-        )
-    cols = df.columns
-    return df.select("*", F.explode(F.array(*structs)).alias("_b")).select(
-        *cols, F.col("_b.bi").alias("bi"), F.col("_b.bv").alias("bv")
-    )
-
-
 def pigeonhole_expected_chance(
     n: int, n_bits: int, max_hamming: int, level: int
 ) -> float:
     """Worst-case EXPECTED chance candidates per signature at ``level`` under
     the uniform-hash model — the quantity :func:`pigeonhole_level` budgets
-    (``n * C(m, c) / 2^w_min``). Exposed so tests can pin where a signature
-    width's level ladder saturates and where a wider signature escapes."""
+    (``n * C(m, c) / 2^w_min``, w_min = the narrowest c-combination's
+    combined width). Exposed so tests can pin where a signature width's
+    level ladder saturates and where a wider signature escapes."""
     from math import comb
 
     m = max_hamming + level
@@ -420,47 +369,55 @@ def pigeonhole_expected_chance(
     return n * comb(m, level) / (1 << w_min)
 
 
-def pigeonhole_buckets_multi(
+def pigeonhole_level(n: int, n_bits: int, max_hamming: int) -> int:
+    """Smallest agreement level whose expected chance-candidate count per
+    signature stays within ``PIGEONHOLE_TARGET``; capped at
+    ``PIGEONHOLE_MAX_LEVEL`` (correct but wider buckets beyond — see the
+    block comment above)."""
+    for c in range(1, PIGEONHOLE_MAX_LEVEL):
+        chance = pigeonhole_expected_chance(n, n_bits, max_hamming, c)
+        if chance <= PIGEONHOLE_TARGET:
+            return c
+    return PIGEONHOLE_MAX_LEVEL
+
+
+def pigeonhole_buckets(
     df: DataFrame,
     word_cols: list[str],
     n_bits: int,
     max_hamming: int,
     level: int,
 ) -> DataFrame:
-    """Multi-WORD generalization of :func:`pigeonhole_buckets` — the
-    level-cap escape the module comment promises (r10 verdict task #2): a
-    signature wider than 64 bits ships as ``len(word_cols)`` BIGINT words
-    (word 0 = bits 0..63 LSB-first, word 1 = bits 64..127, ...), and every
-    level's block width then scales with the FULL ``n_bits``: at radius 8 a
-    256-bit signature blocks ~28-bit keys at level 1 where 64 bits block
-    ~7 — the chance-candidate budget holds to ~10^11 signatures before the
-    ladder even steps.
+    """One row per (input row, c-block combination): the input columns plus
+    ``bi`` (combination index) and ``bv`` (the equality-join key). The
+    ``n_bits`` signature ships as ``len(word_cols)`` BIGINT words (word 0 =
+    bits 0..63 LSB-first, word 1 = bits 64..127, ...), so every level's
+    block width scales with the full signature: at radius 8 a 256-bit
+    signature blocks ~28-bit keys at level 1 where 64 bits block ~7.
 
-    One row per (input row, c-block combination): the input columns plus
-    ``bi`` (combination index) and ``bv`` (the combination's block values
-    rendered as one join-key STRING — c block values can exceed 63 packed
-    bits at deep levels, so the key is a ','-joined decimal string instead
-    of a packed long). Blocks may straddle word boundaries; extraction is
-    JVM-side shift/mask arithmetic stitching the low word's high bits to
-    the high word's low bits, and the per-word arithmetic shift is
-    mask-corrected exactly like the single-word path."""
+    Blocks may straddle word boundaries; extraction is JVM-side shift/mask
+    arithmetic stitching the low word's high bits to the high word's low
+    bits (arithmetic shift + mask, so a signed-64 top block extracts
+    correctly). A one-word signature packs the combination's block values
+    into one non-negative long; a wider one renders them as a ','-joined
+    decimal string, since c block values can exceed 63 packed bits."""
     from itertools import combinations
 
     n_words = len(word_cols)
-    if n_bits != 64 * n_words:
-        raise ValueError(f"n_bits={n_bits} != 64 * {n_words} words")
+    if n_bits > 64 * n_words:
+        raise ValueError(f"n_bits={n_bits} > 64 * {n_words} words")
     m = max_hamming + level
     widths, shifts = _pigeonhole_widths(n_bits, m)
     if max(widths) >= 64:
         # a >= 64-bit block's mask/shift arithmetic leaves LongType (the
         # literal (1<<64)-1 overflows, shiftleft wraps mod 64) — the caller
         # must raise the level so every block fits one word's arithmetic:
-        # m = radius + level > n_words. hamming_pairs_from_word_sigs floors
-        # its adaptive level accordingly; an explicit too-low level is a
-        # caller bug and fails HERE with the fix named instead of as an
-        # opaque NumberFormatException at execution (r11 review).
+        # m = radius + level > n_words. hamming_pairs floors its adaptive
+        # level accordingly; an explicit too-low level is a caller bug and
+        # fails HERE with the fix named instead of as an opaque
+        # NumberFormatException at execution.
         raise ValueError(
-            f"pigeonhole_buckets_multi: {m} blocks over {n_bits} bits gives "
+            f"pigeonhole_buckets: {m} blocks over {n_bits} bits gives "
             f"{max(widths)}-bit blocks; need max_hamming + level > {n_words} "
             f"(use level >= {n_words - max_hamming + 1})"
         )
@@ -483,30 +440,39 @@ def pigeonhole_buckets_multi(
         hi = word(lo_w + 1).bitwiseAND(F.lit((1 << hi_bits) - 1))
         return F.shiftleft(hi, lo_bits).bitwiseOR(lo)
 
+    def key(combo: tuple[int, ...]) -> Column:
+        if n_words == 1:
+            bv = block(combo[0])
+            for i in combo[1:]:
+                bv = F.shiftleft(bv, widths[i]).bitwiseOR(block(i))
+            return bv.cast("long")
+        return F.concat_ws(",", *[block(i).cast("string") for i in combo])
+
     combos = list(combinations(range(m), level))
     cols = df.columns
-    if len(combos) <= PIGEONHOLE_CODEGEN_COMBOS:
+    # a one-word key is a packed long, which only this path renders
+    if n_words == 1 or len(combos) <= PIGEONHOLE_CODEGEN_COMBOS:
         # shallow levels (every level the adaptive ladder reaches below
         # ~hundreds of millions of signatures): per-combination struct
         # explode — whole-stage-codegen'd shift/mask expressions, the
         # cheapest plan (measured ~0.7 s faster than the data-driven path
         # on the sf0.1 wide family at level 1)
-        structs = []
-        for j, combo in enumerate(combos):
-            bv = F.concat_ws(",", *[block(i).cast("string") for i in combo])
-            structs.append(F.struct(F.lit(j).alias("bi"), bv.alias("bv")))
+        structs = [
+            F.struct(F.lit(j).alias("bi"), key(combo).alias("bv"))
+            for j, combo in enumerate(combos)
+        ]
         return df.select("*", F.explode(F.array(*structs)).alias("_b")).select(
             *cols, F.col("_b.bi").alias("bi"), F.col("_b.bv").alias("bv")
         )
-    # DEEP levels (ADVICE r11): C(m, c) struct expressions in one projection
-    # fail Janino codegen past ~1000 generated structs — 2925 at (radius 24,
-    # level 3) — so past PIGEONHOLE_CODEGEN_COMBOS the fan-out ships as
-    # DATA instead of code: the row projection computes the m block values
-    # ONCE into an array (O(m) codegen at any level), and a broadcast
-    # (bi, combo) table — one row per c-combination — fans rows out via a
-    # nested-loop join; ``bv`` renders by indexing the block array with the
-    # combo, byte-identical to the shallow path's concat_ws(',') key, so
-    # the pair output is level-invariant across both paths (test-pinned).
+    # DEEP levels: C(m, c) struct expressions in one projection fail Janino
+    # codegen past ~1000 generated structs — 2925 at (radius 24, level 3) —
+    # so past PIGEONHOLE_CODEGEN_COMBOS the fan-out ships as DATA instead of
+    # code: the row projection computes the m block values ONCE into an
+    # array (O(m) codegen at any level), and a broadcast (bi, combo) table —
+    # one row per c-combination — fans rows out via a nested-loop join;
+    # ``bv`` renders by indexing the block array with the combo,
+    # byte-identical to the shallow path's concat_ws(',') key, so the pair
+    # output is level-invariant across both paths (test-pinned).
     combos_df = df.sparkSession.createDataFrame(
         [(j, list(c)) for j, c in enumerate(combos)],
         "bi int, _combo array<int>",
@@ -531,103 +497,70 @@ def pigeonhole_buckets_multi(
     )
 
 
-def hamming_pairs_from_word_sigs(
+def hamming_pairs(
     sig: DataFrame,
     id_col: str,
     word_cols: list[str],
-    max_hamming: int,
-    level: int | None = None,
-    target: int = PIGEONHOLE_TARGET,
-) -> DataFrame:
-    """(a, b, hamming) pairs within ``max_hamming`` over a MULTI-WORD
-    signature table — the wide twin of :func:`hamming_pairs_from_sigs`:
-    size-adaptive level over the full bit width, multi-word pigeonhole
-    candidate join, summed ``bit_count(xor)`` verify per word in the join
-    projection BEFORE the distinct. Caller persists ``sig`` when its
-    lineage is expensive."""
-    n_words = len(word_cols)
-    n_bits = 64 * n_words
-    if level is None:
-        # floor: every block must fit one word's shift/mask arithmetic
-        # (width < 64 <=> radius + level > n_words); completeness holds at
-        # ANY level, so raising it only narrows buckets
-        level = max(
-            pigeonhole_level(sig.count(), n_bits, max_hamming, target),
-            n_words - max_hamming + 1,
-        )
-    buckets = pigeonhole_buckets_multi(
-        sig.select(F.col(id_col).alias("doc"), *word_cols),
-        word_cols,
-        n_bits,
-        max_hamming,
-        level,
-    )
-    left = buckets.select(
-        F.col("doc").alias("a"),
-        *[F.col(w).alias(f"la{i}") for i, w in enumerate(word_cols)],
-        "bi",
-        "bv",
-    )
-    right = buckets.select(
-        F.col("doc").alias("b"),
-        *[F.col(w).alias(f"rb{i}") for i, w in enumerate(word_cols)],
-        "bi",
-        "bv",
-    )
-    ham = " + ".join(
-        f"bit_count(la{i} ^ rb{i})" for i in range(len(word_cols))
-    )
-    return (
-        left.join(right, ["bi", "bv"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", F.expr(ham).cast("long").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
-def hamming_pairs_from_sigs(
-    sig: DataFrame,
-    id_col: str,
-    sig_col: str,
     n_bits: int,
     max_hamming: int,
+    corpus: DataFrame | None = None,
     level: int | None = None,
-    target: int = PIGEONHOLE_TARGET,
 ) -> DataFrame:
-    """(a, b, hamming) pairs within ``max_hamming`` over an arbitrary
-    (id, signature) table — the blocking+verify core shared by
-    :func:`simhash_hamming_pairs` and the distinct-signature cluster
-    summaries (queries/clusters.py): size-adaptive pigeonhole candidate
-    join, ``bit_count(xor)`` verify in the join projection BEFORE the
-    distinct. The caller persists ``sig`` when its lineage is expensive
-    (``level=None`` counts it once to derive the agreement level)."""
+    """(a, b, hamming) pairs within ``max_hamming`` of an ``n_bits``
+    signature held in ``word_cols`` — the one blocking+verify core behind
+    every Hamming near-dup family (32-bit SimHash, 64-bit pHash and audio
+    fingerprint, 256-bit wide pHash).
+
+    ``corpus=None`` self-joins ``sig`` and keeps ``a < b``; otherwise the
+    pairs are ``(a=sig row, b=corpus row)`` across the two sides only — an
+    arriving batch against an existing corpus never generates the corpus
+    side's own pair space. ``level=None`` derives the agreement level once
+    from the count of the corpus side (or the only side), floored so every
+    block fits one word's arithmetic; both sides always block at the same
+    level. The caller persists the counted frame when its lineage is
+    expensive — the count then also warms the persist before the join.
+    Verification is exact: summed per-word ``bit_count(xor)`` in the join
+    projection, BEFORE the distinct, so failed candidates never enter the
+    dedup shuffle (the expensive step when buckets are duplication-skewed).
+    """
+    n_words = len(word_cols)
     if level is None:
-        level = pigeonhole_level(sig.count(), n_bits, max_hamming, target)
-    buckets = pigeonhole_buckets(
-        sig.select(F.col(id_col).alias("doc"), F.col(sig_col).alias("s")),
-        "s",
-        n_bits,
-        max_hamming,
-        level,
-    )
-    left = buckets.select(
-        F.col("doc").alias("a"), F.col("s").alias("sa"), "bi", "bv"
-    )
-    right = buckets.select(
-        F.col("doc").alias("b"), F.col("s").alias("sb"), "bi", "bv"
-    )
-    return (
-        left.join(right, ["bi", "bv"])
-        .filter(F.col("a") < F.col("b"))
-        # verify BEFORE deduplicating: bit_count is free in the join
-        # projection, and failed candidates then never enter the distinct's
-        # shuffle (the expensive step when buckets are duplication-skewed)
-        .select(
-            "a",
-            "b",
-            F.expr("bit_count(sa ^ sb)").cast("long").alias("hamming"),
+        level = max(
+            pigeonhole_level(
+                (sig if corpus is None else corpus).count(),
+                n_bits,
+                max_hamming,
+            ),
+            n_words - max_hamming + 1,
         )
+
+    def buckets(df: DataFrame) -> DataFrame:
+        # the id may itself be the signature (distinct-signature graphs)
+        return pigeonhole_buckets(
+            df.select(*dict.fromkeys([id_col, *word_cols])),
+            word_cols,
+            n_bits,
+            max_hamming,
+            level,
+        )
+
+    def side(b: DataFrame, id_name: str, prefix: str) -> DataFrame:
+        return b.select(
+            F.col(id_col).alias(id_name),
+            *[F.col(w).alias(f"{prefix}{i}") for i, w in enumerate(word_cols)],
+            "bi",
+            "bv",
+        )
+
+    own = buckets(sig)
+    left = side(own, "a", "sa")
+    right = side(own if corpus is None else buckets(corpus), "b", "sb")
+    cands = left.join(right, ["bi", "bv"])
+    if corpus is None:
+        cands = cands.filter(F.col("a") < F.col("b"))
+    ham = " + ".join(f"bit_count(sa{i} ^ sb{i})" for i in range(n_words))
+    return (
+        cands.select("a", "b", F.expr(ham).cast("long").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .distinct()  # a surviving pair can collide in several combinations
     )
@@ -640,21 +573,12 @@ def simhash_hamming_pairs(
     n_bits: int = 32,
     max_hamming: int = 2,
     level: int | None = None,
-    target: int = PIGEONHOLE_TARGET,
 ) -> DataFrame:
     """Near-dup pairs within Hamming distance ``max_hamming`` of an
-    ``n_bits``-wide SimHash, without ever touching the O(n²) pair space.
-
-    Candidate generation uses size-adaptive pigeonhole blocking (see the
-    block comment above :func:`pigeonhole_level`): ``level=None`` derives the
-    agreement level from the observed signature count — one O(1)-result
-    count on the already-persisted signature table — so block-key width
-    grows with the corpus and expected chance candidates per signature stay
-    within ``target`` at any scale. The result set is level-invariant
-    (completeness holds at every level), so the all-pairs oracle needs no
-    blocking replay. Verification is exact: ``bit_count(xor)`` on the full
-    signatures. At 100 TB the shuffle carries (doc, combo) rows — linear in
-    the corpus — and each join bucket holds only combo-collisions.
+    ``n_bits``-wide SimHash, without ever touching the O(n²) pair space:
+    :func:`hamming_pairs` over the persisted (doc, signature) table, whose
+    count derives the agreement level when ``level=None``. The result set
+    is level-invariant, so the all-pairs oracle needs no blocking replay.
 
     Default 32-bit signatures keep chance collisions negligible
     (P[hamming<=2] ~ 1.2e-7 per random pair), so candidates ≈ true near-dups.
@@ -674,11 +598,7 @@ def simhash_hamming_pairs(
         .select("doc", word_hashes(F.col("_t")).alias("_hl"))
         .select("doc", simhash_from_hashes(F.col("_hl"), n_bits).alias("s"))
     )
-    # level=None: hamming_pairs_from_sigs counts the persisted table once —
-    # the count also warms the persist exactly once before the self-join
-    return hamming_pairs_from_sigs(
-        sig, "doc", "s", n_bits, max_hamming, level, target
-    )
+    return hamming_pairs(sig, "doc", ["s"], n_bits, max_hamming, level=level)
 
 
 def ngram_jaccard_pairs(

@@ -11,7 +11,7 @@ call would go.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
@@ -313,8 +313,8 @@ def sample_frames(
 # ---------------------------------------------------------------------------
 # Perceptual hash + Hamming-radius near-dup over visual media (r8 verdict
 # task #1): dHash computed inside the same Arrow decode seam as decode_media,
-# candidate pairs via the pigeonhole block trick (operators/dedup.py:342),
-# exact pixel-distance verify on the surviving candidates.
+# candidate pairs via the pigeonhole block join (operators/dedup.py::
+# hamming_pairs), exact pixel-distance verify on the surviving candidates.
 # ---------------------------------------------------------------------------
 
 PHASH_GRID_W = 9  # spatial blocks per channel row (dHash compares adjacent)
@@ -443,12 +443,10 @@ def _gradient_words(px, ch: int, wd: int, n_words: int) -> list[int]:
 # ---------------------------------------------------------------------------
 # WIDE (256-bit) perceptual hash — the pigeonhole level-cap escape
 # (r10 verdict task #2): same dHash construction over a 16x17 grid, the 256
-# gradient bits shipped as four BIGINT words through
-# operators/dedup.py::pigeonhole_buckets_multi. At radius 8 a 256-bit
-# signature blocks ~28-bit keys at level 1 where 64 bits block ~7, so the
-# chance-candidate budget holds to ~10^11 signatures before the level
-# ladder even steps (where the 64-bit ladder saturates at ~1.6M and blows
-# its budget past ~8.7M — pinned in tests/test_round11.py).
+# gradient bits shipped as four BIGINT words through the same
+# phash_near_dup_pairs / phash_cross_near_dups entry points as the 64-bit
+# hash (the level budget it escapes: the block comment above
+# operators/dedup.py::pigeonhole_level; pinned in tests/test_round11.py).
 # ---------------------------------------------------------------------------
 
 PHASH_WIDE_GRID_W = 17  # spatial blocks per channel row (dHash adjacency)
@@ -518,166 +516,80 @@ def phash_media_wide(
     return df.mapInPandas(run, PHASH_WIDE_SCHEMA)
 
 
-def phash_wide_near_dup_pairs(
-    sig: DataFrame,
-    max_hamming: int = 8,
-    px_l1_max: int = 262144,
-    level: int | None = None,
-) -> DataFrame:
-    """Near-dup visual pairs within ``max_hamming`` bits of the 256-bit
-    perceptual hash, exact pixel-L1 verified — the wide-signature twin of
-    :func:`phash_near_dup_pairs` through the multi-word pigeonhole
-    machinery. Same two-stage verify discipline: summed per-word
-    ``bit_count(xor)`` in the join projection, then the exact 272-cell L1
-    on survivors only."""
-    from ..lifecycle import scoped_persist
-    from .dedup import hamming_pairs_from_word_sigs
-
-    word_cols = [f"w{j}" for j in range(PHASH_WIDE_WORDS)]
-    sig = scoped_persist(sig.select("media_id", *word_cols, "px"))
-    cands = hamming_pairs_from_word_sigs(
-        sig, "media_id", word_cols, max_hamming, level
-    )
-    return _pixel_l1_verify(cands, sig, sig, px_l1_max)
-
-
-def phash_wide_cross_near_dups(
-    sig_new: DataFrame,
-    sig_corpus: DataFrame,
-    max_hamming: int = 24,
-    px_l1_max: int = 262144,
-    level: int | None = None,
-) -> DataFrame:
-    """Incremental-ingest WIDE visual near-dup pairs: NEW-batch media
-    against the EXISTING corpus only, through the multi-word pigeonhole
-    machinery — the 256-bit twin of :func:`phash_cross_near_dups` (same
-    production shape: the corpus pair space is never generated, block
-    buckets join across sides only, a day's batch costs O(batch + shared
-    buckets) at any corpus size). ``level=None`` derives the adaptive
-    agreement level from the CORPUS side's count, floored so every block
-    fits one word's arithmetic; both sides must block identically. The
-    corpus side is persisted before counting (the phash_cross_near_dups
-    ADVICE discipline)."""
-    from ..lifecycle import scoped_persist
-    from .dedup import pigeonhole_buckets_multi, pigeonhole_level
-
-    word_cols = [f"w{j}" for j in range(PHASH_WIDE_WORDS)]
-    n_bits = 64 * PHASH_WIDE_WORDS
-    sig_corpus = scoped_persist(
-        sig_corpus.select("media_id", *word_cols, "px")
-    )
-    if level is None:
-        level = max(
-            pigeonhole_level(sig_corpus.count(), n_bits, max_hamming),
-            PHASH_WIDE_WORDS - max_hamming + 1,
-        )
-    left = pigeonhole_buckets_multi(
-        sig_new.select("media_id", *word_cols),
-        word_cols,
-        n_bits,
-        max_hamming,
-        level,
-    ).select(
-        F.col("media_id").alias("a"),
-        *[F.col(w).alias(f"la{i}") for i, w in enumerate(word_cols)],
-        "bi",
-        "bv",
-    )
-    right = pigeonhole_buckets_multi(
-        sig_corpus.select("media_id", *word_cols),
-        word_cols,
-        n_bits,
-        max_hamming,
-        level,
-    ).select(
-        F.col("media_id").alias("b"),
-        *[F.col(w).alias(f"rb{i}") for i, w in enumerate(word_cols)],
-        "bi",
-        "bv",
-    )
-    ham = " + ".join(
-        f"bit_count(la{i} ^ rb{i})" for i in range(PHASH_WIDE_WORDS)
-    )
-    cands = (
-        left.join(right, ["bi", "bv"])
-        .select("a", "b", F.expr(ham).cast("long").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-    return _pixel_l1_verify(cands, sig_new, sig_corpus, px_l1_max)
-
-
 def phash_near_dup_pairs(
     sig: DataFrame,
+    word_cols: Sequence[str] = ("phash",),
     max_hamming: int = 8,
     px_l1_max: int = 262144,
     level: int | None = None,
-    target: int | None = None,  # None -> PIGEONHOLE_TARGET (import cycle-free)
 ) -> DataFrame:
-    """Near-dup visual pairs within ``max_hamming`` bits of the 64-bit
-    perceptual hash, verified by exact pixel distance — without the O(n²)
-    pair space.
+    """Near-dup media pairs (a, b, hamming, px_l1) within ``max_hamming``
+    bits of a perceptual signature, verified by exact grid distance —
+    without the O(n²) pair space. ``sig`` is (media_id, *word_cols, px):
+    one word for the 64-bit pHash and audio fingerprint, four for the
+    256-bit wide pHash.
 
-    Candidates come from SIZE-ADAPTIVE pigeonhole blocking shared with
-    :func:`..operators.dedup.simhash_hamming_pairs` (see the block comment
-    above ``dedup.pigeonhole_level`` for the completeness argument and the
-    level budget): ``level=None`` derives the agreement level from the
-    observed signature count — one O(1)-result count on the already-
-    persisted signature table — so the equality-join key widens with the
-    corpus (~7 bits to ~58k media, ~13 to ~373k, ~17 to ~1.6M) and expected
-    chance candidates per signature stay within the budget instead of
-    growing ~n/128 the way the fixed 7-bit blocks did (r9 verdict task #1).
-    The result set is level-invariant, so the all-pairs oracle needs no
-    blocking replay. The shuffle carries (media, combo) rows, linear in the
-    corpus. Verification is exact and two-stage: ``bit_count(xor)`` on the
-    full hashes (cheap, in the join projection) then the L1 distance over
-    the actual 72-cell pixel grids (``zip_with`` + ``aggregate``, JVM-side)
-    for candidates only — the pixel re-check a production image pipeline
-    runs before merging a dup cluster. Beyond PIGEONHOLE_MAX_LEVEL the
-    blocking stays correct but buckets coarsen; that regime's lever is a
-    wider signature (256-bit pHash) through the same machinery.
-    """
+    Stage one is :func:`..operators.dedup.hamming_pairs` (``level=None``
+    counts the persisted signature table once); stage two is the exact L1
+    over the pixel/energy grids of the survivors only — the re-check a
+    production image pipeline runs before merging a dup cluster."""
     from ..lifecycle import scoped_persist
-    from .dedup import PIGEONHOLE_TARGET, pigeonhole_level
+    from .dedup import hamming_pairs
 
     # the signature table feeds 4 consumers (both self-join branches, both
     # pixel-verify joins); persist so the Python decode seam runs ONCE.
-    sig = scoped_persist(sig.select("media_id", "phash", "px"))
-    if level is None:
-        # the count also warms the persist exactly once before the self-join
-        if target is None:
-            target = PIGEONHOLE_TARGET
-        level = pigeonhole_level(sig.count(), 64, max_hamming, target)
-
-    buckets = _phash_block_buckets(sig, max_hamming, level)
-    left = buckets.select(
-        F.col("media_id").alias("a"), F.col("phash").alias("ha"), "bi", "bv"
+    sig = scoped_persist(sig.select("media_id", *word_cols, "px"))
+    n_bits = 64 * len(word_cols)
+    cands = hamming_pairs(
+        sig, "media_id", list(word_cols), n_bits, max_hamming, level=level
     )
-    right = buckets.select(
-        F.col("media_id").alias("b"), F.col("phash").alias("hb"), "bi", "bv"
-    )
-    cands = _hamming_candidates(left, right, max_hamming, self_join=True)
     return _pixel_l1_verify(cands, sig, sig, px_l1_max)
 
 
-def _hamming_candidates(
-    left: DataFrame, right: DataFrame, max_hamming: int, self_join: bool
+def phash_cross_near_dups(
+    sig_new: DataFrame,
+    sig_corpus: DataFrame,
+    word_cols: Sequence[str] = ("phash",),
+    max_hamming: int = 8,
+    px_l1_max: int = 262144,
+    level: int | None = None,
 ) -> DataFrame:
-    """Stage-1 verify shared by the self-join and cross-side gates:
-    equality join on (block idx, block bits), ``a < b`` dedup for the
-    self-join case, bit_count(xor) in the join projection — hamming verify
-    BEFORE distinct so failed candidates never enter the dedup shuffle
-    (same ordering as simhash_hamming_pairs)."""
-    cands = left.join(right, ["bi", "bv"])
-    if self_join:
-        cands = cands.filter(F.col("a") < F.col("b"))
-    return (
-        cands.select(
-            "a", "b", F.expr("bit_count(ha ^ hb)").cast("long").alias("hamming")
+    """Incremental-ingest near-dup pairs: NEW-batch media against the
+    EXISTING corpus only — ``(a=new, b=corpus)`` through the cross-side
+    :func:`..operators.dedup.hamming_pairs`, then the same exact grid
+    verify as :func:`phash_near_dup_pairs`. The corpus side's pair space is
+    never generated, so a day's batch costs O(batch + shared buckets)
+    regardless of corpus size. A perceptual hash depends only on the
+    media's own pixels, so the candidate set equals the full-corpus
+    blocking restricted to cross-side pairs — which is what the SQL oracles
+    replay.
+
+    ``level=None`` derives the level from the CORPUS side's count; a
+    streaming caller that drains many batches against one persisted corpus
+    computes the level once and passes it (streaming/visualgate.py)."""
+    from ..lifecycle import scoped_persist
+    from .dedup import hamming_pairs
+
+    if level is None:
+        # persist BEFORE counting: the corpus side feeds the count, the
+        # bucket join and the pixel verify — without it a caller passing an
+        # unpersisted signature frame would run the Python decode seam once
+        # per consumer (a no-op recache when the caller already persisted,
+        # since the projection reads from the parent's cached blocks)
+        sig_corpus = scoped_persist(
+            sig_corpus.select("media_id", *word_cols, "px")
         )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()  # a surviving pair can collide in several blocks
+    n_bits = 64 * len(word_cols)
+    cands = hamming_pairs(
+        sig_new,
+        "media_id",
+        list(word_cols),
+        n_bits,
+        max_hamming,
+        corpus=sig_corpus,
+        level=level,
     )
+    return _pixel_l1_verify(cands, sig_new, sig_corpus, px_l1_max)
 
 
 def _pixel_l1_verify(
@@ -707,63 +619,6 @@ def _pixel_l1_verify(
         )
         .filter(F.col("px_l1") <= px_l1_max)
     )
-
-
-def _phash_block_buckets(sig: DataFrame, max_hamming: int, level: int) -> DataFrame:
-    """(media_id, phash, bi, bv): one row per (media, c-block combination)
-    of the size-adaptive pigeonhole scheme — the machinery shared with the
-    SimHash family (``operators/dedup.py::pigeonhole_buckets``, which holds
-    the completeness argument and the level budget)."""
-    from .dedup import pigeonhole_buckets
-
-    return pigeonhole_buckets(
-        sig.select("media_id", "phash"), "phash", 64, max_hamming, level
-    )
-
-
-def phash_cross_near_dups(
-    sig_new: DataFrame,
-    sig_corpus: DataFrame,
-    max_hamming: int = 8,
-    px_l1_max: int = 262144,
-    level: int | None = None,
-) -> DataFrame:
-    """Incremental-ingest visual near-dup pairs: NEW-batch media against
-    the EXISTING corpus only — ``(a=new, b=corpus)`` sharing any pigeonhole
-    hash block, then the same exact two-stage verify as
-    :func:`phash_near_dup_pairs`. The production shape for continuous
-    multimodal ingestion (the image twin of
-    ``operators/dedup.py::lsh_cross_candidates``): the corpus side's pair
-    space is never generated — block buckets join across sides only — so a
-    day's batch costs O(batch + shared buckets) regardless of corpus size.
-    A perceptual hash depends only on the media's own pixels, so the
-    candidate set equals the full-corpus blocking restricted to cross-side
-    pairs — which is what the SQL oracle replays.
-
-    ``level=None`` derives the adaptive agreement level from the CORPUS
-    side's observed count (both sides must block identically); a streaming
-    caller that drains many batches against one persisted corpus computes
-    the level once and passes it explicitly (streaming/visualgate.py)."""
-    from ..lifecycle import scoped_persist
-    from .dedup import pigeonhole_level
-
-    if level is None:
-        # persist BEFORE counting (ADVICE r10): the corpus side feeds the
-        # count, the bucket join and the pixel verify — without the guard a
-        # caller passing an unpersisted signature frame would run the Python
-        # decode seam once per consumer (same discipline as
-        # phash_near_dup_pairs; a no-op recache when the caller already
-        # persisted, since the filter reads from the parent's cached blocks)
-        sig_corpus = scoped_persist(sig_corpus.select("media_id", "phash", "px"))
-        level = pigeonhole_level(sig_corpus.count(), 64, max_hamming)
-    left = _phash_block_buckets(
-        sig_new.select("media_id", "phash", "px"), max_hamming, level
-    ).select(F.col("media_id").alias("a"), F.col("phash").alias("ha"), "bi", "bv")
-    right = _phash_block_buckets(
-        sig_corpus.select("media_id", "phash", "px"), max_hamming, level
-    ).select(F.col("media_id").alias("b"), F.col("phash").alias("hb"), "bi", "bv")
-    cands = _hamming_candidates(left, right, max_hamming, self_join=False)
-    return _pixel_l1_verify(cands, sig_new, sig_corpus, px_l1_max)
 
 
 # ---------------------------------------------------------------------------

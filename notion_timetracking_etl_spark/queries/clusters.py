@@ -154,7 +154,7 @@ def dedup_simhash_cluster_summary(
 ) -> DataFrame:
     from ..lifecycle import scoped_persist
     from ..operators.dedup import (
-        hamming_pairs_from_sigs,
+        hamming_pairs,
         simhash_from_hashes,
         word_hashes,
     )
@@ -172,7 +172,7 @@ def dedup_simhash_cluster_summary(
         )
     )
     ds = scoped_persist(sigs.select("s").distinct())
-    pairs = hamming_pairs_from_sigs(ds, "s", "s", n_bits=32, max_hamming=2)
+    pairs = hamming_pairs(ds, "s", ["s"], n_bits=32, max_hamming=2)
     cc = connected_components(pairs.select("a", "b"), "a", "b")
     assign = sigs.join(cc, sigs.s == cc.node, "left").select(
         "doc_id",

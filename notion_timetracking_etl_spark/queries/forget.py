@@ -623,16 +623,16 @@ def ann_model_sweep_frames(
     from ..operators.kmeans import _as_double_vec, _assign, _update
     from ..operators.model_store import load_kmeans_model, save_kmeans_model
 
-    dead = F.broadcast(emb.filter(F.expr(dead_pred)).select("vec_id"))
+    dead = emb.filter(F.expr(dead_pred)).select("vec_id")
     asg_loaded, cent_stale = load_kmeans_model(spark, emb, stale_path)
     # consumed by touched-cell detection, the survivor filter, the refit
     # and the re-route anti-join — persist once (O(n) two-column rows)
     asg_all = scoped_persist(asg_loaded.select("vec_id", "cid"))
 
     touched = scoped_persist(
-        asg_all.join(dead, "vec_id").select("cid").distinct()
+        asg_all.join(F.broadcast(dead), "vec_id").select("cid").distinct()
     )
-    asg_alive = asg_all.join(dead, "vec_id", "left_anti")
+    asg_alive = asg_all.join(F.broadcast(dead), "vec_id", "left_anti")
     refit_members = scoped_persist(asg_alive.join(F.broadcast(touched), "cid"))
 
     vec_all = _as_double_vec(emb, "vec_id", "embedding")
@@ -668,7 +668,8 @@ def ann_model_sweep_frames(
         "n_rerouted",
     )
     n_tomb_after = _count1(
-        asg_fresh.join(dead, "vec_id"), "n_tombstones_in_index_after"
+        asg_fresh.join(F.broadcast(dead), "vec_id"),
+        "n_tombstones_in_index_after",
     )
     # untouched centroids must round-trip the two PERSISTED models
     # byte-identically (exact double-array equality). An untouched cell
@@ -992,15 +993,13 @@ def deletion_propagation_multimodal(
     # own full second-decode lineage; only the shared state table is
     # truncated.
     sig = scoped_flat_checkpoint(phash_media(media))
-    dead = F.broadcast(
-        sig.filter(F.col("media_id") % 100 == 7).select("media_id")
-    )
+    dead = sig.filter(F.col("media_id") % 100 == 7).select("media_id")
     dead_a = F.broadcast(dead.select(F.col("media_id").alias("a")))
     dead_b = F.broadcast(dead.select(F.col("media_id").alias("b")))
 
     # (1) signature-lake sweep: filter vs an HONEST second decode pass over
     # the post-delete corpus (the rebuild a naive pipeline would run)
-    swept = sig.join(dead, "media_id", "left_anti")
+    swept = sig.join(F.broadcast(dead), "media_id", "left_anti")
     # the honest second decode pass stays LAZY (measured: an eager flat
     # checkpoint here was a wash — the decode is an opaque Python seam, so
     # it contributes almost nothing to Catalyst planning, and eager
@@ -1040,7 +1039,7 @@ def deletion_propagation_multimodal(
     is_arr = F.col("media_id") % 10 == 5
     arr = sig.filter(is_arr)
     corpus_b = sig.filter(~is_arr)
-    corpus_a = corpus_b.join(dead, "media_id", "left_anti")
+    corpus_a = corpus_b.join(F.broadcast(dead), "media_id", "left_anti")
     gb = scoped_persist(
         phash_cross_near_dups(
             arr, corpus_b, max_hamming=MM_MAX_HAMMING, px_l1_max=MM_PX_L1_MAX
@@ -1092,7 +1091,10 @@ def deletion_propagation_multimodal(
         _count1(dead, "n_tombstones_visual")
         .crossJoin(
             F.broadcast(
-                _count1(sig.join(dead, "media_id"), "n_sig_rows_removed")
+                _count1(
+                    sig.join(F.broadcast(dead), "media_id"),
+                    "n_sig_rows_removed",
+                )
             )
         )
         .crossJoin(F.broadcast(sw))
@@ -1221,8 +1223,8 @@ def semgate_forget_frames(
         # the semdedup cells derive from).
         asg = _assign(_as_double_vec(emb, "vec_id", "embedding"), cent)
         base = scoped_flat_checkpoint(sem_state_base(emb, asg))
-    dead = F.broadcast(base.filter(F.expr(dead_pred)).select("vec_id"))
-    swept = base.join(dead, "vec_id", "left_anti")
+    dead = base.filter(F.expr(dead_pred)).select("vec_id")
+    swept = base.join(F.broadcast(dead), "vec_id", "left_anti")
 
     # the one shared guarded bits recipe (kmeans.sem_bits_agg) — the sweep
     # must fail loudly at SEM_MAX_BITS exactly like the session cells path
@@ -1249,7 +1251,7 @@ def semgate_forget_frames(
     # evaluated ONCE, by the fingerprint consumer, instead of twice
     # (r11 review: an unshared bits aggregate re-ran the whole
     # re-assign+re-hash chain just to count it)
-    emb_alive = emb.join(dead, "vec_id", "left_anti")
+    emb_alive = emb.join(F.broadcast(dead), "vec_id", "left_anti")
     base_rebuilt = sem_state_base(
         emb_alive, _assign(_as_double_vec(emb_alive, "vec_id", "embedding"), cent)
     )
@@ -1328,7 +1330,7 @@ def semgate_forget_frames(
 
     vals = _report_union([
         _tagged(dead, "dead"),
-        _tagged(base.join(dead, "vec_id"), "rm"),
+        _tagged(base.join(F.broadcast(dead), "vec_id"), "rm"),
         _tagged(base, "base"),
         fp_rows(cells_swept, "swfp"),
         fp_rows(cells_rebuilt, "rbfp"),
@@ -1508,7 +1510,7 @@ def pq_model_sweep_frames(
     from ..operators.kmeans import _as_double_vec, _assign, _update
     from ..operators.model_store import load_pq_model, save_pq_model
 
-    dead = F.broadcast(emb.filter(F.expr(dead_pred)).select("vec_id"))
+    dead = emb.filter(F.expr(dead_pred)).select("vec_id")
     models = load_pq_model(spark, emb, stale_path, dims=dims)
     if not models:
         # an EMPTY persisted model (trained on a filtered-to-zero corpus —
@@ -1540,9 +1542,9 @@ def pq_model_sweep_frames(
         # at build time, costing more than the per-leg plan shrinkage saves
         asg_j = scoped_persist(asg_loaded.select("vec_id", "cid"))
         touched = scoped_persist(
-            asg_j.join(dead, "vec_id").select("cid").distinct()
+            asg_j.join(F.broadcast(dead), "vec_id").select("cid").distinct()
         )
-        alive = asg_j.join(dead, "vec_id", "left_anti")
+        alive = asg_j.join(F.broadcast(dead), "vec_id", "left_anti")
         refit = scoped_persist(alive.join(F.broadcast(touched), "cid"))
         vec_j = _as_double_vec(
             emb.select(
@@ -1637,9 +1639,7 @@ def pq_model_sweep_frames(
         ),
         _tagged(refit_u, "refit"),
         _tagged(rerouted_u, "rr"),
-        _tagged(
-            fresh_codes_u.join(dead.select(F.col("vec_id")), "vec_id"), "tca"
-        ),
+        _tagged(fresh_codes_u.join(F.broadcast(dead), "vec_id"), "tca"),
         frozen_rows,
         fp_rows,
     ])

@@ -648,10 +648,10 @@ from ..operators.multimodal import (  # noqa: E402
     PHASH_WIDE_MIN_CHARS,
     PHASH_WIDE_WORDS,
     phash_media_wide,
-    phash_wide_near_dup_pairs,
 )
 
 _WIDE_CELLS = PHASH_WIDE_GRID_CH * PHASH_WIDE_GRID_W
+_WIDE_WORD_COLS = [f"w{j}" for j in range(PHASH_WIDE_WORDS)]
 
 
 def _wide_word_sum_sql(j: int) -> str:
@@ -726,7 +726,7 @@ _WIDE_L1_SQL = _list_l1_sql("pa", "pb", _WIDE_CELLS)
     "operators/dedup.py module comment): the same dHash construction over "
     "a 16x17 grid yields 256 gradient bits shipped as FOUR BIGINT words "
     "through the multi-word pigeonhole machinery "
-    "(pigeonhole_buckets_multi — blocks may straddle word boundaries; the "
+    "(pigeonhole_buckets — blocks may straddle word boundaries; the "
     "join key is the c-combination's block values). At the same radius "
     f"({MM_WIDE_MAX_HAMMING}) every level's block width scales with the "
     "full 256 bits: level 1 blocks ~28-bit keys where the 64-bit family "
@@ -761,8 +761,9 @@ def multimodal_near_dup_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     media = attach_media_columns(docs, "doc_id", "text")
     sig = phash_media_wide(media)  # audio filtered JVM-side in the operator
-    pairs = phash_wide_near_dup_pairs(
+    pairs = phash_near_dup_pairs(
         sig,
+        _WIDE_WORD_COLS,
         max_hamming=MM_WIDE_MAX_HAMMING,
         px_l1_max=MM_WIDE_PX_L1_MAX,
     )
@@ -826,7 +827,7 @@ def multimodal_incremental_near_dup_wide(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from ..lifecycle import scoped_persist
-    from ..operators.multimodal import phash_wide_cross_near_dups
+    from ..operators.multimodal import phash_cross_near_dups
 
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
@@ -836,9 +837,10 @@ def multimodal_incremental_near_dup_wide(
     # ONE decode-seam pass for both sides: persist, then split by id
     sig = scoped_persist(phash_media_wide(media))
     is_new = F.col("media_id") % 10 == MM_WIDE_ARR_RESIDUE
-    pairs = phash_wide_cross_near_dups(
+    pairs = phash_cross_near_dups(
         sig.filter(is_new),
         sig.filter(~is_new),
+        _WIDE_WORD_COLS,
         max_hamming=MM_WIDE_MAX_HAMMING,
         px_l1_max=MM_WIDE_PX_L1_MAX,
     )
@@ -946,9 +948,7 @@ def multimodal_near_dup_wide_clusters(
 ) -> DataFrame:
     from ..operators.cluster import connected_components
     from ..lifecycle import scoped_persist
-    from ..operators.multimodal import phash_wide_near_dup_pairs
 
-    word_cols = [f"w{j}" for j in range(PHASH_WIDE_WORDS)]
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
         & (F.length("text") >= PHASH_WIDE_MIN_CHARS)
@@ -957,12 +957,13 @@ def multimodal_near_dup_wide_clusters(
     # ONE decode-seam pass feeds the collapse AND the member attach
     sig = scoped_persist(phash_media_wide(media))
     dv = scoped_persist(
-        sig.groupBy(*word_cols, "px").agg(
+        sig.groupBy(*_WIDE_WORD_COLS, "px").agg(
             F.min("media_id").cast("bigint").alias("node")
         )
     )
-    pairs = phash_wide_near_dup_pairs(
-        dv.select(F.col("node").alias("media_id"), *word_cols, "px"),
+    pairs = phash_near_dup_pairs(
+        dv.select(F.col("node").alias("media_id"), *_WIDE_WORD_COLS, "px"),
+        _WIDE_WORD_COLS,
         max_hamming=MM_WIDE_MAX_HAMMING,
         px_l1_max=MM_WIDE_PX_L1_MAX,
     ).select("a", "b")
@@ -970,7 +971,7 @@ def multimodal_near_dup_wide_clusters(
         F.col("node").alias("cc_node"), "component"
     )
     assign = (
-        sig.join(dv, [*word_cols, "px"])
+        sig.join(dv, [*_WIDE_WORD_COLS, "px"])
         .join(ccr, F.col("node") == F.col("cc_node"), "left")
         .select(
             "media_id",

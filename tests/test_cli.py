@@ -349,18 +349,22 @@ def test_cli_ann_fit_then_encode_roundtrip(spark, tmp_path):
     assert rc == 0
     rows = [json.loads(line) for line in out.read_text().splitlines()]
 
+    from notion_timetracking_etl_spark.lifecycle import free
     from notion_timetracking_etl_spark.operators.kmeans import kmeans_fit
     from notion_timetracking_etl_spark.operators.pq import pq_codes, pq_fit
     from notion_timetracking_etl_spark.queries.similarity import load_embeddings
 
     emb = load_embeddings(spark, sf).select("vec_id", "embedding")
     assert len(rows) == emb.count()
-    asg, _ = kmeans_fit(emb, k=8, iters=3, scoped=False)
+    asg, cent = kmeans_fit(emb, k=8, iters=3, scoped=False)
     want_cell = {r["vec_id"]: r["cid"] for r in asg.collect()}
     direct = pq_fit(emb, m=4, k=8, iters=2, scoped=False)
     want_codes: dict[int, dict[int, int]] = {}
     for r in pq_codes(direct).collect():
         want_codes.setdefault(r["vec_id"], {})[r["sub"]] = r["code"]
+    # scoped=False hands the fitted checkpoints to the caller
+    for df in (cent, *(c for _j, _asg, c in direct)):
+        free(df)
     for row in rows:
         vid = row["vec_id"]
         assert row["cell"] == want_cell[vid]

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
+from notion_timetracking_etl_spark.lifecycle import free, release_scoped_caches
 from notion_timetracking_etl_spark.operators.kmeans import kmeans
 from notion_timetracking_etl_spark.queries import REGISTRY
 from notion_timetracking_etl_spark.sources.tpch import load_table
@@ -172,8 +172,6 @@ def test_model_store_roundtrip_and_new_corpus_encoding(spark, tmp_path, sf_dir):
     assignments; (b) same for all M PQ subspace code tables; (c) a frozen
     model encodes a vector the fit never saw (the incremental-ingest
     serve path) without retraining."""
-    import pyspark.sql.functions as F
-
     from notion_timetracking_etl_spark.operators.kmeans import kmeans_fit
     from notion_timetracking_etl_spark.operators.model_store import (
         load_kmeans_model,
@@ -186,29 +184,36 @@ def test_model_store_roundtrip_and_new_corpus_encoding(spark, tmp_path, sf_dir):
 
     emb = load_embeddings(spark, sf_dir).select("vec_id", "embedding")
 
+    # scoped=False hands the fitted checkpoints to the caller: free them
+    # here, or their blocks stay until the JVM collects the plans
     asg, cent = kmeans_fit(emb, k=8, iters=3, scoped=False)
-    save_kmeans_model(cent, str(tmp_path / "km"))
-    asg2, cent2 = load_kmeans_model(spark, emb, str(tmp_path / "km"))
-    assert sorted(map(tuple, asg.collect())) == sorted(map(tuple, asg2.collect()))
-    assert sorted(map(tuple, cent.collect())) == sorted(map(tuple, cent2.collect()))
-
     models = pq_fit(emb, m=4, k=8, iters=2, scoped=False)
-    save_pq_model(models, str(tmp_path / "pq"))
-    models2 = load_pq_model(spark, emb, str(tmp_path / "pq"))
-    assert [j for j, *_ in models2] == [0, 1, 2, 3]
-    c1 = sorted(map(tuple, pq_codes(models).collect()))
-    c2 = sorted(map(tuple, pq_codes(models2).collect()))
-    assert c1 == c2
+    try:
+        save_kmeans_model(cent, str(tmp_path / "km"))
+        asg2, cent2 = load_kmeans_model(spark, emb, str(tmp_path / "km"))
+        assert sorted(map(tuple, asg.collect())) == sorted(map(tuple, asg2.collect()))
+        assert sorted(map(tuple, cent.collect())) == sorted(map(tuple, cent2.collect()))
 
-    # Serve path: an unseen vector encodes against the frozen model.
-    new = emb.limit(1).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"),
-        F.expr("transform(embedding, x -> float(x) * float(0.5))")
-        .alias("embedding"),
-    )
-    nasg, _ = load_kmeans_model(spark, new, str(tmp_path / "km"))
-    rows = nasg.collect()
-    assert len(rows) == 1 and rows[0]["cid"] is not None
+        save_pq_model(models, str(tmp_path / "pq"))
+        models2 = load_pq_model(spark, emb, str(tmp_path / "pq"))
+        assert [j for j, *_ in models2] == [0, 1, 2, 3]
+        c1 = sorted(map(tuple, pq_codes(models).collect()))
+        c2 = sorted(map(tuple, pq_codes(models2).collect()))
+        assert c1 == c2
+
+        # Serve path: an unseen vector encodes against the frozen model.
+        new = emb.limit(1).select(
+            (F.col("vec_id") + 1_000_000).alias("vec_id"),
+            F.expr("transform(embedding, x -> float(x) * float(0.5))")
+            .alias("embedding"),
+        )
+        nasg, _ = load_kmeans_model(spark, new, str(tmp_path / "km"))
+        rows = nasg.collect()
+        assert len(rows) == 1 and rows[0]["cid"] is not None
+    finally:
+        for df in (cent, *(c for _j, _asg, c in models)):
+            free(df)
+        release_scoped_caches()
 
 
 def test_semdedup_incremental_flags_planted_batch_dup_only(spark, tmp_path):

@@ -61,9 +61,7 @@ def test_multiword_blocking_complete_at_random_configs(spark, cfg, seed):
         rows.append((i, *_to_words(rng.getrandbits(n_bits), n_words)))
 
     from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
-    from notion_timetracking_etl_spark.operators.dedup import (
-        hamming_pairs_from_word_sigs,
-    )
+    from notion_timetracking_etl_spark.operators.dedup import hamming_pairs
 
     word_cols = [f"w{j}" for j in range(n_words)]
     schema = "id long, " + ", ".join(f"{w} long" for w in word_cols)
@@ -82,8 +80,8 @@ def test_multiword_blocking_complete_at_random_configs(spark, cfg, seed):
     try:
         got = {
             (r.a, r.b)
-            for r in hamming_pairs_from_word_sigs(
-                sig, "id", word_cols, radius, level=level
+            for r in hamming_pairs(
+                sig, "id", word_cols, n_bits, radius, level=level
             ).collect()
         }
         assert got == brute, (cfg, seed)
@@ -110,12 +108,12 @@ def test_fanout_paths_emit_identical_bucket_keys(spark, seed):
     try:
         a = sorted(
             (r.id, r.bi, r.bv)
-            for r in D.pigeonhole_buckets_multi(sig, wc, 256, 24, 2).collect()
+            for r in D.pigeonhole_buckets(sig, wc, 256, 24, 2).collect()
         )
         D.PIGEONHOLE_CODEGEN_COMBOS = 0  # force the broadcast-data path
         b = sorted(
             (r.id, r.bi, r.bv)
-            for r in D.pigeonhole_buckets_multi(sig, wc, 256, 24, 2).collect()
+            for r in D.pigeonhole_buckets(sig, wc, 256, 24, 2).collect()
         )
     finally:
         D.PIGEONHOLE_CODEGEN_COMBOS = saved

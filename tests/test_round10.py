@@ -98,13 +98,12 @@ class TestPigeonholeLevelInvariance:
         assert len(sets[1]) >= 50  # the planted dups actually surfaced
 
     def test_phash_auto_level_end_to_end(self, spark):
-        """The auto path (level=None) actually switches levels: a tiny
-        `target` forces level > 1 through the public API and the result
-        still matches level 1."""
+        """The ladder's deepest level, forced through the public API (the
+        level a far larger corpus would pick), still matches level 1."""
         df = _planted_sig_df(spark, n_base=120, n_dups=30, seed=9)
         base = phash_near_dup_pairs(df, max_hamming=8, px_l1_max=10, level=1)
         forced = phash_near_dup_pairs(
-            df, max_hamming=8, px_l1_max=10, level=None, target=1
+            df, max_hamming=8, px_l1_max=10, level=PIGEONHOLE_MAX_LEVEL
         )
         assert {tuple(r) for r in base.collect()} == {
             tuple(r) for r in forced.collect()
@@ -150,7 +149,7 @@ class TestPigeonholeDenseCorpusBudget:
         df.unpersist()
 
     def _raw_candidates(self, sig, level: int) -> int:
-        b = pigeonhole_buckets(sig, "phash", 64, 8, level)
+        b = pigeonhole_buckets(sig, ["phash"], 64, 8, level)
         left = b.select(F.col("media_id").alias("a"), "bi", "bv")
         right = b.select(F.col("media_id").alias("b"), "bi", "bv")
         return (

@@ -135,7 +135,7 @@ def test_simhash_summary_mega_dup_fixture(spark):
     summary emits O(clusters) rows while the doc-pair space is quadratic."""
     from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.dedup import (
-        hamming_pairs_from_sigs,
+        hamming_pairs,
         simhash_from_hashes,
         word_hashes,
     )
@@ -149,7 +149,7 @@ def test_simhash_summary_mega_dup_fixture(spark):
     ds = sigs.select("s").distinct()
     # the collapse: 50-doc pile -> ONE distinct signature node
     assert ds.count() <= 6
-    pairs = hamming_pairs_from_sigs(ds, "s", "s", 32, 2, level=1)
+    pairs = hamming_pairs(ds, "s", ["s"], 32, 2, level=1)
     # distinct-sig pair space is tiny where the doc pair space is 50*49/2
     assert pairs.count() <= 15
     release_scoped_caches()
@@ -250,9 +250,7 @@ def test_multiword_pigeonhole_level_invariance(spark):
     import random
 
     from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
-    from notion_timetracking_etl_spark.operators.dedup import (
-        hamming_pairs_from_word_sigs,
-    )
+    from notion_timetracking_etl_spark.operators.dedup import hamming_pairs
 
     rng = random.Random(11)
 
@@ -308,8 +306,8 @@ def test_multiword_pigeonhole_level_invariance(spark):
         for level in levels:
             got = sorted(
                 (r["a"], r["b"], r["hamming"])
-                for r in hamming_pairs_from_word_sigs(
-                    sig, "id", ["w0", "w1", "w2", "w3"], radius, level=level
+                for r in hamming_pairs(
+                    sig, "id", ["w0", "w1", "w2", "w3"], 256, radius, level=level
                 ).collect()
             )
             release_scoped_caches()
@@ -565,8 +563,8 @@ def test_multiword_pigeonhole_rejects_wide_blocks(spark):
     so it never constructs one."""
     from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.dedup import (
-        hamming_pairs_from_word_sigs,
-        pigeonhole_buckets_multi,
+        hamming_pairs,
+        pigeonhole_buckets,
     )
 
     sig = spark.createDataFrame(
@@ -574,10 +572,10 @@ def test_multiword_pigeonhole_rejects_wide_blocks(spark):
         "id long, w0 long, w1 long, w2 long, w3 long",
     )
     with pytest.raises(ValueError, match="need max_hamming \\+ level"):
-        pigeonhole_buckets_multi(sig, ["w0", "w1", "w2", "w3"], 256, 3, 1)
+        pigeonhole_buckets(sig, ["w0", "w1", "w2", "w3"], 256, 3, 1)
     # the adaptive path floors level to n_words - radius + 1 and succeeds
-    pairs = hamming_pairs_from_word_sigs(
-        sig, "id", ["w0", "w1", "w2", "w3"], max_hamming=3
+    pairs = hamming_pairs(
+        sig, "id", ["w0", "w1", "w2", "w3"], 256, max_hamming=3
     ).collect()
     assert [(r["a"], r["b"], r["hamming"]) for r in pairs] == [(1, 2, 1)]
     release_scoped_caches()

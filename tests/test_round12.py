@@ -8,7 +8,7 @@ import pytest
 
 
 # ---------------------------------------------------------------------------
-# pigeonhole_buckets_multi: the combination fan-out ships as broadcast data,
+# pigeonhole_buckets: the multi-word combination fan-out ships as broadcast data,
 # so the deep levels the adaptive ladder claims (radius 24 -> level 3 past
 # ~3.3M signatures, level 4 past ~188M) actually EXECUTE — the old
 # per-combination struct explode failed Janino codegen at C(27,3)=2925
@@ -32,8 +32,8 @@ def test_multiword_pigeonhole_deep_levels_execute(spark):
 
     from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
     from notion_timetracking_etl_spark.operators.dedup import (
-        hamming_pairs_from_word_sigs,
-        pigeonhole_buckets_multi,
+        hamming_pairs,
+        pigeonhole_buckets,
     )
 
     rng = random.Random(12)
@@ -68,13 +68,13 @@ def test_multiword_pigeonhole_deep_levels_execute(spark):
         for level in (3, 4):
             got = {
                 (r.a, r.b)
-                for r in hamming_pairs_from_word_sigs(
-                    sig, "id", ["w0", "w1", "w2", "w3"], 24, level=level
+                for r in hamming_pairs(
+                    sig, "id", ["w0", "w1", "w2", "w3"], 256, 24, level=level
                 ).collect()
             }
             assert got == brute, level
         # the fan-out itself is exactly one row per (signature, combination)
-        n3 = pigeonhole_buckets_multi(
+        n3 = pigeonhole_buckets(
             sig, ["w0", "w1", "w2", "w3"], 256, 24, 3
         ).count()
         assert n3 == len(rows) * 2925
