@@ -24,9 +24,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from notion_timetracking_etl_spark.lifecycle import release_scoped_caches  # noqa: E402
 from notion_timetracking_etl_spark.queries import REGISTRY  # noqa: E402
-from notion_timetracking_etl_spark.session import build_session  # noqa: E402
+from tools.harness import settle, warm_session  # noqa: E402
 
 
 def load_baseline_minima() -> dict[str, float]:
@@ -50,42 +49,14 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    spark = build_session(app_name="bench")
-    # BENCH_r03.json's `parsed: null` post-mortem: the driver merges stderr
-    # into its stdout capture and caps the captured byte count; round 3's
-    # cumulative Spark WARN noise (71 queries incl. streaming) hit the cap
-    # MID-final-JSON-line, so the driver's parser saw a truncated line.
-    # Suppress everything below ERROR so the capture stays a few KB and the
-    # final line always survives intact.
-    spark.sparkContext.setLogLevel("ERROR")
-    # Warm up the JVM/codegen path outside the timed region.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    # Warm the Python worker fleet too (fork + pandas/pyarrow import happens
-    # once per session; steady-state queries reuse the workers).
-    import pandas as pd  # noqa: F401
-
-    spark.range(spark.sparkContext.defaultParallelism * 4).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(lambda it: it, "id long").count()
+    spark = warm_session("bench")
 
     def run_once(name: str) -> float:
         t0 = time.perf_counter()
         # count() executes the full plan without driver-side row transfer cost
         REGISTRY[name].spark(spark, sf_dir).count()
         dt = time.perf_counter() - t0
-        # Free this query's query-scoped intermediates (never clearCache():
-        # see notion_timetracking_etl_spark/lifecycle.py). Outside the timed
-        # region: cache teardown isn't query work.
-        release_scoped_caches()
-        # GC-settle barrier: a heavy query's freed cache/checkpoint blocks
-        # leave JVM GC pressure that bleeds ~1-3s into whatever runs next
-        # (round 4: dedup_dimension read 2.6x its baseline purely from
-        # following the 10s dedup_clusters; with this barrier it re-measures
-        # at ~1x). Explicit System.gc() + a tiny job to let executors settle,
-        # both outside the timed region — inter-query hygiene, not query
-        # work.
-        spark.sparkContext._jvm.System.gc()
-        spark.range(1000).count()
+        settle(spark)
         return dt
 
     baseline = load_baseline_minima()

@@ -1,5 +1,6 @@
-"""Frequency-sketch operators (engine extension): Misra-Gries heavy hitters
-with exact verification.
+"""Sketch operators (engine extension): Misra-Gries heavy hitters with exact
+verification, Count-Min counters, and the shared algebra of the bottom-k
+(KMV distinct, quantile hash sample) and HyperLogLog register sketches.
 
 Finding all items with frequency > n/k by a full ``groupBy(item).count()``
 shuffles the ENTIRE item stream — at 100 TB that is the dominant cost when the
@@ -35,11 +36,11 @@ module is part of the training-data-pipeline extension surface.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 import pyspark.sql.functions as F
 
 from ..lifecycle import scoped_persist
@@ -196,3 +197,56 @@ def countmin_estimate(
         .groupBy("item")
         .agg(F.min("counter").cast("bigint").alias("cms_est"))
     )
+
+
+# ---------------------------------------------------------------------------
+# Mergeable sketches over a 56-bit hash: bottom-k (KMV distinct count, the
+# quantile hash sample) and HyperLogLog registers. Every fold below is a
+# commutative, associative merge, so partials built over disjoint parts (per
+# partition, per date, per micro-batch) merge to the single-pass sketch (the
+# argument is written out in queries/lake.py's module docstring).
+# ---------------------------------------------------------------------------
+
+KMV_K = 64  # bottom-k distinct sketch size
+QS_K = 256  # bottom-k hash sample size per group
+HLL_M = 32  # HyperLogLog registers (5 index bits of the 56-bit hash)
+
+
+def hash56(prefix: str, col: Column | str) -> Column:
+    """56-bit hash of ``prefix || col``: the first 14 sha256 hex chars as
+    BIGINT. DuckDB replays it as
+    ``CAST(concat('0x', substr(sha256(concat(prefix, x)), 1, 14)) AS BIGINT)``."""
+    return F.conv(
+        F.substring(F.sha2(F.concat(F.lit(prefix), col), 256), 1, 14), 16, 10
+    ).cast("long")
+
+
+def bottom_k(
+    df: DataFrame, by: Sequence[str], k: int, order: Sequence[str] = ("h",)
+) -> DataFrame:
+    """The ``k`` rows of each ``by`` group that sort first by ``order``
+    (ascending). The ``row_number`` filter rides Spark's WindowGroupLimit
+    rewrite, so each map task forwards at most ``k`` rows per group before
+    the exchange."""
+    w = Window.partitionBy(*by).orderBy(*[F.col(c).asc() for c in order])
+    return (
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+    )
+
+
+def max_registers(df: DataFrame, by: Sequence[str]) -> DataFrame:
+    """HyperLogLog registers ``(by..., idx, rank)``: the register-wise MAX
+    of the ``rank`` rows per ``(by..., idx)``."""
+    return df.groupBy(*by, "idx").agg(F.max("rank").alias("rank"))
+
+
+def compaction_grain(pivot: str) -> Column:
+    """The compaction grain of a date partition ``event_date``: its ISO
+    week start (a Monday) before ``pivot``, the date itself from ``pivot``
+    on. A NULL date keeps a NULL grain."""
+    return F.when(
+        F.col("event_date") < F.lit(pivot).cast("date"),
+        F.date_trunc("week", F.col("event_date")).cast("date"),
+    ).otherwise(F.col("event_date"))

@@ -32,9 +32,11 @@ import pyspark.sql.functions as F
 
 from ..lifecycle import write_once, written
 from ..operators.cluster import connected_components
+from ..operators.sketch import KMV_K
 from ..sources.tpch import load_table
 from .dedup import MINHASH_PAIRS_CTES, near_dup_pairs_cached
 from .helpers import ordered_small
+from .lake import SKETCH_KINDS, group_key, sketch_lake
 from .layout import N_SHARDS, SHARD_TARGET_BYTES
 from .registry import register
 
@@ -367,8 +369,6 @@ def _forget_lake_oracle_sql(deleted_pred: str = DELETED_USER_PRED) -> str:
     predicate so the streaming twin (a richer multi-user set split into
     waves) reuses the ONE canonical oracle — the stitched stream state is
     order-independent, so the full-set replay serves both forms."""
-    from .sketches import KMV_K
-
     return f"""
         WITH keyed AS (
           SELECT DISTINCT CAST(ts AS DATE) AS d, event_type AS g, user_id,
@@ -448,6 +448,60 @@ def _forget_lake_oracle_sql(deleted_pred: str = DELETED_USER_PRED) -> str:
     """
 
 
+def _sketch_sweep_report(
+    before: DataFrame,
+    stitched: DataFrame,
+    hashed_after: DataFrame,
+    touched: DataFrame,
+) -> DataFrame:
+    """The KMV sketch-lake sweep audit shared by the batch and streaming
+    sweeps, per event type: the lake's partition counts (total, and
+    ``touched`` by the deletes), the ``stitched`` lake's merged sketch, and
+    whether it equals a from-scratch sketch of the post-delete dated hashes
+    ``hashed_after``."""
+    kmv = SKETCH_KINDS["kmv"]
+    scratch = kmv.summarize(kmv.merge(hashed_after)).select(
+        group_key(),
+        F.col("kth_min").alias("kth_s"),
+        F.col("n_in_sketch").alias("n_s"),
+    )
+    cb = (
+        before.join(
+            touched.withColumn("is_touched", F.lit(1)), "event_date", "left"
+        )
+        .groupBy("g")
+        .agg(
+            F.countDistinct("event_date")
+            .cast("bigint")
+            .alias("n_partials_total"),
+            F.countDistinct(
+                F.when(F.col("is_touched") == 1, F.col("event_date"))
+            )
+            .cast("bigint")
+            .alias("n_partials_touched"),
+        )
+        .select(group_key(), "n_partials_total", "n_partials_touched")
+    )
+    return ordered_small(
+        kmv.summarize(kmv.merge(stitched))
+        .withColumn("gk", group_key())
+        .join(scratch, "gk")
+        .join(cb, "gk")
+        .select(
+            F.col("g").alias("event_type"),
+            "n_partials_total",
+            "n_partials_touched",
+            "kth_min",
+            "n_in_sketch",
+            (
+                (F.col("kth_min") == F.col("kth_s"))
+                & (F.col("n_in_sketch") == F.col("n_s"))
+            ).alias("stitched_equals_scratch"),
+        ),
+        "event_type",
+    )
+
+
 @register(
     "deletion_propagation_sketch_lake",
     "S6-analog,A10-ext,V4-analog",
@@ -469,9 +523,7 @@ def _forget_lake_oracle_sql(deleted_pred: str = DELETED_USER_PRED) -> str:
 def deletion_propagation_sketch_lake(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .lake import kmv_merge_sketch, kmv_sketch_lake
-
-    gk = F.coalesce(F.col("g"), F.lit("\x00<null>")).alias("gk")
+    kmv = SKETCH_KINDS["kmv"]
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
@@ -482,60 +534,17 @@ def deletion_propagation_sketch_lake(
         .distinct()
     )
 
-    before = kmv_sketch_lake(spark, sf_dir)
+    before = sketch_lake(spark, sf_dir, "kmv")
     kept = before.join(touched, "event_date", "left_anti")
-    from .lake import kmv_dated_hashes, kmv_partial_sketches
-
-    # the post-delete key/hash stream through the ONE canonical recipe
-    # (lake.kmv_dated_hashes with a caller-filtered events view) — a copied
-    # recipe that drifted would only surface at runtime as a stitched-lake
-    # hash mismatch
-    hashed_after = kmv_dated_hashes(
-        spark, sf_dir, ev=ev.filter(~F.expr(DELETED_USER_PRED))
-    )
+    # the post-delete key/hash stream through the lake's own recipe — a
+    # copied recipe that drifted would only surface at runtime as a
+    # stitched-lake hash mismatch
+    hashed_after = kmv.fields(ev.filter(~F.expr(DELETED_USER_PRED)))
     # rebuild ONLY the touched partitions from the post-delete corpus: the
     # date semi-join prunes the scan to those partitions in production
-    rebuilt = kmv_partial_sketches(hashed_after.join(touched, "event_date"))
-    stitched = kept.unionByName(rebuilt)
-
-    ms = kmv_merge_sketch(stitched.select("g", "h")).withColumn("gk", gk)
-    scratch = kmv_merge_sketch(hashed_after.select("g", "h")).select(
-        gk,
-        F.col("kth_min").alias("kth_s"),
-        F.col("n_in_sketch").alias("n_s"),
-    )
-    cb = (
-        before.join(
-            touched.withColumn("is_touched", F.lit(1)), "event_date", "left"
-        )
-        .groupBy("g")
-        .agg(
-            F.countDistinct("event_date")
-            .cast("bigint")
-            .alias("n_partials_total"),
-            F.countDistinct(
-                F.when(F.col("is_touched") == 1, F.col("event_date"))
-            )
-            .cast("bigint")
-            .alias("n_partials_touched"),
-        )
-        .select(gk, "n_partials_total", "n_partials_touched")
-    )
-    return ordered_small(
-        ms.join(scratch, "gk")
-        .join(cb, "gk")
-        .select(
-            F.col("g").alias("event_type"),
-            "n_partials_total",
-            "n_partials_touched",
-            "kth_min",
-            "n_in_sketch",
-            (
-                (F.col("kth_min") == F.col("kth_s"))
-                & (F.col("n_in_sketch") == F.col("n_s"))
-            ).alias("stitched_equals_scratch"),
-        ),
-        "event_type",
+    rebuilt = kmv.partial(hashed_after.join(touched, "event_date"))
+    return _sketch_sweep_report(
+        before, kept.unionByName(rebuilt), hashed_after, touched
     )
 
 
@@ -1841,7 +1850,7 @@ def sketch_forget_step_factory(
     tombstones, rebuild ONLY this wave's touched date partitions from the
     corpus minus every tombstone seen so far, stitch into the lake state.
     ``state`` carries {"lake": DataFrame|None, "dead": DataFrame|None}."""
-    from .lake import kmv_dated_hashes, kmv_partial_sketches
+    kmv = SKETCH_KINDS["kmv"]
 
     def step(batch: DataFrame) -> None:
         dead_now = batch.select("user_id")
@@ -1858,22 +1867,20 @@ def sketch_forget_step_factory(
         lake = state["lake"] if state["lake"] is not None else before
         kept = lake.join(touched, "event_date", "left_anti")
         # rebuild the touched partitions from the corpus minus every
-        # tombstone seen SO FAR, through the one canonical key/hash recipe.
+        # tombstone seen SO FAR, through the lake's own key/hash recipe.
         # The events scan is PRUNED to the touched dates BEFORE the
-        # distinct (r12 review: the date join cannot push below
-        # kmv_dated_hashes' aggregate, so filtering after it paid a
-        # whole-corpus distinct per wave — a key embeds its date, so the
-        # pre-filtered recipe yields identical hashes at O(touched) cost,
-        # which is the registered bound)
+        # distinct (the date join cannot push below the recipe's distinct
+        # aggregate, so filtering after it paid a whole-corpus distinct per
+        # wave — a key embeds its date, so the pre-filtered recipe yields
+        # identical hashes at O(touched) cost, which is the registered
+        # bound)
         ev_touched = ev.join(
             touched, F.to_date("ts") == F.col("event_date")
         ).drop("event_date")
-        hashed_alive = kmv_dated_hashes(
-            spark,
-            sf_dir,
-            ev=ev_touched.join(state["dead"], "user_id", "left_anti"),
+        hashed_alive = kmv.fields(
+            ev_touched.join(state["dead"], "user_id", "left_anti")
         )
-        rebuilt = kmv_partial_sketches(hashed_alive)
+        rebuilt = kmv.partial(hashed_alive)
         state["lake"] = kept.unionByName(rebuilt).localCheckpoint()
 
     return step
@@ -1908,9 +1915,7 @@ def streaming_forget_sketch_lake(
     import tempfile
 
     from ..streaming.forgetgate import tombstone_drain
-    from .lake import kmv_dated_hashes, kmv_merge_sketch, kmv_sketch_lake
 
-    gk = F.coalesce(F.col("g"), F.lit("\x00<null>")).alias("gk")
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
@@ -1927,7 +1932,7 @@ def streaming_forget_sketch_lake(
         ],
     )
 
-    before = kmv_sketch_lake(spark, sf_dir)  # the PHYSICAL persisted lake
+    before = sketch_lake(spark, sf_dir, "kmv")  # the PHYSICAL persisted lake
     state: dict = {"lake": None, "dead": None}
     step = sketch_forget_step_factory(spark, sf_dir, ev, before, state)
 
@@ -1936,52 +1941,15 @@ def streaming_forget_sketch_lake(
     )
     stitched = state["lake"] if state["lake"] is not None else before
 
-    hashed_after = kmv_dated_hashes(
-        spark, sf_dir, ev=ev.filter(~F.expr(STREAM_DELETED_USER_PRED))
-    )
-    ms = kmv_merge_sketch(stitched.select("g", "h")).withColumn("gk", gk)
-    scratch = kmv_merge_sketch(hashed_after.select("g", "h")).select(
-        gk,
-        F.col("kth_min").alias("kth_s"),
-        F.col("n_in_sketch").alias("n_s"),
+    hashed_after = SKETCH_KINDS["kmv"].fields(
+        ev.filter(~F.expr(STREAM_DELETED_USER_PRED))
     )
     touched_all = F.broadcast(
         ev.filter(F.expr(STREAM_DELETED_USER_PRED))
         .select(F.to_date("ts").alias("event_date"))
         .distinct()
-        .withColumn("is_touched", F.lit(1))
     )
-    cb = (
-        before.join(touched_all, "event_date", "left")
-        .groupBy("g")
-        .agg(
-            F.countDistinct("event_date")
-            .cast("bigint")
-            .alias("n_partials_total"),
-            F.countDistinct(
-                F.when(F.col("is_touched") == 1, F.col("event_date"))
-            )
-            .cast("bigint")
-            .alias("n_partials_touched"),
-        )
-        .select(gk, "n_partials_total", "n_partials_touched")
-    )
-    return ordered_small(
-        ms.join(scratch, "gk")
-        .join(cb, "gk")
-        .select(
-            F.col("g").alias("event_type"),
-            "n_partials_total",
-            "n_partials_touched",
-            "kth_min",
-            "n_in_sketch",
-            (
-                (F.col("kth_min") == F.col("kth_s"))
-                & (F.col("n_in_sketch") == F.col("n_s"))
-            ).alias("stitched_equals_scratch"),
-        ),
-        "event_type",
-    )
+    return _sketch_sweep_report(before, stitched, hashed_after, touched_all)
 
 
 def _mm_stream_forget_oracle_sql() -> str:

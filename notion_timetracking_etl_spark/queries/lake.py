@@ -19,6 +19,41 @@ a testdata regen between driver rounds can never serve stale rows — and
 the registered query then reads it back WITH a partition predicate. The
 DuckDB oracle computes the identical result straight from the raw events
 view, proving the partitioned round-trip loses nothing.
+
+Persisted-sketch lakes
+----------------------
+The 100 TB count-distinct and quantile pattern, where raw events are too big
+to rescan per question: three mergeable sketch kinds (``SKETCH_KINDS``) —
+the KMV bottom-k distinct sketch, the HLL registers and the bottom-k
+quantile hash sample — are kept as per-(event_date, event_type) partials in
+a date-partitioned lake (``sketch_lake``). Queries merge them on read,
+compact them in place to coarser grains and retire old grains, and the
+deletion sweeps in queries/forget.py rebuild only the partitions a delete
+touches. Each of those operations is the kind's one ``fold`` (bottom-k, or
+register-wise MAX) over a different grouping, and each fold is a monoid, so
+every audit hashes an exact equality, never a tolerance:
+
+- Per-date partials partition the key space. A KMV or HLL key is
+  'user_id:yyyy-MM-dd' and embeds its day; a sample row is one event with
+  one timestamp (a NULL one lands in the hive default partition). Every key
+  is in exactly one date partition, so the partials' inputs are the whole
+  corpus with no key counted twice, and a delete can only change the
+  partitions its keys live in.
+- Bottom-k loses nothing. Under a total order, a row outside its part's
+  first k has k rows before it in that part, hence in the union; so the
+  first k of a union are among the first k of its parts. Merging partials,
+  or re-merging them at a week or month grain any number of times, keeps
+  exactly the whole-corpus bottom-k. The quantile sample is the same fold
+  with each row carrying its value; it orders by (h, value), so two events
+  that share a 56-bit hash still leave one deterministic survivor at every
+  fold.
+- MAX loses nothing. A register is the MAX rank of its keys, and the MAX of
+  per-part MAXes is the MAX of the union.
+- Reads pass an explicit schema. An empty events table writes a lake with
+  zero partition directories, where schema and partition inference have
+  nothing to look at and raise UNABLE_TO_INFER_SCHEMA; a filtered-to-zero
+  corpus is a legitimate production state (ROBUSTNESS.md §1), so every lake
+  read passes the schema of the frame it wrote.
 """
 
 from __future__ import annotations
@@ -26,15 +61,41 @@ from __future__ import annotations
 import os
 import re
 import tempfile
+from collections.abc import Callable, Sequence
+from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from ..lifecycle import write_once
+from ..operators.sketch import (
+    HLL_M,
+    KMV_K,
+    QS_K,
+    bottom_k,
+    compaction_grain,
+    max_registers,
+)
 from ..sinks.parquet import write_bucketed_table, write_partitioned_lake
 from ..sources.tpch import load_table
 from .helpers import DATE_FMT_SPARK, dsum, dsum_sql, ordered_small
 from .registry import register
+from .sketches import (
+    _HLL_IDX_SHIFT,
+    _HLL_NUM,
+    _HLL_RANK_MAX,
+    _HLL_W_MASK,
+    _KMV_SPACE,
+    hll_estimate_col,
+    hll_rank_fields,
+    hll_stats_aggs,
+    kmv_hashed,
+    kmv_stats_aggs,
+    qs_keyed_values,
+    qs_percentile_aggs,
+    user_day_keys,
+)
 
 def _lake_path(sf_dir: str, leaf: str) -> str:
     """Scratch path for a derived lake of ``sf_dir``: one sanitize rule,
@@ -201,109 +262,263 @@ def lake_bucketed_cohort_activity(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# Persisted-sketch lake maintenance (r8 verdict task #3): per-partition KMV
-# partials written to the lake, merged on read — the 100 TB pattern where
-# raw events are too big to rescan per question.
+# Persisted-sketch lakes (see the module docstring)
 # ---------------------------------------------------------------------------
 
+# Grain pivot: daily partials strictly BEFORE this date compact to ISO-week
+# grain; later dates stay daily (the hot tail an ingest keeps fine-grained).
+LAKE_COMPACT_PIVOT = "2024-01-15"
+# Retention: grain partitions strictly BEFORE this date are retired. Aligned
+# to an ISO-week boundary so retained-compacted == retained-daily exactly.
+LAKE_RETAIN_CUTOFF = "2024-01-08"
 
-def _sketch_lake_path(sf_dir: str) -> str:
-    return _lake_path(sf_dir, "events_kmv_by_date")
+
+def _dated_group() -> tuple[Column, Column]:
+    return F.to_date("ts").alias("event_date"), F.col("event_type").alias("g")
 
 
-def kmv_dated_hashes(
-    spark: SparkSession, sf_dir: str, ev: DataFrame | None = None
+def _kmv_fields(ev: DataFrame) -> DataFrame:
+    return kmv_hashed(ev, *_dated_group()).select("event_date", "g", "h")
+
+
+def _hll_fields(ev: DataFrame) -> DataFrame:
+    keyed = user_day_keys(ev, *_dated_group())
+    return hll_rank_fields(keyed, "event_date", "g")
+
+
+def _qs_fields(ev: DataFrame) -> DataFrame:
+    return qs_keyed_values(ev, F.to_date("ts").alias("event_date"))
+
+
+def _qs_fingerprint() -> list[Column]:
+    """A sample as a set: its size, and the bit_xor and max of its hashes."""
+    return [
+        F.count(F.lit(1)).cast("bigint").alias("n_sample"),
+        F.expr("bit_xor(h)").cast("bigint").alias("xh"),
+        F.max("h").cast("bigint").alias("mh"),
+    ]
+
+
+@dataclass(frozen=True)
+class SketchKind:
+    """One mergeable sketch family as its lake stores it.
+
+    ``fields`` maps events (or a filtered view of them, such as a deletion
+    sweep's post-delete corpus) to the dated rows the sketch folds,
+    ``(event_date, g, *cols)``: one row per distinct key (KMV, HLL) or per
+    sample-eligible event (QS). ``fold`` merges rows to one sketch per key:
+    the bottom-``k`` rows by ``order`` when ``k`` is set, the register-wise
+    MAX otherwise. ``summary`` aggregates one merged sketch per ``g``;
+    ``equal`` names the summary columns two merges of the same rows agree
+    on. ``sort`` orders the rows inside each lake file."""
+
+    fields: Callable[[DataFrame], DataFrame]
+    cols: tuple[str, ...]
+    summary: Callable[[], list[Column]]
+    equal: tuple[str, ...]
+    sort: tuple[str, ...]
+    k: int | None = None
+    order: tuple[str, ...] = ("h",)
+
+    def dated(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        return self.fields(load_table(spark, sf_dir, "events"))
+
+    def fold(self, rows: DataFrame, keys: list[str]) -> DataFrame:
+        rows = rows.select(*keys, *self.cols)
+        if self.k is None:
+            return max_registers(rows, keys)
+        return bottom_k(rows, keys, self.k, self.order)
+
+    def partial(self, fields: DataFrame) -> DataFrame:
+        """Per-(event_date, g) partials: the unit an ingest maintains per
+        partition as new data lands."""
+        return self.fold(fields, ["event_date", "g"])
+
+    def merge(self, partials: DataFrame) -> DataFrame:
+        return self.fold(partials, ["g"])
+
+    def compact(
+        self, partials: DataFrame, pivot: str = LAKE_COMPACT_PIVOT
+    ) -> DataFrame:
+        """(grain_date, g, *cols): daily partials re-merged to their
+        compaction grain (``operators.sketch.compaction_grain``)."""
+        grained = partials.withColumn("grain_date", compaction_grain(pivot))
+        return self.fold(grained, ["grain_date", "g"])
+
+    def summarize(self, sketch: DataFrame, *extra: Column) -> DataFrame:
+        return sketch.groupBy("g").agg(*self.summary(), *extra)
+
+
+SKETCH_KINDS = {
+    "kmv": SketchKind(
+        _kmv_fields, ("h",), kmv_stats_aggs, ("kth_min", "n_in_sketch"),
+        ("g", "h"), k=KMV_K,
+    ),
+    "hll": SketchKind(
+        _hll_fields, ("idx", "rank"), hll_stats_aggs,
+        ("t", "n_zero_registers"), ("g", "idx"),
+    ),
+    "qs": SketchKind(
+        _qs_fields, ("value", "h"), _qs_fingerprint, ("n_sample", "xh", "mh"),
+        ("g", "h"), k=QS_K, order=("h", "value"),
+    ),
+}
+
+
+def sketch_lake(
+    spark: SparkSession, sf_dir: str, kind: str, compacted: bool = False
 ) -> DataFrame:
-    """(event_date, g, h): the KMV family's distinct per-type user-day keys
-    (queries/sketches.py::kmv_hashed_df — same key, same 56-bit
-    sha256('kmv:'||key) hash) carrying the partition date. A key embeds its
-    day, so per-date partials partition the key space exactly. ``ev``
-    overrides the events source (a caller-filtered view, e.g. the deletion
-    sweep's post-delete corpus) so the ONE canonical key/hash recipe serves
-    every consumer — a copied recipe that drifted would only surface at
-    runtime as a stitched-lake hash mismatch."""
-    if ev is None:
-        ev = load_table(spark, sf_dir, "events")
-    ev = ev.filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
-    day = F.date_format(F.to_date("ts"), DATE_FMT_SPARK)
-    keyed = ev.select(
-        F.to_date("ts").alias("event_date"),
-        F.col("event_type").alias("g"),
-        F.concat(F.col("user_id").cast("string"), F.lit(":"), day).alias("key"),
-    ).distinct()
-    return keyed.select(
-        "event_date",
-        "g",
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("kmv:"), F.col("key")), 256), 1, 14
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h"),
-    )
-
-
-def kmv_partial_sketches(hashed: DataFrame) -> DataFrame:
-    """Per-(event_date, g) bottom-k partial sketch rows — the unit a 100 TB
-    ingest maintains per partition as new data lands (O(dates x types x k)
-    rows total). Map-side WindowGroupLimit prunes each task to k rows per
-    group before the exchange."""
-    from pyspark.sql import Window
-
-    from .sketches import KMV_K
-
-    w = Window.partitionBy("event_date", "g").orderBy(F.col("h").asc())
-    return (
-        hashed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= KMV_K)
-        .select("event_date", "g", "h")
-    )
-
-
-def kmv_merge_sketch(partials: DataFrame) -> DataFrame:
-    """Merge partial sketches into per-g (kth_min, n_in_sketch): bottom-k
-    over the union of partials — exact, because bottom-k by a global hash
-    is a monoid (the property tests pin the algebra; this helper is the
-    storage-seam consumer)."""
-    from pyspark.sql import Window
-
-    from .sketches import KMV_K
-
-    w = Window.partitionBy("g").orderBy(F.col("h").asc())
-    return (
-        partials.select("g", "h")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= KMV_K)
-        .groupBy("g")
-        .agg(
-            F.max("h").cast("bigint").alias("kth_min"),
-            F.count(F.lit(1)).cast("bigint").alias("n_in_sketch"),
-        )
-    )
-
-
-def kmv_sketch_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The per-date KMV partial sketch table as an ``event_date=``-
-    partitioned parquet lake: first use per process writes it (one task per
-    date directory), later uses read it back. Explicit schema on read for
-    the empty-events case (zero partition directories — ROBUSTNESS §1)."""
-    path = _sketch_lake_path(sf_dir)
-    partials = kmv_partial_sketches(kmv_dated_hashes(spark, sf_dir))
+    """The ``kind`` sketch lake of ``sf_dir``: its per-(event_date, g)
+    partials in ``events_<kind>_by_date``, or, ``compacted``, those
+    partials re-merged to their grain in the ``grain_date=``-partitioned
+    ``events_<kind>_compacted``. First use per process writes the lake (one
+    task per partition directory), later uses read it back."""
+    sk = SKETCH_KINDS[kind]
+    if compacted:
+        leaf, part = f"events_{kind}_compacted", "grain_date"
+        rows = sk.compact(sketch_lake(spark, sf_dir, kind))
+    else:
+        leaf, part = f"events_{kind}_by_date", "event_date"
+        rows = sk.partial(sk.dated(spark, sf_dir))
+    path = _lake_path(sf_dir, leaf)
     write_once(
         path,
         lambda: write_partitioned_lake(
-            partials, path, ["event_date"], sort_cols=["g", "h"]
+            rows, path, [part], sort_cols=list(sk.sort)
         ),
     )
-    return spark.read.schema(partials.schema).parquet(path)
+    return spark.read.schema(rows.schema).parquet(path)
+
+
+def group_key() -> Column:
+    """The null-coalesced group id every audit join keys on: event_type is
+    nullable, and a plain equi-join would silently drop the NULL group."""
+    return F.coalesce(F.col("g"), F.lit("\x00<null>")).alias("gk")
+
+
+def _keyed(df: DataFrame, prefix: str = "") -> DataFrame:
+    """``df`` keyed by ``group_key``, every column but g renamed with
+    ``prefix``."""
+    renamed = [F.col(c).alias(prefix + c) for c in df.columns if c != "g"]
+    return df.select(group_key(), *renamed)
+
+
+def _agree(sk: SketchKind, a: str, b: str, null_safe: bool = False) -> Column:
+    """Whether two summaries (column prefixes ``a`` and ``b``) agree on
+    every equality column of ``sk``."""
+    eqs = [
+        F.col(a + c).eqNullSafe(F.col(b + c))
+        if null_safe
+        else F.col(a + c) == F.col(b + c)
+        for c in sk.equal
+    ]
+    return reduce(lambda x, y: x & y, eqs)
+
+
+def _n_dates(partials: DataFrame, name: str) -> DataFrame:
+    return partials.groupBy("g").agg(
+        F.countDistinct("event_date").cast("bigint").alias(name)
+    )
+
+
+def _count(name: str) -> Column:
+    return F.count(F.lit(1)).cast("bigint").alias(name)
+
+
+def _rel_err(est: Column) -> Column:
+    return ((est - F.col("n_exact")) / F.col("n_exact")).alias("rel_err")
+
+
+def _merge_report(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    head: Sequence[str | Column],
+    tail: Sequence[str | Column],
+    exact: Sequence[Column],
+    merged_extra: Sequence[Column] = (),
+) -> DataFrame:
+    """Merge-on-read audit of the ``kind`` lake, per event type: the
+    merged partials' summary (plus ``merged_extra`` aggregates), whether it
+    equals the single-pass whole-corpus sketch (``merged_equals_whole``),
+    and the ``exact`` aggregates of the dated fields (so a row count is the
+    exact distinct-key or event count). Output columns:
+    event_type, n_partials, ``head``, the flag, ``tail``."""
+    sk = SKETCH_KINDS[kind]
+    partials = sketch_lake(spark, sf_dir, kind)
+    fields = sk.dated(spark, sf_dir)
+    merged = sk.summarize(sk.merge(partials), *merged_extra)
+    return ordered_small(
+        merged.withColumn("gk", group_key())
+        .join(_keyed(sk.summarize(sk.merge(fields)), "w_"), "gk")
+        .join(_keyed(_n_dates(partials, "n_partials")), "gk")
+        .join(_keyed(fields.groupBy("g").agg(*exact)), "gk")
+        .select(
+            F.col("g").alias("event_type"),
+            "n_partials",
+            *head,
+            _agree(sk, "", "w_").alias("merged_equals_whole"),
+            *tail,
+        ),
+        "event_type",
+    )
+
+
+def _compaction_report(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    shown: Sequence[str | Column],
+    retained_shown: Sequence[str | Column] = (),
+) -> DataFrame:
+    """Compaction and retirement audit of the ``kind`` lake, per event
+    type: partition counts (daily, compacted, retired), the compacted
+    merge's ``shown`` summary columns, whether it equals the daily merge,
+    the retained compacted merge's ``retained_shown`` columns (prefix
+    ``r_``), and whether that equals the retained daily merge (null-safe: a
+    type living only in retired partitions compares absent-to-absent)."""
+    sk = SKETCH_KINDS[kind]
+    cutoff = F.lit(LAKE_RETAIN_CUTOFF).cast("date")
+    daily = sketch_lake(spark, sf_dir, kind)
+    compacted = sketch_lake(spark, sf_dir, kind, compacted=True)
+
+    def merged(partials: DataFrame, prefix: str) -> DataFrame:
+        return _keyed(sk.summarize(sk.merge(partials)), prefix)
+
+    grain = F.col("grain_date")
+    ccounts = compacted.groupBy("g").agg(
+        F.countDistinct(grain).cast("bigint").alias("n_compacted_partials"),
+        F.countDistinct(F.when(grain < cutoff, grain))
+        .cast("bigint")
+        .alias("n_retired_partials"),
+    )
+    retained_c = compacted.filter(grain >= cutoff)
+    retained_d = daily.filter(F.col("event_date") >= cutoff)
+    return ordered_small(
+        sk.summarize(sk.merge(compacted))
+        .withColumn("gk", group_key())
+        .join(merged(daily, "d_"), "gk")
+        .join(_keyed(_n_dates(daily, "n_daily_partials")), "gk")
+        .join(_keyed(ccounts), "gk")
+        .join(merged(retained_c, "r_"), "gk", "left")
+        .join(merged(retained_d, "rd_"), "gk", "left")
+        .select(
+            F.col("g").alias("event_type"),
+            "n_daily_partials",
+            "n_compacted_partials",
+            "n_retired_partials",
+            *shown,
+            _agree(sk, "", "d_").alias("compacted_equals_daily"),
+            *retained_shown,
+            _agree(sk, "r_", "rd_", null_safe=True).alias(
+                "retained_equals_daily_retained"
+            ),
+        ),
+        "event_type",
+    )
 
 
 def _kmv_lake_oracle_sql() -> str:
-    from .sketches import _KMV_SPACE, KMV_K
-
     return f"""
         WITH keyed AS (
           SELECT DISTINCT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS d,
@@ -401,123 +616,23 @@ def _kmv_lake_oracle_sql() -> str:
     oracle=_kmv_lake_oracle_sql(),
 )
 def kmv_sketch_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sketches import _KMV_SPACE, KMV_K
-
-    # joins key on a null-coalesced group id (sketches.py convention):
-    # event_type is nullable and a plain equi-join would silently drop the
-    # NULL group from the audit
-    gk = F.coalesce(F.col("g"), F.lit("\x00<null>")).alias("gk")
-    partials = kmv_sketch_lake(spark, sf_dir)
-    merged = kmv_merge_sketch(partials).withColumn("gk", gk)
-    np_ = (
-        partials.groupBy("g")
-        .agg(F.countDistinct("event_date").cast("bigint").alias("n_partials"))
-        .select(gk, "n_partials")
-    )
-    hashed = kmv_dated_hashes(spark, sf_dir)
-    whole = kmv_merge_sketch(
-        hashed.withColumn("event_date", F.lit(None).cast("date"))
-    ).select(
-        gk,
-        F.col("kth_min").alias("kth_w"),
-        F.col("n_in_sketch").alias("n_w"),
-    )
-    exact = (
-        hashed.groupBy("g")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
-        .select(gk, "n_exact")
-    )
     est = F.when(
         F.col("n_in_sketch") < KMV_K, F.col("n_in_sketch").cast("double")
     ).otherwise(
         F.lit(float(KMV_K - 1)) * F.lit(_KMV_SPACE)
         / F.col("kth_min").cast("double")
     )
-    return ordered_small(
-        merged.join(np_, "gk")
-        .join(whole, "gk")
-        .join(exact, "gk")
-        .select(
-            F.col("g").alias("event_type"),
-            "n_partials",
-            "n_in_sketch",
-            "kth_min",
-            est.alias("kmv_est"),
-            (
-                (F.col("kth_min") == F.col("kth_w"))
-                & (F.col("n_in_sketch") == F.col("n_w"))
-            ).alias("merged_equals_whole"),
-            "n_exact",
-            ((est - F.col("n_exact")) / F.col("n_exact")).alias("rel_err"),
-        ),
-        "event_type",
+    return _merge_report(
+        spark,
+        sf_dir,
+        "kmv",
+        head=["n_in_sketch", "kth_min", est.alias("kmv_est")],
+        tail=["n_exact", _rel_err(est)],
+        exact=[_count("n_exact")],
     )
-
-
-# ---------------------------------------------------------------------------
-# HLL persisted-sketch lake: the same storage seam as the KMV lake above,
-# with a DIFFERENT merge operator (register-wise MAX instead of bottom-k) —
-# proving the seam is sketch-agnostic: any monoid-mergeable summary can be
-# maintained per partition and merged on read.
-# ---------------------------------------------------------------------------
-
-
-def _hll_lake_path(sf_dir: str) -> str:
-    return _lake_path(sf_dir, "events_hll_by_date")
-
-
-def hll_dated_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(event_date, g, idx, rank): the HLL family's map-side register
-    fields (queries/sketches.py::hll_rank_fields — same key, same hash)
-    carrying the partition date; a user-day key embeds its day, so
-    per-date partials partition the key space exactly."""
-    from .sketches import hll_rank_fields, hll_user_day_key
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    keyed = ev.select(
-        F.to_date("ts").alias("event_date"),
-        F.col("event_type").alias("g"),
-        hll_user_day_key().alias("key"),
-    ).distinct()
-    return hll_rank_fields(keyed, "event_date", "g")
-
-
-def hll_partial_registers(fields: DataFrame) -> DataFrame:
-    """Per-(event_date, g) register rows — O(dates x types x m) stored."""
-    return fields.groupBy("event_date", "g", "idx").agg(
-        F.max("rank").alias("rank")
-    )
-
-
-def hll_merge_registers(partials: DataFrame) -> DataFrame:
-    """Merge partial registers into per-g registers: cell-wise MAX — the
-    HLL monoid (same algebra the streaming twin folds across batches)."""
-    return partials.groupBy("g", "idx").agg(F.max("rank").alias("rank"))
-
-
-def hll_sketch_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _hll_lake_path(sf_dir)
-    partials = hll_partial_registers(hll_dated_fields(spark, sf_dir))
-    write_once(
-        path,
-        lambda: write_partitioned_lake(
-            partials, path, ["event_date"], sort_cols=["g", "idx"]
-        ),
-    )
-    return spark.read.schema(partials.schema).parquet(path)
 
 
 def _hll_lake_oracle_sql() -> str:
-    from .sketches import (
-        _HLL_IDX_SHIFT,
-        _HLL_NUM,
-        _HLL_RANK_MAX,
-        _HLL_W_MASK,
-        HLL_M,
-    )
-
     # qualified m.* — the final SELECT joins two relations that both
     # carry (t, n_zero_registers)
     est = (
@@ -623,150 +738,18 @@ def _hll_lake_oracle_sql() -> str:
     oracle=_hll_lake_oracle_sql(),
 )
 def hll_sketch_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sketches import (
-        hll_estimate_col,
-        hll_stats_from_registers,
-    )
-
-    # null-coalesced join key: a NULL event_type group must stay audited
-    # (same fix as the KMV/qs lakes)
-    gk = F.coalesce(F.col("g"), F.lit("\x00<null>")).alias("gk")
-    partials = hll_sketch_lake(spark, sf_dir)
-    mstats = hll_stats_from_registers(
-        hll_merge_registers(partials), "g"
-    ).withColumn("gk", gk)
-    np_ = (
-        partials.groupBy("g")
-        .agg(F.countDistinct("event_date").cast("bigint").alias("n_partials"))
-        .select(gk, "n_partials")
-    )
-    fields = hll_dated_fields(spark, sf_dir)
-    wstats = hll_stats_from_registers(
-        fields.groupBy("g", "idx").agg(F.max("rank").alias("rank")), "g"
-    ).select(
-        gk,
-        F.col("t").alias("wt"),
-        F.col("n_zero_registers").alias("wz"),
-    )
-    exact = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
-        .select(
-            F.col("event_type").alias("g"),
-            F.concat(
-                F.col("user_id").cast("string"),
-                F.lit(":"),
-                F.date_format(F.to_date("ts"), DATE_FMT_SPARK),
-            ).alias("key"),
-        )
-        .distinct()
-        .groupBy("g")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
-        .select(gk, "n_exact")
-    )
     est = hll_estimate_col()
-    return ordered_small(
-        mstats.join(wstats, "gk")
-        .join(np_, "gk")
-        .join(exact, "gk")
-        .select(
-            F.col("g").alias("event_type"),
-            "n_partials",
-            "t",
-            "n_zero_registers",
-            est.alias("hll_est"),
-            (
-                (F.col("t") == F.col("wt"))
-                & (F.col("n_zero_registers") == F.col("wz"))
-            ).alias("merged_equals_whole"),
-            "n_exact",
-            ((est - F.col("n_exact")) / F.col("n_exact")).alias("rel_err"),
-        ),
-        "event_type",
+    return _merge_report(
+        spark,
+        sf_dir,
+        "hll",
+        head=["t", "n_zero_registers", est.alias("hll_est")],
+        tail=["n_exact", _rel_err(est)],
+        exact=[_count("n_exact")],
     )
-
-
-# ---------------------------------------------------------------------------
-# Quantile-sample persisted-sketch lake: the THIRD monoid through the same
-# storage seam (KMV bottom-k distinct, HLL register-MAX, and now the bottom-k
-# hash sample whose merge is union + re-bottom-k) — order statistics over a
-# lake whose raw events are never rescanned.
-# ---------------------------------------------------------------------------
-
-
-def _qs_lake_path(sf_dir: str) -> str:
-    return _lake_path(sf_dir, "events_qs_by_date")
-
-
-def qs_dated_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(event_date, g, value, h): the quantile family's sample-eligible rows
-    (queries/sketches.py::qs_keyed_values — same eligibility, same 56-bit
-    sha256('qs:'||event_id) membership hash) carrying the partition date. An
-    event row lives in exactly one date partition, so per-date partials
-    partition the value multiset exactly; NULL-ts rows ride the hive default
-    partition like the raw events lake."""
-    from .sketches import qs_hash_col
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull() & F.col("event_id").isNotNull()
-    )
-    return ev.select(
-        F.to_date("ts").alias("event_date"),
-        F.col("event_type").alias("g"),
-        "value",
-        qs_hash_col(),
-    )
-
-
-def qs_partial_samples(vals: DataFrame) -> DataFrame:
-    """Per-(event_date, g) bottom-k hash-sample partials — O(dates x types
-    x k) stored rows; the map-side WindowGroupLimit prunes each task to k
-    rows per group before the exchange."""
-    from pyspark.sql import Window
-
-    from .sketches import QS_K
-
-    w = Window.partitionBy("event_date", "g").orderBy(F.col("h").asc())
-    return (
-        vals.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= QS_K)
-        .select("event_date", "g", "value", "h")
-    )
-
-
-def qs_merge_sample(partials: DataFrame) -> DataFrame:
-    """Merge partial samples into the per-g bottom-k sample: union +
-    re-bottom-k — the hash-sample monoid (identical algebra to the KMV
-    merge, but each surviving row carries its VALUE, so the merged sample
-    answers quantile questions)."""
-    from pyspark.sql import Window
-
-    from .sketches import QS_K
-
-    w = Window.partitionBy("g").orderBy(F.col("h").asc())
-    return (
-        partials.select("g", "value", "h")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= QS_K)
-        .select("g", "value", "h")
-    )
-
-
-def qs_sketch_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _qs_lake_path(sf_dir)
-    partials = qs_partial_samples(qs_dated_values(spark, sf_dir))
-    write_once(
-        path,
-        lambda: write_partitioned_lake(
-            partials, path, ["event_date"], sort_cols=["g", "h"]
-        ),
-    )
-    return spark.read.schema(partials.schema).parquet(path)
 
 
 def _qs_lake_oracle_sql() -> str:
-    from .sketches import QS_K
-
     return f"""
         WITH vals AS (
           SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS d,
@@ -865,61 +848,14 @@ def _qs_lake_oracle_sql() -> str:
     oracle=_qs_lake_oracle_sql(),
 )
 def quantile_sketch_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sketches import qs_percentile_aggs
-
-    # joins key on a null-coalesced group id (sketches.py convention):
-    # event_type is nullable and a plain equi-join would drop the NULL group
-    gk = F.coalesce(F.col("g"), F.lit("\x00<null>")).alias("gk")
-    partials = qs_sketch_lake(spark, sf_dir)
-    merged = qs_merge_sample(partials)
-    mfp = merged.groupBy("g").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_sample"),
-        F.expr("bit_xor(h)").cast("bigint").alias("xh"),
-        F.max("h").cast("bigint").alias("mh"),
-        *qs_percentile_aggs("est"),
-    ).withColumn("gk", gk)
-    np_ = (
-        partials.groupBy("g")
-        .agg(F.countDistinct("event_date").cast("bigint").alias("n_partials"))
-        .select(gk, "n_partials")
-    )
-    vals = qs_dated_values(spark, sf_dir)
-    wfp = (
-        qs_merge_sample(vals)
-        .groupBy("g")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("wn"),
-            F.expr("bit_xor(h)").cast("bigint").alias("wxh"),
-            F.max("h").cast("bigint").alias("wmh"),
-        )
-        .select(gk, "wn", "wxh", "wmh")
-    )
-    exact = vals.groupBy("g").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_total"),
-        *qs_percentile_aggs("exact"),
-    ).select(gk, "n_total", "exact_p50", "exact_p90", "exact_p99")
-    return ordered_small(
-        mfp.join(wfp, "gk")
-        .join(np_, "gk")
-        .join(exact, "gk")
-        .select(
-            F.col("g").alias("event_type"),
-            "n_partials",
-            "n_sample",
-            "est_p50",
-            "est_p90",
-            "est_p99",
-            (
-                (F.col("n_sample") == F.col("wn"))
-                & (F.col("xh") == F.col("wxh"))
-                & (F.col("mh") == F.col("wmh"))
-            ).alias("merged_equals_whole"),
-            "n_total",
-            "exact_p50",
-            "exact_p90",
-            "exact_p99",
-        ),
-        "event_type",
+    return _merge_report(
+        spark,
+        sf_dir,
+        "qs",
+        head=["n_sample", "est_p50", "est_p90", "est_p99"],
+        tail=["n_total", "exact_p50", "exact_p90", "exact_p99"],
+        exact=[_count("n_total"), *qs_percentile_aggs("exact")],
+        merged_extra=qs_percentile_aggs("est"),
     )
 
 
@@ -1000,72 +936,13 @@ def lake_schema_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Sketch-lake lifecycle beyond append (r9 verdict task #2): compaction of old
-# per-date partials into coarser grains, plus partition retirement — the
-# operations a year-old 100 TB sketch lake actually runs. The bottom-k monoid
-# makes both provable: re-merging partials at ANY grain yields the same
-# sketch (merge is associative/commutative/idempotent on the hash set), so
-# compacted == daily-direct is a hashed equality, not a tolerance.
+# Sketch-lake lifecycle beyond append: compaction of old per-date partials
+# into coarser grains, plus partition retirement — the operations a
+# year-old 100 TB sketch lake actually runs.
 # ---------------------------------------------------------------------------
-
-# Grain pivot: daily partials strictly BEFORE this date compact to ISO-week
-# grain; later dates stay daily (the hot tail an ingest keeps fine-grained).
-# Shared by every sketch lake's compaction (KMV bottom-k, HLL register-MAX)
-# — the lifecycle is monoid-agnostic like the merge seam it extends.
-LAKE_COMPACT_PIVOT = "2024-01-15"
-# Retention: grain partitions strictly BEFORE this date are retired. Aligned
-# to an ISO-week boundary so retained-compacted == retained-daily exactly.
-LAKE_RETAIN_CUTOFF = "2024-01-08"
-
-
-def _compact_lake_path(sf_dir: str) -> str:
-    return _lake_path(sf_dir, "events_kmv_compacted")
-
-
-def kmv_compact_partials(
-    partials: DataFrame, pivot: str = LAKE_COMPACT_PIVOT
-) -> DataFrame:
-    """(grain_date, g, h): daily partials re-merged to their compaction
-    grain — ISO week for dates before ``pivot``, the date itself after.
-    Bottom-k of a union of bottom-ks is the bottom-k of the union (the
-    monoid property the sketch algebra tests pin), so this LOSES NOTHING:
-    the compacted lake merges to the identical whole-corpus sketch while
-    holding ~7x fewer partition directories for the cold range."""
-    from pyspark.sql import Window
-
-    from .sketches import KMV_K
-
-    grain = F.when(
-        F.col("event_date") < F.lit(pivot).cast("date"),
-        F.date_trunc("week", F.col("event_date")).cast("date"),
-    ).otherwise(F.col("event_date"))
-    w = Window.partitionBy("grain_date", "g").orderBy(F.col("h").asc())
-    return (
-        partials.withColumn("grain_date", grain)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= KMV_K)
-        .select("grain_date", "g", "h")
-    )
-
-
-def kmv_compacted_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The compacted KMV lake as a ``grain_date=``-partitioned parquet lake
-    (the physical rewrite a lake compaction job performs), written once per
-    process from the daily lake and read back with an explicit schema."""
-    path = _compact_lake_path(sf_dir)
-    compacted = kmv_compact_partials(kmv_sketch_lake(spark, sf_dir))
-    write_once(
-        path,
-        lambda: write_partitioned_lake(
-            compacted, path, ["grain_date"], sort_cols=["g", "h"]
-        ),
-    )
-    return spark.read.schema(compacted.schema).parquet(path)
 
 
 def _kmv_compaction_oracle_sql() -> str:
-    from .sketches import KMV_K
-
     return f"""
         WITH keyed AS (
           SELECT DISTINCT CAST(ts AS DATE) AS d,
@@ -1193,123 +1070,16 @@ def _kmv_compaction_oracle_sql() -> str:
     oracle=_kmv_compaction_oracle_sql(),
 )
 def kmv_sketch_lake_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sketches import KMV_K
-
-    gk = F.coalesce(F.col("g"), F.lit("\x00<null>")).alias("gk")
-    cutoff = F.lit(LAKE_RETAIN_CUTOFF).cast("date")
-    daily = kmv_sketch_lake(spark, sf_dir)
-    compacted = kmv_compacted_lake(spark, sf_dir)
-
-    mc = kmv_merge_sketch(compacted.select("g", "h")).withColumn("gk", gk)
-    md = kmv_merge_sketch(daily).select(
-        gk, F.col("kth_min").alias("kth_d"), F.col("n_in_sketch").alias("n_d")
+    return _compaction_report(
+        spark,
+        sf_dir,
+        "kmv",
+        shown=["kth_min", "n_in_sketch"],
+        retained_shown=[F.col("r_kth_min").alias("retained_kth_min")],
     )
-    rc = kmv_merge_sketch(
-        compacted.filter(F.col("grain_date") >= cutoff).select("g", "h")
-    ).select(
-        gk, F.col("kth_min").alias("r_kth"), F.col("n_in_sketch").alias("r_n")
-    )
-    rd = kmv_merge_sketch(
-        daily.filter(F.col("event_date") >= cutoff).select("g", "h")
-    ).select(
-        gk,
-        F.col("kth_min").alias("rd_kth"),
-        F.col("n_in_sketch").alias("rd_n"),
-    )
-    counts = (
-        daily.groupBy("g")
-        .agg(
-            F.countDistinct("event_date").cast("bigint").alias(
-                "n_daily_partials"
-            )
-        )
-        .select(gk, "n_daily_partials")
-    )
-    ccounts = (
-        compacted.groupBy("g")
-        .agg(
-            F.countDistinct("grain_date")
-            .cast("bigint")
-            .alias("n_compacted_partials"),
-            F.countDistinct(
-                F.when(F.col("grain_date") < cutoff, F.col("grain_date"))
-            )
-            .cast("bigint")
-            .alias("n_retired_partials"),
-        )
-        .select(gk, "n_compacted_partials", "n_retired_partials")
-    )
-    return ordered_small(
-        mc.join(md, "gk")
-        .join(counts, "gk")
-        .join(ccounts, "gk")
-        .join(rc, "gk", "left")
-        .join(rd, "gk", "left")
-        .select(
-            F.col("g").alias("event_type"),
-            "n_daily_partials",
-            "n_compacted_partials",
-            "n_retired_partials",
-            "kth_min",
-            "n_in_sketch",
-            (
-                (F.col("kth_min") == F.col("kth_d"))
-                & (F.col("n_in_sketch") == F.col("n_d"))
-            ).alias("compacted_equals_daily"),
-            F.col("r_kth").alias("retained_kth_min"),
-            (
-                F.col("r_kth").eqNullSafe(F.col("rd_kth"))
-                & F.col("r_n").eqNullSafe(F.col("rd_n"))
-            ).alias("retained_equals_daily_retained"),
-        ),
-        "event_type",
-    )
-
-
-# ---------------------------------------------------------------------------
-# HLL compaction twin: the SAME lifecycle (weekly re-grain + week-aligned
-# retirement) under the register-MAX monoid — together with
-# kmv_sketch_lake_compaction this pins the compaction seam as
-# monoid-agnostic, exactly like the r9 merge-seam trio.
-# ---------------------------------------------------------------------------
-
-
-def _hll_compact_lake_path(sf_dir: str) -> str:
-    return _lake_path(sf_dir, "events_hll_compacted")
-
-
-def hll_compact_partials(
-    partials: DataFrame, pivot: str = LAKE_COMPACT_PIVOT
-) -> DataFrame:
-    """(grain_date, g, idx, rank): daily HLL register partials re-merged to
-    their compaction grain by register-wise MAX — MAX of MAXes is the MAX,
-    so the rewrite provably loses nothing under the second monoid too."""
-    grain = F.when(
-        F.col("event_date") < F.lit(pivot).cast("date"),
-        F.date_trunc("week", F.col("event_date")).cast("date"),
-    ).otherwise(F.col("event_date"))
-    return (
-        partials.withColumn("grain_date", grain)
-        .groupBy("grain_date", "g", "idx")
-        .agg(F.max("rank").alias("rank"))
-    )
-
-
-def hll_compacted_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _hll_compact_lake_path(sf_dir)
-    compacted = hll_compact_partials(hll_sketch_lake(spark, sf_dir))
-    write_once(
-        path,
-        lambda: write_partitioned_lake(
-            compacted, path, ["grain_date"], sort_cols=["g", "idx"]
-        ),
-    )
-    return spark.read.schema(compacted.schema).parquet(path)
 
 
 def _hll_compaction_oracle_sql() -> str:
-    from .sketches import _HLL_IDX_SHIFT, _HLL_RANK_MAX, _HLL_W_MASK, HLL_M
-
     stats = (
         f"CAST(SUM(CAST(1 AS BIGINT) << ({_HLL_RANK_MAX} - rank)) AS BIGINT)"
         f" + ({HLL_M} - COUNT(*)) * (CAST(1 AS BIGINT) << {_HLL_RANK_MAX})"
@@ -1427,136 +1197,12 @@ def _hll_compaction_oracle_sql() -> str:
     oracle=_hll_compaction_oracle_sql(),
 )
 def hll_sketch_lake_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    gk = F.coalesce(F.col("g"), F.lit("\x00<null>")).alias("gk")
-    cutoff = F.lit(LAKE_RETAIN_CUTOFF).cast("date")
-    daily = hll_sketch_lake(spark, sf_dir)
-    compacted = hll_compacted_lake(spark, sf_dir)
-
-    def stats(regs: DataFrame, t: str, z: str) -> DataFrame:
-        from .sketches import hll_stats_from_registers
-
-        out = hll_stats_from_registers(
-            hll_merge_registers(regs.select("g", "idx", "rank")), "g"
-        )
-        return out.select(
-            gk,
-            F.col("t").alias(t),
-            F.col("n_zero_registers").alias(z),
-        )
-
-    mc = stats(compacted, "t", "n_zero_registers")
-    md = stats(daily, "t_d", "z_d")
-    rc = stats(compacted.filter(F.col("grain_date") >= cutoff), "r_t", "r_z")
-    rd = stats(daily.filter(F.col("event_date") >= cutoff), "rd_t", "rd_z")
-    counts = (
-        daily.groupBy("g")
-        .agg(
-            F.countDistinct("event_date")
-            .cast("bigint")
-            .alias("n_daily_partials")
-        )
-        .select(gk, F.col("g").alias("event_type"), "n_daily_partials")
+    return _compaction_report(
+        spark, sf_dir, "hll", shown=["t", "n_zero_registers"]
     )
-    ccounts = (
-        compacted.groupBy("g")
-        .agg(
-            F.countDistinct("grain_date")
-            .cast("bigint")
-            .alias("n_compacted_partials"),
-            F.countDistinct(
-                F.when(F.col("grain_date") < cutoff, F.col("grain_date"))
-            )
-            .cast("bigint")
-            .alias("n_retired_partials"),
-        )
-        .select(gk, "n_compacted_partials", "n_retired_partials")
-    )
-    return ordered_small(
-        mc.join(md, "gk")
-        .join(counts, "gk")
-        .join(ccounts, "gk")
-        .join(rc, "gk", "left")
-        .join(rd, "gk", "left")
-        .select(
-            "event_type",
-            "n_daily_partials",
-            "n_compacted_partials",
-            "n_retired_partials",
-            "t",
-            "n_zero_registers",
-            (
-                (F.col("t") == F.col("t_d"))
-                & (F.col("n_zero_registers") == F.col("z_d"))
-            ).alias("compacted_equals_daily"),
-            (
-                F.col("r_t").eqNullSafe(F.col("rd_t"))
-                & F.col("r_z").eqNullSafe(F.col("rd_z"))
-            ).alias("retained_equals_daily_retained"),
-        ),
-        "event_type",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Quantile-sample compaction twin: the THIRD monoid through the compaction
-# lifecycle (value-carrying bottom-k hash sample) — the compaction trio now
-# mirrors the r9 merge trio exactly (bottom-k / register-MAX / value sample).
-# ---------------------------------------------------------------------------
-
-
-def _qs_compact_lake_path(sf_dir: str) -> str:
-    return _lake_path(sf_dir, "events_qs_compacted")
-
-
-def qs_compact_partials(
-    partials: DataFrame, pivot: str = LAKE_COMPACT_PIVOT
-) -> DataFrame:
-    """(grain_date, g, value, h): daily sample partials re-merged to their
-    compaction grain by union + re-bottom-k — bottom-k of a union of
-    bottom-ks is the bottom-k of the union, and each surviving row carries
-    its VALUE, so the compacted lake still answers quantile questions.
-    NULL event_date partials (NULL-ts rows) keep their NULL grain — they
-    never fold into a week and never retire by the date predicate.
-
-    The bottom-k window breaks ties on (h, value), not h alone (ADVICE
-    r10): two distinct events colliding on the 56-bit hash within one
-    (grain_date, g) carry different value columns, and an h-only sort
-    would pick a nondeterministic survivor that could diverge from the
-    oracle. The oracle's comp CTE sorts identically."""
-    from pyspark.sql import Window
-
-    from .sketches import QS_K
-
-    grain = F.when(
-        F.col("event_date") < F.lit(pivot).cast("date"),
-        F.date_trunc("week", F.col("event_date")).cast("date"),
-    ).otherwise(F.col("event_date"))
-    w = Window.partitionBy("grain_date", "g").orderBy(
-        F.col("h").asc(), F.col("value").asc()
-    )
-    return (
-        partials.withColumn("grain_date", grain)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= QS_K)
-        .select("grain_date", "g", "value", "h")
-    )
-
-
-def qs_compacted_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _qs_compact_lake_path(sf_dir)
-    compacted = qs_compact_partials(qs_sketch_lake(spark, sf_dir))
-    write_once(
-        path,
-        lambda: write_partitioned_lake(
-            compacted, path, ["grain_date"], sort_cols=["g", "h"]
-        ),
-    )
-    return spark.read.schema(compacted.schema).parquet(path)
 
 
 def _qs_compaction_oracle_sql() -> str:
-    from .sketches import QS_K
-
     fp = (
         "CAST(COUNT(*) AS BIGINT) AS n, CAST(bit_xor(h) AS BIGINT) AS xh,"
         " CAST(MAX(h) AS BIGINT) AS mh"
@@ -1677,81 +1323,4 @@ def _qs_compaction_oracle_sql() -> str:
 def quantile_sketch_lake_compaction(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .sketches import QS_K  # noqa: F401  (documented bound)
-
-    gk = F.coalesce(F.col("g"), F.lit("\x00<null>")).alias("gk")
-    cutoff = F.lit(LAKE_RETAIN_CUTOFF).cast("date")
-    daily = qs_sketch_lake(spark, sf_dir)
-    compacted = qs_compacted_lake(spark, sf_dir)
-
-    def fp(partials: DataFrame, n: str, xh: str, mh: str | None) -> DataFrame:
-        cols = [
-            F.count(F.lit(1)).cast("bigint").alias(n),
-            F.expr("bit_xor(h)").cast("bigint").alias(xh),
-        ]
-        if mh:
-            cols.append(F.max("h").cast("bigint").alias(mh))
-        return qs_merge_sample(partials).groupBy("g").agg(*cols).select(
-            gk, *([n, xh] + ([mh] if mh else []))
-        )
-
-    mc = fp(compacted.select("g", "value", "h"), "n_sample", "xh", "mh")
-    md = fp(daily, "n_d", "xh_d", "mh_d")
-    rc = fp(
-        compacted.filter(F.col("grain_date") >= cutoff).select(
-            "g", "value", "h"
-        ),
-        "r_n",
-        "r_xh",
-        None,
-    )
-    rd = fp(
-        daily.filter(F.col("event_date") >= cutoff), "rd_n", "rd_xh", None
-    )
-    counts = (
-        daily.groupBy("g")
-        .agg(
-            F.countDistinct("event_date")
-            .cast("bigint")
-            .alias("n_daily_partials")
-        )
-        .select(gk, F.col("g").alias("event_type"), "n_daily_partials")
-    )
-    ccounts = (
-        compacted.groupBy("g")
-        .agg(
-            F.countDistinct("grain_date")
-            .cast("bigint")
-            .alias("n_compacted_partials"),
-            F.countDistinct(
-                F.when(F.col("grain_date") < cutoff, F.col("grain_date"))
-            )
-            .cast("bigint")
-            .alias("n_retired_partials"),
-        )
-        .select(gk, "n_compacted_partials", "n_retired_partials")
-    )
-    return ordered_small(
-        mc.join(md, "gk")
-        .join(counts, "gk")
-        .join(ccounts, "gk")
-        .join(rc, "gk", "left")
-        .join(rd, "gk", "left")
-        .select(
-            "event_type",
-            "n_daily_partials",
-            "n_compacted_partials",
-            "n_retired_partials",
-            "n_sample",
-            (
-                (F.col("n_sample") == F.col("n_d"))
-                & (F.col("xh") == F.col("xh_d"))
-                & (F.col("mh") == F.col("mh_d"))
-            ).alias("compacted_equals_daily"),
-            (
-                F.col("r_n").eqNullSafe(F.col("rd_n"))
-                & F.col("r_xh").eqNullSafe(F.col("rd_xh"))
-            ).alias("retained_equals_daily_retained"),
-        ),
-        "event_type",
-    )
+    return _compaction_report(spark, sf_dir, "qs", shown=["n_sample"])

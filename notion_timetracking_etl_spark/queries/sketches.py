@@ -17,7 +17,15 @@ from pyspark.sql import Column, DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from ..operators.dedup import words
-from ..operators.sketch import heavy_hitters
+from ..operators.sketch import (
+    HLL_M,
+    KMV_K,
+    QS_K,
+    bottom_k,
+    hash56,
+    heavy_hitters,
+    max_registers,
+)
 from ..sources.tpch import load_table
 from .helpers import davg, davg_sql, ordered_small
 from .registry import register
@@ -289,7 +297,6 @@ def countmin_token_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # small-range linear-counting branch IS implemented on both engines but sits
 # outside the driver regime (natural log is the one op libm/JVM may round
 # differently in the last ulp; tests pin that the corpus never enters it).
-HLL_M = 32
 _HLL_IDX_SHIFT = 51  # 56-bit hash = 5 index bits + 51-bit rank field
 _HLL_W_MASK = (1 << _HLL_IDX_SHIFT) - 1
 _HLL_RANK_MAX = _HLL_IDX_SHIFT + 1  # rank of an all-zero w field
@@ -298,8 +305,9 @@ _HLL_RANK_MAX = _HLL_IDX_SHIFT + 1  # rank of an all-zero w field
 _HLL_NUM = repr(0.697 * HLL_M * HLL_M * float(1 << _HLL_RANK_MAX))
 
 
-def hll_user_day_key() -> F.Column:
-    """The audited key: 'user_id:yyyy-MM-dd' (shared by batch and stream)."""
+def user_day_key() -> F.Column:
+    """The audited count-distinct key of the HLL and KMV families:
+    'user_id:yyyy-MM-dd' (shared by batch, stream and lake)."""
     return F.concat(
         F.col("user_id").cast("string"),
         F.lit(":"),
@@ -307,20 +315,21 @@ def hll_user_day_key() -> F.Column:
     )
 
 
+def user_day_keys(ev: DataFrame, *group: Column) -> DataFrame:
+    """Distinct (group..., key) user-day keys of the events that carry a
+    user and a timestamp."""
+    return (
+        ev.filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
+        .select(*group, user_day_key().alias("key"))
+        .distinct()
+    )
+
+
 def hll_rank_fields(keyed: DataFrame, *group_cols: str) -> DataFrame:
     """(group..., idx, rank) per input key row — the pure map-side HLL
     field derivation every register build (batch or streaming) shares."""
     hashed = keyed.select(
-        *group_cols,
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("hll:"), F.col("key")), 256), 1, 14
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h"),
+        *group_cols, hash56("hll:", F.col("key")).alias("h")
     ).select(
         *group_cols,
         F.shiftright("h", _HLL_IDX_SHIFT).alias("idx"),
@@ -332,10 +341,10 @@ def hll_rank_fields(keyed: DataFrame, *group_cols: str) -> DataFrame:
     return hashed.select(*group_cols, "idx", rank.alias("rank"))
 
 
-def hll_stats_from_registers(regs: DataFrame, *group_cols: str) -> DataFrame:
-    """(group..., t, n_zero_registers) from a (group..., idx, rank) register
+def hll_stats_aggs() -> list[Column]:
+    """(t, n_zero_registers) over the (idx, rank) rows of one register
     table — t is the exact-integer harmonic-mean denominator."""
-    return regs.groupBy(*group_cols).agg(
+    return [
         (
             F.sum(
                 F.expr(
@@ -348,7 +357,13 @@ def hll_stats_from_registers(regs: DataFrame, *group_cols: str) -> DataFrame:
         (F.lit(HLL_M) - F.count(F.lit(1)))
         .cast("bigint")
         .alias("n_zero_registers"),
-    )
+    ]
+
+
+def hll_stats_from_registers(regs: DataFrame, *group_cols: str) -> DataFrame:
+    """(group..., t, n_zero_registers) from a (group..., idx, rank) register
+    table."""
+    return regs.groupBy(*group_cols).agg(*hll_stats_aggs())
 
 
 def hll_estimate_col() -> F.Column:
@@ -439,18 +454,14 @@ def hll_estimate_col() -> F.Column:
 def hll_distinct_user_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
-        F.col("event_type").alias("g"), hll_user_day_key().alias("key")
+        F.col("event_type").alias("g"), user_day_key().alias("key")
     )
     scoped = (
         base.unionByName(base.select(F.lit("all").alias("g"), "key"))
         .filter(F.col("key").isNotNull())
         .distinct()
     )
-    regs = (
-        hll_rank_fields(scoped, "g")
-        .groupBy("g", "idx")
-        .agg(F.max("rank").alias("rank"))
-    )
+    regs = max_registers(hll_rank_fields(scoped, "g"), ["g"])
     stats = hll_stats_from_registers(regs, "g")
     exact = scoped.groupBy("g").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_exact")
@@ -591,13 +602,10 @@ def bitmap_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # KMV (k-minimum-values / bottom-k) distinct sketch + set-union estimation
 # ---------------------------------------------------------------------------
 
-KMV_K = 64
 _KMV_SPACE = float(1 << 56)  # hash domain: 14 sha256 hex chars
 
-# Shared user-day keying + 56-bit hashing for the KMV family
-# (kmv_distinct_union keeps its original inline copy — same expressions —
-# so its long-green plan text is untouched; the pair-algebra queries
-# below build from these helpers).
+# The KMV family's user-day keying + 56-bit hashing as oracle CTEs, shared
+# by the pair-algebra queries below.
 _KMV_BASE_CTES_SQL = """keyed AS (
           SELECT DISTINCT event_type AS g,
                  concat(user_id, ':',
@@ -613,46 +621,18 @@ _KMV_BASE_CTES_SQL = """keyed AS (
         )"""
 
 
-def kmv_hashed_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(g, key, h): distinct per-type user-day keys with the 56-bit
-    sha256('kmv:'||key) hash — identical expressions to the oracle CTEs."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    keyed = ev.select(
-        F.col("event_type").alias("g"),
-        F.concat(
-            F.col("user_id").cast("string"),
-            F.lit(":"),
-            F.date_format(F.to_date("ts"), "yyyy-MM-dd"),
-        ).alias("key"),
-    ).distinct()
-    return keyed.select(
-        "g",
-        "key",
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("kmv:"), F.col("key")), 256), 1, 14
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h"),
-    )
+def kmv_hashed(ev: DataFrame, *group: Column) -> DataFrame:
+    """(group..., key, h): distinct user-day keys with their 56-bit
+    sha256('kmv:'||key) hash — the expressions of the oracle CTEs."""
+    return user_day_keys(ev, *group).withColumn("h", hash56("kmv:", "key"))
 
 
-def kmv_sketch_df(hashed: DataFrame) -> DataFrame:
-    """Per-type bottom-k sketch (g, h) — map-side WindowGroupLimit prune."""
-    from pyspark.sql import Window
-
-    wg = Window.partitionBy("g").orderBy(F.col("h").asc())
-    return (
-        hashed.select("g", "h")
-        .withColumn("rn", F.row_number().over(wg))
-        .filter(F.col("rn") <= KMV_K)
-        .select("g", "h")
-    )
+def kmv_stats_aggs() -> list[Column]:
+    """(kth_min, n_in_sketch) over the h rows of one bottom-k sketch."""
+    return [
+        F.max("h").cast("bigint").alias("kth_min"),
+        F.count(F.lit(1)).cast("bigint").alias("n_in_sketch"),
+    ]
 
 
 @register(
@@ -712,31 +692,8 @@ def kmv_sketch_df(hashed: DataFrame) -> DataFrame:
     """,
 )
 def kmv_distinct_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    keyed = ev.select(
-        F.col("event_type").alias("g"),
-        F.concat(
-            F.col("user_id").cast("string"),
-            F.lit(":"),
-            F.date_format(F.to_date("ts"), "yyyy-MM-dd"),
-        ).alias("key"),
-    ).distinct()
-    hashed = keyed.select(
-        "g",
-        "key",
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("kmv:"), F.col("key")), 256), 1, 14
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h"),
+    hashed = kmv_hashed(
+        load_table(spark, sf_dir, "events"), F.col("event_type").alias("g")
     )
     # the 'all' scope dedups BY KEY first (same key hashes identically in
     # every type, so MIN(h) per key == the key's hash — one row per key)
@@ -745,18 +702,9 @@ def kmv_distinct_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("h").alias("h"))
         .select(F.lit("all").alias("g"), "h")
     )
-    # bottom-k per scope: WindowGroupLimit prunes per-partition before the
-    # rank filter — scopes are few, rows per scope bounded by distinct keys
-    w = Window.partitionBy("g").orderBy(F.col("h").asc())
-    kth = (
-        scoped.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= KMV_K)
-        .groupBy("g")
-        .agg(
-            F.max("h").cast("bigint").alias("kth_min"),
-            F.count(F.lit(1)).cast("bigint").alias("n_in_sketch"),
-        )
-    )
+    # bottom-k per scope: scopes are few, rows per scope bounded by
+    # distinct keys
+    kth = bottom_k(scoped, ["g"], KMV_K).groupBy("g").agg(*kmv_stats_aggs())
     exact = scoped.groupBy("g").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_exact")
     )
@@ -862,10 +810,10 @@ def kmv_distinct_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def kmv_set_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    hashed = kmv_hashed_df(spark, sf_dir)
-    sk = kmv_sketch_df(hashed)
+    hashed = kmv_hashed(
+        load_table(spark, sf_dir, "events"), F.col("event_type").alias("g")
+    )
+    sk = bottom_k(hashed.select("g", "h"), ["g"], KMV_K)
     types = sk.select("g").distinct()
     pairs = (
         types.alias("ta")
@@ -882,10 +830,8 @@ def kmv_set_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    wp = Window.partitionBy("ga", "gb").orderBy(F.col("h").asc())
     theta = (
-        upool.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= KMV_K)
+        bottom_k(upool, ["ga", "gb"], KMV_K)
         .groupBy("ga", "gb")
         .agg(
             F.max("h").cast("bigint").alias("theta"),
@@ -948,8 +894,6 @@ def kmv_set_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QS_K = 256  # bottom-k hash sample size per group
-
 # Shared by quantile_hash_sample and its streaming twin
 # (queries/streaming.py::streaming_quantile_sample): the stream-merged
 # bottom-k sample is IDENTICAL to the batch sample (bottom-k by a global
@@ -995,33 +939,19 @@ _QS_ORACLE_SQL = f"""
     """
 
 
-def qs_hash_col() -> Column:
-    """The sample-membership hash: 56-bit sha256('qs:' || event_id)."""
-    return (
-        F.conv(
-            F.substring(
-                F.sha2(
-                    F.concat(F.lit("qs:"), F.col("event_id").cast("string")),
-                    256,
-                ),
-                1,
-                14,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h")
-    )
-
-
-def qs_keyed_values(events: DataFrame) -> DataFrame:
-    """(g, value, h) rows eligible for the sample — NULL values carry no
+def qs_keyed_values(events: DataFrame, *lead: Column) -> DataFrame:
+    """(lead..., g, value, h) rows eligible for the sample, h the 56-bit
+    sha256('qs:' || event_id) membership hash — NULL values carry no
     quantile information and a NULL event_id would hash to NULL and ride
     each engine's divergent NULL ordering into the sample."""
     return events.filter(
         F.col("value").isNotNull() & F.col("event_id").isNotNull()
-    ).select(F.col("event_type").alias("g"), "value", qs_hash_col())
+    ).select(
+        *lead,
+        F.col("event_type").alias("g"),
+        "value",
+        hash56("qs:", F.col("event_id").cast("string")).alias("h"),
+    )
 
 
 def qs_percentile_aggs(prefix: str) -> list[Column]:
@@ -1052,14 +982,8 @@ def qs_percentile_aggs(prefix: str) -> list[Column]:
     oracle=_QS_ORACLE_SQL,
 )
 def quantile_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     vals = qs_keyed_values(load_table(spark, sf_dir, "events"))
-    w = Window.partitionBy("g").orderBy(F.col("h").asc())
-    samp = (
-        vals.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= QS_K)
-    )
+    samp = bottom_k(vals, ["g"], QS_K)
     est = samp.groupBy("g").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sample"),
         *qs_percentile_aggs("est"),
@@ -1188,10 +1112,10 @@ def quantile_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def kmv_set_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    hashed = kmv_hashed_df(spark, sf_dir)
-    sk = kmv_sketch_df(hashed)
+    hashed = kmv_hashed(
+        load_table(spark, sf_dir, "events"), F.col("event_type").alias("g")
+    )
+    sk = bottom_k(hashed.select("g", "h"), ["g"], KMV_K)
     types = sk.select("g").distinct()
     pairs = (
         types.alias("ta")
@@ -1207,10 +1131,8 @@ def kmv_set_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    wp = Window.partitionBy("ga", "gb").orderBy(F.col("h").asc())
     theta = (
-        upool.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= KMV_K)
+        bottom_k(upool, ["ga", "gb"], KMV_K)
         .groupBy("ga", "gb")
         .agg(
             F.max("h").cast("bigint").alias("theta"),

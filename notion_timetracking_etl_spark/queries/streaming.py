@@ -430,27 +430,26 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
+    from ..operators.sketch import max_registers
     from ..sources.tpch import load_table
     from .sketches import (
         hll_estimate_col,
         hll_rank_fields,
         hll_stats_from_registers,
-        hll_user_day_key,
+        user_day_key,
     )
 
     stream = read_events_stream(spark, sf_dir).filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
-    keyed = stream.select(hll_user_day_key().alias("key"))
-    reg_stream = hll_rank_fields(keyed).groupBy("idx").agg(
-        F.max("rank").alias("rank")
-    )
+    keyed = stream.select(user_day_key().alias("key"))
+    reg_stream = max_registers(hll_rank_fields(keyed), [])
     regs = run_stream_to_table(reg_stream)  # complete mode: m rows
     stats = hll_stats_from_registers(regs)
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
-    exact = ev.select(hll_user_day_key().alias("key")).agg(
+    exact = ev.select(user_day_key().alias("key")).agg(
         F.countDistinct("key").cast("bigint").alias("n_exact")
     )
     est = hll_estimate_col()
@@ -667,10 +666,11 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_quantile_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
+    from ..operators.sketch import QS_K, bottom_k
     from ..sources.tpch import load_table
     from ..streaming import bottomk_sample_stream
     from .helpers import ordered_small
-    from .sketches import QS_K, qs_keyed_values, qs_percentile_aggs
+    from .sketches import qs_keyed_values, qs_percentile_aggs
 
     keyed_stream = qs_keyed_values(read_events_stream(spark, sf_dir))
     emissions = run_stream_to_table(
@@ -681,14 +681,7 @@ def streaming_quantile_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a superset of the final state; one dedup + re-bottom-k recovers the
     # exact global sample (any hash outside the true bottom-k is above the
     # kth minimum by construction)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("g").orderBy(F.col("h").asc())
-    samp = (
-        emissions.dropDuplicates(["g", "h"])
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= QS_K)
-    )
+    samp = bottom_k(emissions.dropDuplicates(["g", "h"]), ["g"], QS_K)
     est = samp.groupBy("g").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sample"),
         *qs_percentile_aggs("est"),

@@ -158,7 +158,7 @@ def bottomk_sample_stream(keyed: DataFrame, k: int) -> DataFrame:
 
     ``keyed`` columns: (g string, h long, value double). Per group the
     state holds the k smallest hashes seen so far — the union-merge of the
-    batch operator's sample algebra (queries/sketches.py QS_K family), so
+    batch operator's sample algebra (operators/sketch.py ``bottom_k``), so
     the final state is IDENTICAL to the batch sample. Every batch emits
     the group's current sample; the drained union across batches is a
     superset whose re-bottom-k equals the final state exactly."""

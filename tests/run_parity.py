@@ -21,7 +21,14 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
+    # the mapInPandas workers unpickle seam functions by module reference;
+    # exported before the JVM starts, the path reaches the JVM and every
+    # Python worker it forks, from any working directory, with no conf
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p
+    )
     from notion_timetracking_etl_spark.queries import REGISTRY
     from tests.parity import compare_query, duck_connection
 

@@ -477,13 +477,11 @@ def test_qs_sketch_lake_partial_build_prunes_map_side(spark, sf_dir):
     # partial rewrite so each map task forwards <= k rows per group and the
     # exchange carries O(dates x types x k), never the corpus. The
     # merge-on-read side then only ever touches sketch rows.
-    from notion_timetracking_etl_spark.queries.lake import (
-        qs_dated_values,
-        qs_partial_samples,
-    )
+    from notion_timetracking_etl_spark.queries.lake import SKETCH_KINDS
 
+    qs = SKETCH_KINDS["qs"]
     plan = (
-        qs_partial_samples(qs_dated_values(spark, sf_dir))
+        qs.partial(qs.dated(spark, sf_dir))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -183,18 +183,14 @@ class TestSketchLakeCompaction:
         an audit rescan of the raw corpus."""
         import pyspark.sql.functions as F
 
-        from notion_timetracking_etl_spark.queries.lake import (
-            kmv_compact_partials,
-            kmv_dated_hashes,
-            kmv_merge_sketch,
-            kmv_partial_sketches,
-        )
+        from notion_timetracking_etl_spark.queries.lake import SKETCH_KINDS
 
-        daily = kmv_partial_sketches(kmv_dated_hashes(spark, sf_dir)).persist()
+        kmv = SKETCH_KINDS["kmv"]
+        daily = kmv.partial(kmv.dated(spark, sf_dir)).persist()
         daily.count()
         try:
-            weekly = kmv_compact_partials(daily, pivot="2024-12-31")
-            monthly = kmv_compact_partials(
+            weekly = kmv.compact(daily, pivot="2024-12-31")
+            monthly = kmv.compact(
                 weekly.select(
                     F.col("grain_date").alias("event_date"), "g", "h"
                 ).withColumn(
@@ -204,10 +200,10 @@ class TestSketchLakeCompaction:
                 pivot="2024-12-31",
             )
             gk = F.coalesce(F.col("g"), F.lit("\x00<null>")).alias("gk")
-            m2 = kmv_merge_sketch(monthly.select("g", "h")).select(
+            m2 = kmv.summarize(kmv.merge(monthly)).select(
                 gk, "kth_min", "n_in_sketch"
             )
-            m0 = kmv_merge_sketch(daily).select(
+            m0 = kmv.summarize(kmv.merge(daily)).select(
                 gk,
                 F.col("kth_min").alias("k0"),
                 F.col("n_in_sketch").alias("n0"),
@@ -227,10 +223,10 @@ class TestSketchLakeCompaction:
 
         from notion_timetracking_etl_spark.queries.lake import (
             LAKE_RETAIN_CUTOFF,
-            kmv_compacted_lake,
+            sketch_lake,
         )
 
-        lake = kmv_compacted_lake(spark, sf_dir)
+        lake = sketch_lake(spark, sf_dir, "kmv", compacted=True)
         retired = lake.filter(
             F.col("grain_date") < F.lit(LAKE_RETAIN_CUTOFF).cast("date")
         )
@@ -581,20 +577,14 @@ class TestHllCompaction:
         the compaction seam is monoid-agnostic."""
         import pyspark.sql.functions as F
 
-        from notion_timetracking_etl_spark.queries.lake import (
-            hll_compact_partials,
-            hll_dated_fields,
-            hll_merge_registers,
-            hll_partial_registers,
-        )
+        from notion_timetracking_etl_spark.queries.lake import SKETCH_KINDS
 
-        daily = hll_partial_registers(
-            hll_dated_fields(spark, sf_dir)
-        ).persist()
+        hll = SKETCH_KINDS["hll"]
+        daily = hll.partial(hll.dated(spark, sf_dir)).persist()
         daily.count()
         try:
-            weekly = hll_compact_partials(daily, pivot="2024-12-31")
-            monthly = hll_compact_partials(
+            weekly = hll.compact(daily, pivot="2024-12-31")
+            monthly = hll.compact(
                 weekly.select(
                     F.col("grain_date").alias("event_date"), "g", "idx", "rank"
                 ).withColumn(
@@ -604,10 +594,8 @@ class TestHllCompaction:
                 pivot="2024-12-31",
             )
             gk = F.coalesce(F.col("g"), F.lit("\x00<null>")).alias("gk")
-            m2 = hll_merge_registers(monthly.select("g", "idx", "rank")).select(
-                gk, "idx", "rank"
-            )
-            m0 = hll_merge_registers(daily.select("g", "idx", "rank")).select(
+            m2 = hll.merge(monthly).select(gk, "idx", "rank")
+            m0 = hll.merge(daily).select(
                 gk, "idx", F.col("rank").alias("r0")
             )
             joined = m2.join(m0, ["gk", "idx"], "full").collect()
@@ -675,10 +663,10 @@ class TestRound10PlanContracts:
 
         from notion_timetracking_etl_spark.queries.lake import (
             LAKE_RETAIN_CUTOFF,
-            kmv_compacted_lake,
+            sketch_lake,
         )
 
-        lake = kmv_compacted_lake(spark, sf_dir).filter(
+        lake = sketch_lake(spark, sf_dir, "kmv", compacted=True).filter(
             F.col("grain_date") >= F.lit(LAKE_RETAIN_CUTOFF).cast("date")
         )
         plan = lake._jdf.queryExecution().executedPlan().toString()
@@ -692,18 +680,14 @@ class TestQuantileCompaction:
         partials directly — the third monoid through the same lifecycle."""
         import pyspark.sql.functions as F
 
-        from notion_timetracking_etl_spark.queries.lake import (
-            qs_compact_partials,
-            qs_dated_values,
-            qs_merge_sample,
-            qs_partial_samples,
-        )
+        from notion_timetracking_etl_spark.queries.lake import SKETCH_KINDS
 
-        daily = qs_partial_samples(qs_dated_values(spark, sf_dir)).persist()
+        qs = SKETCH_KINDS["qs"]
+        daily = qs.partial(qs.dated(spark, sf_dir)).persist()
         daily.count()
         try:
-            weekly = qs_compact_partials(daily, pivot="2024-12-31")
-            monthly = qs_compact_partials(
+            weekly = qs.compact(daily, pivot="2024-12-31")
+            monthly = qs.compact(
                 weekly.select(
                     F.col("grain_date").alias("event_date"), "g", "value", "h"
                 ).withColumn(
@@ -712,13 +696,8 @@ class TestQuantileCompaction:
                 ),
                 pivot="2024-12-31",
             )
-            m2 = {
-                (r.g, r.h, r.value)
-                for r in qs_merge_sample(
-                    monthly.select("g", "value", "h")
-                ).collect()
-            }
-            m0 = {(r.g, r.h, r.value) for r in qs_merge_sample(daily).collect()}
+            m2 = {(r.g, r.h, r.value) for r in qs.merge(monthly).collect()}
+            m0 = {(r.g, r.h, r.value) for r in qs.merge(daily).collect()}
             assert m2 == m0 and m0
         finally:
             daily.unpersist()

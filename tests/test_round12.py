@@ -243,9 +243,8 @@ def test_streaming_forget_sketch_lake_any_split_converges(spark, sf_dir):
         sketch_forget_step_factory,
     )
     from notion_timetracking_etl_spark.queries.lake import (
-        kmv_dated_hashes,
-        kmv_merge_sketch,
-        kmv_sketch_lake,
+        SKETCH_KINDS,
+        sketch_lake,
     )
     from notion_timetracking_etl_spark.sources.tpch import load_table
     from notion_timetracking_etl_spark.streaming.forgetgate import (
@@ -270,7 +269,7 @@ def test_streaming_forget_sketch_lake_any_split_converges(spark, sf_dir):
             "append"
         ).parquet(waves_dir)
 
-    before = kmv_sketch_lake(spark, sf_dir)
+    before = sketch_lake(spark, sf_dir, "kmv")
     state: dict = {"lake": None, "dead": None}
     step = sketch_forget_step_factory(spark, sf_dir, ev, before, state)
     n_batches = tombstone_drain(
@@ -278,13 +277,10 @@ def test_streaming_forget_sketch_lake_any_split_converges(spark, sf_dir):
     )
     assert n_batches == len(users)
 
-    stitched = kmv_merge_sketch(state["lake"].select("g", "h"))
-    scratch = kmv_merge_sketch(
-        kmv_dated_hashes(
-            spark,
-            sf_dir,
-            ev=ev.filter(~F.expr(STREAM_DELETED_USER_PRED)),
-        ).select("g", "h")
+    kmv = SKETCH_KINDS["kmv"]
+    stitched = kmv.summarize(kmv.merge(state["lake"]))
+    scratch = kmv.summarize(
+        kmv.merge(kmv.fields(ev.filter(~F.expr(STREAM_DELETED_USER_PRED))))
     )
     got = {
         (r.g, r.kth_min, r.n_in_sketch) for r in stitched.collect()

@@ -162,6 +162,9 @@ def null_type_lake(tmp_path_factory):
         "quantile_sketch_lake_merge",
         "kmv_sketch_lake_merge",
         "hll_sketch_lake_merge",
+        "kmv_sketch_lake_compaction",
+        "hll_sketch_lake_compaction",
+        "quantile_sketch_lake_compaction",
     ],
 )
 def test_null_event_type_group_holds_parity(spark, null_type_lake, name):
@@ -247,25 +250,22 @@ def test_kmv_sketch_lake_incremental_append_merges_to_whole(spark, sf_dir, tmp_p
     property carried through the parquet round-trip."""
     import pyspark.sql.functions as F
 
-    from notion_timetracking_etl_spark.queries.lake import (
-        kmv_dated_hashes,
-        kmv_merge_sketch,
-        kmv_partial_sketches,
-    )
+    from notion_timetracking_etl_spark.queries.lake import SKETCH_KINDS
     from notion_timetracking_etl_spark.sinks.parquet import (
         write_partitioned_lake,
     )
 
-    hashed = kmv_dated_hashes(spark, sf_dir)
+    kmv = SKETCH_KINDS["kmv"]
+    hashed = kmv.dated(spark, sf_dir)
     cutoff = "2024-01-15"
     path = str(tmp_path / "kmv_lake")
     write_partitioned_lake(
-        kmv_partial_sketches(hashed.filter(F.col("event_date") < cutoff)),
+        kmv.partial(hashed.filter(F.col("event_date") < cutoff)),
         path,
         ["event_date"],
     )
     write_partitioned_lake(
-        kmv_partial_sketches(hashed.filter(F.col("event_date") >= cutoff)),
+        kmv.partial(hashed.filter(F.col("event_date") >= cutoff)),
         path,
         ["event_date"],
         mode="append",
@@ -273,11 +273,11 @@ def test_kmv_sketch_lake_incremental_append_merges_to_whole(spark, sf_dir, tmp_p
     partials = spark.read.parquet(path)
     merged = {
         r.g: (r.kth_min, r.n_in_sketch)
-        for r in kmv_merge_sketch(partials).collect()
+        for r in kmv.summarize(kmv.merge(partials)).collect()
     }
     whole = {
         r.g: (r.kth_min, r.n_in_sketch)
-        for r in kmv_merge_sketch(hashed).collect()
+        for r in kmv.summarize(kmv.merge(hashed)).collect()
     }
     assert merged == whole and merged
 
@@ -295,32 +295,29 @@ def test_hll_sketch_lake_incremental_append_merges_to_whole(spark, sf_dir, tmp_p
     whole-corpus registers."""
     import pyspark.sql.functions as F
 
-    from notion_timetracking_etl_spark.queries.lake import (
-        hll_dated_fields,
-        hll_merge_registers,
-        hll_partial_registers,
-    )
+    from notion_timetracking_etl_spark.queries.lake import SKETCH_KINDS
     from notion_timetracking_etl_spark.sinks.parquet import (
         write_partitioned_lake,
     )
 
-    fields = hll_dated_fields(spark, sf_dir)
+    hll = SKETCH_KINDS["hll"]
+    fields = hll.dated(spark, sf_dir)
     cutoff = "2024-01-15"
     path = str(tmp_path / "hll_lake")
     write_partitioned_lake(
-        hll_partial_registers(fields.filter(F.col("event_date") < cutoff)),
+        hll.partial(fields.filter(F.col("event_date") < cutoff)),
         path,
         ["event_date"],
     )
     write_partitioned_lake(
-        hll_partial_registers(fields.filter(F.col("event_date") >= cutoff)),
+        hll.partial(fields.filter(F.col("event_date") >= cutoff)),
         path,
         ["event_date"],
         mode="append",
     )
     merged = {
         (r.g, r.idx): r.rank
-        for r in hll_merge_registers(spark.read.parquet(path)).collect()
+        for r in hll.merge(spark.read.parquet(path)).collect()
     }
     whole = {
         (r.g, r.idx): r.rank
@@ -468,36 +465,31 @@ def test_qs_sketch_lake_incremental_append_merges_to_whole(spark, sf_dir, tmp_pa
     monoid carried through the parquet round-trip, values included."""
     import pyspark.sql.functions as F
 
-    from notion_timetracking_etl_spark.queries.lake import (
-        qs_dated_values,
-        qs_merge_sample,
-        qs_partial_samples,
-    )
+    from notion_timetracking_etl_spark.queries.lake import SKETCH_KINDS
     from notion_timetracking_etl_spark.sinks.parquet import (
         write_partitioned_lake,
     )
 
-    vals = qs_dated_values(spark, sf_dir)
+    qs = SKETCH_KINDS["qs"]
+    vals = qs.dated(spark, sf_dir)
     cutoff = "2024-01-15"
     path = str(tmp_path / "qs_lake")
     write_partitioned_lake(
-        qs_partial_samples(vals.filter(F.col("event_date") < cutoff)),
+        qs.partial(vals.filter(F.col("event_date") < cutoff)),
         path,
         ["event_date"],
     )
     write_partitioned_lake(
-        qs_partial_samples(vals.filter(F.col("event_date") >= cutoff)),
+        qs.partial(vals.filter(F.col("event_date") >= cutoff)),
         path,
         ["event_date"],
         mode="append",
     )
     merged = {
         (r.g, r.h): r.value
-        for r in qs_merge_sample(spark.read.parquet(path)).collect()
+        for r in qs.merge(spark.read.parquet(path)).collect()
     }
-    whole = {
-        (r.g, r.h): r.value for r in qs_merge_sample(vals).collect()
-    }
+    whole = {(r.g, r.h): r.value for r in qs.merge(vals).collect()}
     assert merged == whole and merged
 
 

@@ -1,5 +1,5 @@
-"""Unit tests for the as-of join, banded range join, and Misra-Gries
-heavy-hitter operators (the temporal/sketch extension family).
+"""Unit tests for the as-of join, banded range join, Misra-Gries
+heavy-hitter and bottom-k operators (the temporal/sketch extension family).
 
 Each operator is checked against a brute-force/naive formulation on small
 hand-built frames — semantics first — plus the properties that make them safe
@@ -14,6 +14,7 @@ import pyspark.sql.functions as F
 from notion_timetracking_etl_spark.operators.asof import asof_join
 from notion_timetracking_etl_spark.operators.rangejoin import band_join
 from notion_timetracking_etl_spark.operators.sketch import (
+    bottom_k,
     heavy_hitters,
     misra_gries_summary,
 )
@@ -311,3 +312,31 @@ def test_occupancy_hll_flag_accepts_healthy_and_rejects_broken(spark):
     assert got[(100, 100)] and got[(100, 119)] and not got[(100, 121)]
     assert got[(1, 3)] and not got[(1, 4)]
     assert got[(0, 2)] and not got[(0, 3)]
+
+
+def test_bottom_k_breaks_hash_collisions_on_value(spark):
+    """Rows that share (group, h) but differ in value: under the quantile
+    sample's (h, value) order the lowest values survive, whatever the input
+    row order and partition count."""
+    import random
+
+    rows = [
+        ("a", 5, 3.0), ("a", 5, 1.0), ("a", 5, 2.0), ("a", 7, 0.5),
+        ("a", 9, 0.1), ("b", 4, 8.0), ("b", 4, 6.0), ("b", 6, 7.0),
+    ]
+    expected = {
+        1: {("a", 5, 1.0), ("b", 4, 6.0)},
+        2: {("a", 5, 1.0), ("a", 5, 2.0), ("b", 4, 6.0), ("b", 4, 8.0)},
+    }
+    orders = [rows, rows[::-1]] + [
+        random.Random(seed).sample(rows, len(rows)) for seed in (1, 2)
+    ]
+    for ordered in orders:
+        df = spark.createDataFrame(ordered, "g string, h long, value double")
+        for n_parts in (1, 4):
+            parts = df.repartition(n_parts)
+            for k, want in expected.items():
+                got = bottom_k(parts, ["g"], k, order=("h", "value"))
+                assert {tuple(r) for r in got.collect()} == want, (
+                    ordered, n_parts, k,
+                )

@@ -21,9 +21,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from notion_timetracking_etl_spark.lifecycle import release_scoped_caches  # noqa: E402
 from notion_timetracking_etl_spark.queries import REGISTRY  # noqa: E402
-from notion_timetracking_etl_spark.session import build_session  # noqa: E402
+from tools.harness import settle, warm_session  # noqa: E402
 
 
 def load_rev_registry(rev: str, module_rel: str) -> dict:
@@ -67,18 +66,7 @@ def main() -> None:
 
     old_reg = load_rev_registry(args.rev, args.module)
 
-    spark = build_session(app_name="ab")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    import pandas as pd  # noqa: F401
-    spark.range(spark.sparkContext.defaultParallelism * 4).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(lambda it: it, "id long").count()
-
-    def settle() -> None:
-        release_scoped_caches()
-        spark.sparkContext._jvm.System.gc()
-        spark.range(1000).count()
+    spark = warm_session("ab")
 
     def run_once(builder, label: str) -> float:
         spark.sparkContext.setJobDescription(label)
@@ -89,7 +77,7 @@ def main() -> None:
         else:
             df.count()
         dt = time.perf_counter() - t0
-        settle()
+        settle(spark)
         return dt
 
     for name in args.queries:

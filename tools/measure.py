@@ -3,8 +3,7 @@
 Usage: python tools/measure.py [--tag before|after] [--runs N] [--explain-only]
                                [--sink noop|count] query [query ...]
 
-For each named query, on a bench-identical session (build_session +
-ERROR log level + the same warm-up):
+For each named query, on a bench-identical session (tools/harness.py):
 
 - captures ``df.explain("formatted")`` to ``plans/r12/<query>_<tag>.txt``
 - times the query min-of-N with the noop sink (computes every column of
@@ -28,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from notion_timetracking_etl_spark.lifecycle import release_scoped_caches  # noqa: E402
 from notion_timetracking_etl_spark.queries import REGISTRY  # noqa: E402
-from notion_timetracking_etl_spark.session import build_session  # noqa: E402
+from tools.harness import settle, warm_session  # noqa: E402
 
 
 def main() -> None:
@@ -49,19 +48,7 @@ def main() -> None:
     )
     os.makedirs(plans_dir, exist_ok=True)
 
-    spark = build_session(app_name="measure")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    import pandas as pd  # noqa: F401
-
-    spark.range(spark.sparkContext.defaultParallelism * 4).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(lambda it: it, "id long").count()
-
-    def settle() -> None:
-        release_scoped_caches()
-        spark.sparkContext._jvm.System.gc()
-        spark.range(1000).count()
+    spark = warm_session("measure")
 
     for name in args.queries:
         if name not in REGISTRY:
@@ -90,13 +77,13 @@ def main() -> None:
             (REGISTRY[name].spark(spark, args.sf_dir)
              .write.format("noop").mode("overwrite").save())
             noop_runs.append(time.perf_counter() - t0)
-            settle()
+            settle(spark)
         for i in range(args.runs):
             spark.sparkContext.setJobDescription(f"{name} count#{i}")
             t0 = time.perf_counter()
             REGISTRY[name].spark(spark, args.sf_dir).count()
             count_runs.append(time.perf_counter() - t0)
-            settle()
+            settle(spark)
         spark.sparkContext.setJobDescription(None)
         print(
             json.dumps(

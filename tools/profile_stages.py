@@ -21,18 +21,12 @@ os.environ.setdefault("SPARK_GRAFT_UI", "true")
 
 from notion_timetracking_etl_spark.lifecycle import release_scoped_caches  # noqa: E402
 from notion_timetracking_etl_spark.queries import REGISTRY  # noqa: E402
-from notion_timetracking_etl_spark.session import build_session  # noqa: E402
+from tools.harness import warm_session  # noqa: E402
 
 
 def main() -> None:
     names = sys.argv[1:]
-    spark = build_session(app_name="profile")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    import pandas as pd  # noqa: F401
-    spark.range(spark.sparkContext.defaultParallelism * 4).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(lambda it: it, "id long").count()
+    spark = warm_session("profile")
 
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
