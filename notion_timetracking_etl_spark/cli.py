@@ -15,6 +15,7 @@ command is drivable against fakes (tests/test_cli.py).
 from __future__ import annotations
 
 import argparse
+import contextlib
 import datetime as _dt
 import json
 import os
@@ -221,23 +222,30 @@ def cmd_audit_notion_schema(args, spark, seams) -> int:
     return 0
 
 
-def _read_canon_and_derive(spark, data_dir: str):
+@contextlib.contextmanager
+def _published(spark, data_dir: str):
+    """Derive the star schema once from the canon lake for one publishing
+    command, and free the materialized pass when the command ends."""
+    from .lifecycle import release_scoped_caches
     from .plans.derive import run_derive
     from .sources.jsonl import read_jsonl
 
     defs = read_jsonl(spark, WORKFLOW_DEFINITION_SCHEMA, data_dir, "canon", "workflowDefinitions")
     stages = read_jsonl(spark, WORKFLOW_STAGE_SCHEMA, data_dir, "canon", "workflowStages")
     slices = read_jsonl(spark, TIMESLICE_SCHEMA, data_dir, "canon", "timeslices")
-    return run_derive(defs, stages, slices)
+    try:
+        yield run_derive(defs, stages, slices)
+    finally:
+        release_scoped_caches()
 
 
 def cmd_excel_export(args, spark, seams) -> int:
     """reference: cli/index.ts:219-273 (runExcelExport)."""
     from .sinks.excel import write_excel
 
-    result = _read_canon_and_derive(spark, args.data_dir)
-    out_path = args.output or os.path.join(args.data_dir, "export.xlsx")
-    sheets = write_excel(result.tables, out_path)
+    with _published(spark, args.data_dir) as result:
+        out_path = args.output or os.path.join(args.data_dir, "export.xlsx")
+        sheets = write_excel(result.tables, out_path)
     for sheet in sheets:
         seams.log(f"sheet {sheet.name}: {len(sheet.rows)} rows")
     print(json.dumps({"output": out_path, "sheets": [s.name for s in sheets]}))
@@ -274,11 +282,9 @@ def _pbi_client(transport):
     return PowerBiClient(t, tokens)
 
 
-def cmd_pbi_provision(args, spark, seams) -> int:
-    """reference: cli/index.ts:275-311 (S10)."""
+def _pbi_provision(args, seams, result) -> int:
     from .sinks.pbi.provision import ensure_dataset
 
-    result = _read_canon_and_derive(spark, args.data_dir)
     spec = _spec_for(result, args.dataset_name)
     client = _pbi_client(seams.pbi_transport)
     dataset_id = ensure_dataset(
@@ -288,12 +294,10 @@ def cmd_pbi_provision(args, spark, seams) -> int:
     return 0
 
 
-def cmd_pbi_refresh(args, spark, seams) -> int:
-    """reference: cli/index.ts:313-408 (runPbiRefresh)."""
+def _pbi_refresh(args, seams, result) -> int:
     from .sinks.pbi.provision import ensure_dataset
     from .sinks.pbi.refresh import execute_wipe_and_reload
 
-    result = _read_canon_and_derive(spark, args.data_dir)
     spec = _spec_for(result, args.dataset_name)
     client = _pbi_client(seams.pbi_transport)
     dataset_id = ensure_dataset(
@@ -316,6 +320,18 @@ def cmd_pbi_refresh(args, spark, seams) -> int:
     return 0
 
 
+def cmd_pbi_provision(args, spark, seams) -> int:
+    """reference: cli/index.ts:275-311 (S10)."""
+    with _published(spark, args.data_dir) as result:
+        return _pbi_provision(args, seams, result)
+
+
+def cmd_pbi_refresh(args, spark, seams) -> int:
+    """reference: cli/index.ts:313-408 (runPbiRefresh)."""
+    with _published(spark, args.data_dir) as result:
+        return _pbi_refresh(args, seams, result)
+
+
 def cmd_run(args, spark, seams) -> int:
     """reference: cli/index.ts:207-210 — pull + normalize."""
     rc = cmd_pull_notion(args, spark, seams)
@@ -323,11 +339,14 @@ def cmd_run(args, spark, seams) -> int:
 
 
 def cmd_run_end_to_end(args, spark, seams) -> int:
-    """reference: cli/index.ts:212-217 — pull, normalize, provision, refresh."""
+    """reference: cli/index.ts:212-217 — pull, normalize, provision, refresh;
+    provision and refresh share one derive."""
     rc = cmd_pull_notion(args, spark, seams)
     rc = rc or cmd_normalize(args, spark, seams)
-    rc = rc or cmd_pbi_provision(args, spark, seams)
-    return rc or cmd_pbi_refresh(args, spark, seams)
+    if rc:
+        return rc
+    with _published(spark, args.data_dir) as result:
+        return _pbi_provision(args, seams, result) or _pbi_refresh(args, seams, result)
 
 
 def _emit_json_lines(df, output, seams) -> int:

@@ -4,21 +4,23 @@ statement creating it is registered here, in one of three lifetimes.
 
 **Query scope.** Intermediates one plan reads several times: shingle and
 candidate tables, the edge and label checkpoints of connected components,
-the last round of an iterative loop. They back the DataFrame a query
-builder returns, so they must outlive the builder but not the consuming
-action. Register them with :func:`scoped_persist`,
-:func:`scoped_flat_checkpoint` or :func:`query_scoped`; a harness that runs
-many queries in one session calls :func:`release_scoped_caches` after each
-action (bench.py, tests/parity.py and perfbench do).
+the last round of an iterative loop, and the seven star tables of one
+publish (``plans/derive.py::run_derive``, read by every sink). They back
+the DataFrames a query builder or ``run_derive`` returns, so they must
+outlive the call that made them but not the consuming actions. Register
+them with :func:`scoped_persist`, :func:`scoped_flat_checkpoint` or
+:func:`query_scoped`; a harness that runs many queries in one session
+calls :func:`release_scoped_caches` after each action (bench.py,
+tests/parity.py and perfbench do).
 
 **Session scope.** State every query over one corpus shares, filled once
-and read many times: the synthesized canon and the derived star tables
-(the reference's derivePbiTableRows builds each table once for every
-sink), the fitted k-means quantizer, the refined cells and routing lake,
-the PQ codebooks, the verified near-dup pair list. :func:`session_cached`
-keys them by corpus, ``(applicationId, sf_dir)``. At most ``MAX_CORPORA``
-corpora stay; the least recently used one is evicted whole, and all of its
-blocks are freed together. Caveat, evict-then-execute: eviction frees the
+and read many times: the synthesized canon and the derived intermediates
+the ``pipeline_*`` queries share, the fitted k-means quantizer, the
+refined cells and routing lake, the PQ codebooks, the verified near-dup
+pair list. :func:`session_cached` keys them by corpus,
+``(applicationId, sf_dir)``. At most ``MAX_CORPORA`` corpora stay; the
+least recently used one is evicted whole, and all of its blocks are freed
+together. Caveat, evict-then-execute: eviction frees the
 blocks behind every DataFrame handed out for that corpus, and a checkpoint
 forfeits its lineage, so a lazy plan built on an evicted entry fails with a
 missing-block error instead of recomputing. Execute a plan before touching

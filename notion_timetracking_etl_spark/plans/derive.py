@@ -9,18 +9,27 @@ Spark-first re-expression of the reference's analytical core
   explodes to its covered hour frames and the count-distinct becomes a plain
   hash aggregation on (hour, stage) — no frames×intervals blowup; at 100 TB
   the cost is O(interval-hours), shuffled once on the group keys.
-- RI assertions (V4/J7) are anti-join counts; run counters (V7) are side
-  aggregations returned with the tables.
+- RI assertions (V4/J7) are anti-joins, all three in one job; run counters
+  (V7) are one tagged-union aggregate, also one job.
 
-The canon ``timeslices`` input is read by three pipelines (fact, occupancy,
-throughput) — callers should pass it cached (run_derive does).
+:func:`run_derive` is one publish pass, as the reference's
+derivePbiTableRows builds each table once for every sink: it materializes
+the canon timeslices (read by the fact, frame-spine, occupancy and
+throughput pipelines and by the counters) and then each of the seven tables,
+in dependency order, as query-scoped checkpoints (``lifecycle.py``). Every
+later reader — the dependent tables, the checks and every sink — reads the
+materialized rows instead of re-running lineage, and
+``release_scoped_caches()`` frees the whole pass when the publish ends.
+The ``build_*`` functions stay lazy plans; the ``pipeline_*`` queries build
+from them directly.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 import pyspark.sql.functions as F
 
 from ..functions.datetimes import (
@@ -32,6 +41,7 @@ from ..functions.datetimes import (
     round_half_up,
 )
 from ..functions.strings import color_index, pad2, to_uuid_maybe
+from ..lifecycle import query_scoped
 from ..operators.intervals import DEFAULT_MAX_HOURS, explode_to_hour_frames
 
 # Stage color palette (reference: derive/index.ts:55-92) — output data, the
@@ -482,43 +492,79 @@ def build_stage_throughput_daily(
     return rows, counters
 
 
+def _tagged_union(legs: list[DataFrame]) -> DataFrame:
+    """Tag each leg with its position ``tag`` and union them, so one
+    aggregate over the union answers every leg in one job."""
+    return reduce(
+        DataFrame.unionByName,
+        [leg.withColumn("tag", F.lit(i)) for i, leg in enumerate(legs)],
+    )
+
+
+RI_SAMPLE = 10
+
+
 def assert_referential_integrity(
     fact: DataFrame, dim_workflow: DataFrame, dim_stage: DataFrame,
     defs: DataFrame, stages: DataFrame,
 ) -> None:
-    """V4 (derive/index.ts:220-250): raise with ≤10 offender sample."""
-    stage_keys = stages.select(F.col("source_page_id").alias("k")).distinct()
+    """V4 (derive/index.ts:220-250): raise with ≤10 offender sample.
+
+    The three anti-joins run as one job: a tagged union of their distinct
+    offending keys, cut to the ``RI_SAMPLE`` smallest per check. The first
+    failing check in reference order raises: fact stage keys, then
+    DimWorkflow keys, then DimStage keys."""
+    stage_keys = stages.select(F.col("source_page_id").alias("k"))
+    def_keys = defs.select(F.col("source_page_id").alias("k"))
     fact_keys = (
         fact.select(F.col("from_stage_key").alias("k"))
         .unionByName(fact.select(F.col("to_stage_key").alias("k")))
         .filter(F.col("k").isNotNull() & (F.length("k") > 0))
     )
-    missing = [r["k"] for r in fact_keys.join(stage_keys, "k", "left_anti").distinct().limit(10).collect()]
-    if missing:
-        raise ReferentialIntegrityError(
-            f"FactTimeslices references stage keys not present in workflowStages: {', '.join(missing)}"
+    offending = _tagged_union([
+        fact_keys.join(stage_keys, "k", "left_anti"),
+        dim_workflow.select(F.col("workflow_definition_key").alias("k"))
+        .join(def_keys, "k", "left_anti"),
+        dim_stage.select(F.col("stage_key").alias("k"))
+        .join(stage_keys, "k", "left_anti"),
+    ]).distinct()
+    sample = sorted(
+        offending.withColumn(
+            "rn", F.row_number().over(Window.partitionBy("tag").orderBy("k"))
         )
-    def_keys = defs.select(F.col("source_page_id").alias("k")).distinct()
-    bad_wf = [
-        r["workflow_definition_key"]
-        for r in dim_workflow.join(
-            def_keys, dim_workflow.workflow_definition_key == def_keys.k, "left_anti"
-        ).limit(10).collect()
-    ]
-    if bad_wf:
-        raise ReferentialIntegrityError(
-            f"DimWorkflow contains keys not present in workflowDefinitions: {', '.join(bad_wf)}"
-        )
-    bad_stage = [
-        r["stage_key"]
-        for r in dim_stage.join(stage_keys, dim_stage.stage_key == stage_keys.k, "left_anti")
-        .limit(10)
-        .collect()
-    ]
-    if bad_stage:
-        raise ReferentialIntegrityError(
-            f"DimStage contains keys not present in workflowStages: {', '.join(bad_stage)}"
-        )
+        .filter(F.col("rn") <= RI_SAMPLE)
+        .collect(),
+        key=lambda r: r["rn"],
+    )
+    for tag, message in enumerate((
+        "FactTimeslices references stage keys not present in workflowStages",
+        "DimWorkflow contains keys not present in workflowDefinitions",
+        "DimStage contains keys not present in workflowStages",
+    )):
+        keys = [r["k"] for r in sample if r["tag"] == tag]
+        if keys:
+            raise ReferentialIntegrityError(f"{message}: {', '.join(keys)}")
+
+
+def _count_rows(frames: dict[str, DataFrame]) -> dict[str, int]:
+    """The row count of every frame, in one job (one conditional count per
+    tag over their tagged union)."""
+    legs = _tagged_union([df.select() for df in frames.values()])
+    row = legs.agg(
+        *[F.count(F.when(F.col("tag") == i, 1)) for i in range(len(frames))]
+    ).first()
+    return {name: int(n) for name, n in zip(frames, row)}
+
+
+def _materialized(df: DataFrame) -> DataFrame:
+    """``df`` computed once now, as a query-scoped checkpoint: its readers
+    scan the stored rows (partitions and row order kept), and
+    ``release_scoped_caches()`` frees them. Unlike ``persist()``, the
+    checkpoint shares no CacheManager entry with an equal plan another
+    scope cached, so the release frees only this pass; unlike
+    ``flat_checkpoint``, it keeps the size estimate, so joins on it still
+    broadcast."""
+    return query_scoped(df.localCheckpoint(eager=True))
 
 
 def run_derive(
@@ -527,35 +573,36 @@ def run_derive(
     timeslices: DataFrame,
     check_integrity: bool = True,
 ) -> DeriveResult:
-    """Full derive (derive/index.ts:94-297): 7 tables + V7 counters."""
-    timeslices = timeslices.cache()  # read by fact, occupancy, throughput
+    """Full derive (derive/index.ts:94-297): 7 tables + V7 counters, in one
+    query-scoped pass (module docstring). The caller frees it with
+    ``release_scoped_caches()`` once every sink has read the tables."""
+    timeslices = _materialized(timeslices)
 
-    fact = build_fact_timeslices(timeslices, workflow_definitions, workflow_stages)
-    dim_workflow = build_dim_workflow(workflow_definitions)
-    dim_stage = build_dim_stage(workflow_stages, workflow_definitions)
+    fact = _materialized(
+        build_fact_timeslices(timeslices, workflow_definitions, workflow_stages)
+    )
+    dim_workflow = _materialized(build_dim_workflow(workflow_definitions))
+    dim_stage = _materialized(build_dim_stage(workflow_stages, workflow_definitions))
     if check_integrity:
         assert_referential_integrity(
             fact, dim_workflow, dim_stage, workflow_definitions, workflow_stages
         )
-    dim_date = build_dim_date(fact)
-    frames = build_dim_playback_frame(timeslices)
+    dim_date = _materialized(build_dim_date(fact))
+    frames = _materialized(build_dim_playback_frame(timeslices))
     occupancy, skipped_iv, clamped_iv = build_stage_occupancy_hourly(
         timeslices, workflow_stages, dim_stage, frames
     )
-    occupancy = occupancy.cache()  # read by throughput and by the caller
+    occupancy = _materialized(occupancy)
     throughput, edge_dfs = build_stage_throughput_daily(
         timeslices, workflow_stages, dim_stage, occupancy
     )
+    throughput = _materialized(throughput)
 
-    counters = {
-        "occupancy_skipped_missing_or_invalid_interval": skipped_iv.count(),
-        "occupancy_clamped_overlong_interval": clamped_iv.count(),
-        "entry_edge_counted": edge_dfs["entry_edge_counted"].count(),
-        "entry_edge_skipped_missing_timestamp": edge_dfs[
-            "entry_edge_skipped_missing_timestamp"
-        ].count(),
-        "non_stage1_entry_edge_observed": edge_dfs["non_stage1_entry_edge_observed"].count(),
-    }
+    counters = _count_rows({
+        "occupancy_skipped_missing_or_invalid_interval": skipped_iv,
+        "occupancy_clamped_overlong_interval": clamped_iv,
+        **edge_dfs,
+    })
     tables = {
         "FactTimeslices": fact,
         "DimWorkflow": dim_workflow,

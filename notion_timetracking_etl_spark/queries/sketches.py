@@ -910,8 +910,8 @@ _QS_ORACLE_SQL = f"""
         ),
         samp AS (
           SELECT g, value FROM (
-            SELECT g, value, ROW_NUMBER() OVER (PARTITION BY g ORDER BY h)
-                   AS rn
+            SELECT g, value,
+                   ROW_NUMBER() OVER (PARTITION BY g ORDER BY h, value) AS rn
             FROM vals
           ) WHERE rn <= {QS_K}
         ),
@@ -983,7 +983,7 @@ def qs_percentile_aggs(prefix: str) -> list[Column]:
 )
 def quantile_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     vals = qs_keyed_values(load_table(spark, sf_dir, "events"))
-    samp = bottom_k(vals, ["g"], QS_K)
+    samp = bottom_k(vals, ["g"], QS_K, order=("h", "value"))
     est = samp.groupBy("g").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sample"),
         *qs_percentile_aggs("est"),

@@ -678,10 +678,15 @@ def streaming_quantile_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_mode="update",
     )
     # update-mode drain appends every batch's current sample: the union is
-    # a superset of the final state; one dedup + re-bottom-k recovers the
-    # exact global sample (any hash outside the true bottom-k is above the
-    # kth minimum by construction)
-    samp = bottom_k(emissions.dropDuplicates(["g", "h"]), ["g"], QS_K)
+    # a superset of the final state; one dedup of repeated emissions +
+    # re-bottom-k by (h, value) recovers the exact global sample (any pair
+    # outside the true bottom-k sorts after the kth by construction). The
+    # dedup keys on the value too, so two events sharing a hash both stay
+    # and the lower value wins the tie, as in the batch sample.
+    samp = bottom_k(
+        emissions.dropDuplicates(["g", "h", "value"]), ["g"], QS_K,
+        order=("h", "value"),
+    )
     est = samp.groupBy("g").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sample"),
         *qs_percentile_aggs("est"),

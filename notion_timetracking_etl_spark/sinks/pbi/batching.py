@@ -3,10 +3,13 @@
 Semantics (reference: src/sinks/pbi/refresh/batchRows.ts:1-19): positive
 integer batch size, hard-capped at 10,000 rows/POST.
 
-``iter_row_batches`` is the scale path: it consumes ``df.toLocalIterator()``
-so the driver holds at most one batch (plus one executor partition buffer) at
-a time — a 100 TB fact table streams through in bounded memory, it just takes
-the governor-paced time the API quota dictates.
+``iter_df_batches`` is the scale path: it streams the table through
+``df.toLocalIterator(prefetchPartitions=True)``, one job per partition, with
+the next partition's job running while the current one is batched and
+posted. The driver holds at most two partitions plus one batch at a time —
+a 100 TB fact table streams through in bounded memory (bounded by the
+partition size), it just takes the governor-paced time the API quota
+dictates.
 """
 
 from __future__ import annotations
@@ -49,6 +52,9 @@ def iter_row_batches(
 
 
 def iter_df_batches(df: DataFrame, max_batch_size: int = MAX_BATCH_SIZE) -> Iterator[list[dict]]:
-    """DataFrame → ≤10k-row dict batches via toLocalIterator (no collect)."""
-    rows = (r.asDict(recursive=True) for r in df.toLocalIterator())
+    """DataFrame → ≤10k-row dict batches via a prefetching toLocalIterator
+    (no collect)."""
+    rows = (
+        r.asDict(recursive=True) for r in df.toLocalIterator(prefetchPartitions=True)
+    )
     return iter_row_batches(rows, max_batch_size)

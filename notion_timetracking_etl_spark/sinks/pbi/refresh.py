@@ -8,9 +8,11 @@ Semantics (reference: src/sinks/pbi/refresh/executeWipeAndReload.ts:24-101):
   gated by the refresh governor (wait → post → record).
 - returns (tables_processed, total_rows_posted, total_post_requests).
 
-Scale posture: tables arrive as DataFrames and stream through
-``iter_df_batches`` (toLocalIterator) — the driver never materializes a
-table, so the sink is bounded by the API quota (900k rows/h), not memory.
+Scale posture: tables arrive as DataFrames (``run_derive``'s materialized
+tables, so a partition is a scan of stored rows) and stream through
+``iter_df_batches`` — a prefetching ``toLocalIterator``, so the driver holds
+at most two partitions plus one batch, never a whole table. The sink is
+bounded by the API quota (900k rows/h), not memory.
 """
 
 from __future__ import annotations

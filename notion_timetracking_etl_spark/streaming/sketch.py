@@ -135,9 +135,11 @@ def _bottomk_update_fn(k: int):
                     (float(v) for v in pdf["value"]),
                 )
             )
-            # bottom-k by hash is a monoid: merging per batch keeps state
-            # at <= k pairs per group regardless of stream length
-            pairs.sort(key=lambda t: t[0])
+            # bottom-k by (hash, value) is a monoid over a total order:
+            # merging per batch keeps state at <= k pairs per group
+            # regardless of stream length, and a hash tie keeps the lower
+            # value whatever the batch split
+            pairs.sort()
             del pairs[k:]
         state.update(
             ([h for h, _ in pairs], [v for _, v in pairs])
@@ -157,11 +159,12 @@ def bottomk_sample_stream(keyed: DataFrame, k: int) -> DataFrame:
     """Streaming bottom-k-by-hash sample as custom stateful state.
 
     ``keyed`` columns: (g string, h long, value double). Per group the
-    state holds the k smallest hashes seen so far — the union-merge of the
-    batch operator's sample algebra (operators/sketch.py ``bottom_k``), so
-    the final state is IDENTICAL to the batch sample. Every batch emits
-    the group's current sample; the drained union across batches is a
-    superset whose re-bottom-k equals the final state exactly."""
+    state holds the k smallest (hash, value) pairs seen so far — the
+    union-merge of the batch operator's sample algebra
+    (operators/sketch.py ``bottom_k``), so the final state is IDENTICAL to
+    the batch sample. Every batch emits the group's current sample; the
+    drained union across batches is a superset whose re-bottom-k equals
+    the final state exactly."""
     return keyed.groupBy("g").applyInPandasWithState(
         _bottomk_update_fn(k),
         outputStructType=_QS_OUT_SCHEMA,

@@ -209,6 +209,39 @@ def test_cli_pull_normalize_refresh_end_to_end(spark, tmp_path, config_path, cap
     assert any(e.get("datasetId") == "ds-1" for e in reg["entries"])
 
 
+def test_cli_run_end_to_end_derives_once_and_releases(
+    spark, tmp_path, config_path, capsys, monkeypatch
+):
+    """Provision and refresh share one derive, and the publish frees what
+    it materialized when the command ends."""
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
+    from notion_timetracking_etl_spark.plans import derive
+
+    calls = []
+    real = derive.run_derive
+    monkeypatch.setattr(
+        derive, "run_derive", lambda *a, **kw: calls.append(a) or real(*a, **kw)
+    )
+    release_scoped_caches()
+    jsc = spark.sparkContext._jsc
+    base_rdds = set(jsc.getPersistentRDDs().keys())
+
+    seams = Seams(notion_transport=FakeNotion(), pbi_transport=FakePbiHttp())
+    rc = main(
+        ["run-end-to-end", "--data-dir", str(tmp_path / "data"),
+         "--config", config_path, "--run-date", "2026-02-02",
+         "--group-id", "g1", "--dataset-name", "TimeTracking"],
+        spark=spark, seams=seams,
+    )
+    assert rc == 0
+    assert len(calls) == 1
+    refresh = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert refresh["datasetId"] == "ds-1" and refresh["tables"] == 7
+    assert len(seams.pbi_transport.deleted) == 7
+    assert len(seams.pbi_transport.posted["FactTimeslices"]) == 1
+    assert set(jsc.getPersistentRDDs().keys()) == base_rdds
+
+
 def test_cli_audit_notion_schema_artifact(spark, tmp_path, config_path):
     """audit-notion-schema (reference: cli/index.ts:156-205): golden property
     name/id/type catalog per configured database, sorted-keys stable."""

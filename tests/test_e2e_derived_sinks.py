@@ -129,3 +129,60 @@ def test_excel_export_sheet_model_matches_pipeline_queries(
             expected = REGISTRY[TABLE_TO_QUERY[table]].spark(spark, sf_dir).count()
             # header row + data rows (a zero-row table still gets its header)
             assert n_rows == expected + 1, table
+
+
+def test_publish_pass_is_materialized_then_released(spark, sf_dir, tmp_path):
+    """run_derive stores each of the seven tables once; the JSONL, parquet
+    and Power BI sinks read the stored rows, and release_scoped_caches()
+    returns the session's persisted RDDs and CacheManager entries to their
+    baseline."""
+    from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
+    from notion_timetracking_etl_spark.plans.derive import run_derive
+    from notion_timetracking_etl_spark.plans.model import build_model_relationships
+    from notion_timetracking_etl_spark.sinks.parquet import write_partitioned_lake
+    from notion_timetracking_etl_spark.sinks.pbi.client import (
+        PowerBiClient,
+        TokenProvider,
+    )
+    from notion_timetracking_etl_spark.sinks.pbi.refresh import (
+        execute_wipe_and_reload,
+    )
+    from notion_timetracking_etl_spark.sinks.pbi.spec import spec_from_frames
+
+    canon = synth_canon(spark, sf_dir)  # session scope: fill before the baseline
+    for name in ("defs", "stages", "slices"):
+        canon[name].count()
+    release_scoped_caches()
+    jsc = spark.sparkContext._jsc
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    base_rdds = set(jsc.getPersistentRDDs().keys())
+    base_entries = cache_manager.numCachedEntries()
+
+    result = run_derive(canon["defs"], canon["stages"], canon["clean"])
+    assert len(set(jsc.getPersistentRDDs().keys()) - base_rdds) >= len(result.tables)
+    for name, df in result.tables.items():
+        # reading a table is one scan of its stored rows
+        plan = df._jdf.queryExecution().executedPlan().toString().strip()
+        assert "\n" not in plan and (
+            "Scan ExistingRDD" in plan or "InMemoryTableScan" in plan
+        ), (name, plan)
+
+    base = str(tmp_path)
+    for name, df in result.tables.items():
+        write_jsonl(df, base, "derived", name, "2024-01-31")
+    write_partitioned_lake(
+        result.tables["FactTimeslices"], os.path.join(base, "lake"),
+        ["Workflow Definition"],
+    )
+    pbi = FakePbiHttp()
+    client = PowerBiClient(pbi, TokenProvider(pbi, "tenant", "client", "secret"))
+    spec = spec_from_frames("TimeTracking", result.tables, build_model_relationships())
+    execute_wipe_and_reload(client, "g-e2e", "ds-e2e", spec, result.tables)
+
+    release_scoped_caches()
+    assert set(jsc.getPersistentRDDs().keys()) == base_rdds
+    assert cache_manager.numCachedEntries() == base_entries
+    # the pipeline_* queries fill their own session-scope entries
+    for table, query in TABLE_TO_QUERY.items():
+        expected = REGISTRY[query].spark(spark, sf_dir).count()
+        assert len(pbi.posted.get(table, [])) == expected, table

@@ -354,3 +354,109 @@ def test_occupancy_approx_variant_tracks_exact(spark):
     a = {(r["frame_n"], r["stage_key"]): r["item_count"] for r in approx.collect()}
     assert e and a.keys() == e.keys()
     assert a == e
+
+
+# --- V4 raise paths (derive/index.ts:220-250): message prefix, at most 10
+# offenders, and the check order. Frames carry only the key columns the
+# checks read.
+
+_FACT_PREFIX = "FactTimeslices references stage keys not present in workflowStages: "
+_WF_PREFIX = "DimWorkflow contains keys not present in workflowDefinitions: "
+_STAGE_PREFIX = "DimStage contains keys not present in workflowStages: "
+
+
+def _ri_frames(spark, fact_keys=(), wf_keys=(), stage_keys=()):
+    """Consistent RI inputs (one definition, two stages) plus the given
+    dangling keys: fact (from, to) pairs, DimWorkflow keys, DimStage keys."""
+    defs = spark.createDataFrame([(PAGE_WF_A,)], "source_page_id string")
+    stages = spark.createDataFrame([(PAGE_S1,), (PAGE_S2,)], "source_page_id string")
+    fact = spark.createDataFrame(
+        [(PAGE_S1, PAGE_S2), (None, PAGE_S1), ("", None), *fact_keys],
+        "from_stage_key string, to_stage_key string",
+    )
+    dim_workflow = spark.createDataFrame(
+        [(k,) for k in (PAGE_WF_A, *wf_keys)], "workflow_definition_key string"
+    )
+    dim_stage = spark.createDataFrame(
+        [(k,) for k in (PAGE_S1, PAGE_S2, *stage_keys)], "stage_key string"
+    )
+    return fact, dim_workflow, dim_stage, defs, stages
+
+
+def _ri_offenders(message: str, prefix: str) -> list[str]:
+    assert message.startswith(prefix), message
+    listed = message[len(prefix):].split(", ")
+    assert len(listed) == len(set(listed)) <= 10, listed
+    return listed
+
+
+def test_ri_consistent_inputs_pass(spark):
+    from notion_timetracking_etl_spark.plans.derive import assert_referential_integrity
+
+    # null and empty fact keys are tolerated (resolveStageKey → null)
+    assert_referential_integrity(*_ri_frames(spark))
+
+
+def test_ri_fact_stage_keys_raise_with_at_most_ten(spark):
+    from notion_timetracking_etl_spark.plans.derive import assert_referential_integrity
+
+    dangling = [f"fact-missing-{i:02d}" for i in range(12)]
+    pairs = [(k, PAGE_S1) for k in dangling[:6]] + [(PAGE_S2, k) for k in dangling[6:]]
+    pairs += pairs[:3]  # repeated offenders are listed once
+    with pytest.raises(ReferentialIntegrityError) as ei:
+        assert_referential_integrity(*_ri_frames(spark, fact_keys=pairs))
+    listed = _ri_offenders(str(ei.value), _FACT_PREFIX)
+    assert len(listed) == 10 and set(listed) <= set(dangling)
+
+    with pytest.raises(ReferentialIntegrityError) as ei:
+        assert_referential_integrity(
+            *_ri_frames(spark, fact_keys=[("fact-a", "fact-b"), ("fact-a", None)])
+        )
+    assert sorted(_ri_offenders(str(ei.value), _FACT_PREFIX)) == ["fact-a", "fact-b"]
+
+
+def test_ri_dim_workflow_keys_raise_with_at_most_ten(spark):
+    from notion_timetracking_etl_spark.plans.derive import assert_referential_integrity
+
+    dangling = [f"wf-missing-{i:02d}" for i in range(11)]
+    with pytest.raises(ReferentialIntegrityError) as ei:
+        assert_referential_integrity(*_ri_frames(spark, wf_keys=dangling))
+    listed = _ri_offenders(str(ei.value), _WF_PREFIX)
+    assert len(listed) == 10 and set(listed) <= set(dangling)
+
+    with pytest.raises(ReferentialIntegrityError) as ei:
+        assert_referential_integrity(*_ri_frames(spark, wf_keys=["wf-x"]))
+    assert _ri_offenders(str(ei.value), _WF_PREFIX) == ["wf-x"]
+
+
+def test_ri_dim_stage_keys_raise_with_at_most_ten(spark):
+    from notion_timetracking_etl_spark.plans.derive import assert_referential_integrity
+
+    dangling = [f"stage-missing-{i:02d}" for i in range(13)]
+    with pytest.raises(ReferentialIntegrityError) as ei:
+        assert_referential_integrity(*_ri_frames(spark, stage_keys=dangling))
+    listed = _ri_offenders(str(ei.value), _STAGE_PREFIX)
+    assert len(listed) == 10 and set(listed) <= set(dangling)
+
+    with pytest.raises(ReferentialIntegrityError) as ei:
+        assert_referential_integrity(
+            *_ri_frames(spark, stage_keys=["stage-x", "stage-y"])
+        )
+    assert sorted(_ri_offenders(str(ei.value), _STAGE_PREFIX)) == ["stage-x", "stage-y"]
+
+
+def test_ri_checks_raise_in_reference_order(spark):
+    """Fact stage keys first, then DimWorkflow, then DimStage."""
+    from notion_timetracking_etl_spark.plans.derive import assert_referential_integrity
+
+    every = _ri_frames(
+        spark, fact_keys=[("fact-x", None)], wf_keys=["wf-x"], stage_keys=["stage-x"]
+    )
+    with pytest.raises(ReferentialIntegrityError) as ei:
+        assert_referential_integrity(*every)
+    assert _ri_offenders(str(ei.value), _FACT_PREFIX) == ["fact-x"]
+
+    dims = _ri_frames(spark, wf_keys=["wf-x"], stage_keys=["stage-x"])
+    with pytest.raises(ReferentialIntegrityError) as ei:
+        assert_referential_integrity(*dims)
+    assert _ri_offenders(str(ei.value), _WF_PREFIX) == ["wf-x"]

@@ -314,11 +314,30 @@ def test_occupancy_hll_flag_accepts_healthy_and_rejects_broken(spark):
     assert got[(0, 2)] and not got[(0, 3)]
 
 
+class _GroupState:
+    """The slice of pyspark's GroupState a streaming state function reads."""
+
+    def __init__(self):
+        self.get = None
+
+    @property
+    def exists(self):
+        return self.get is not None
+
+    def update(self, value):
+        self.get = value
+
+
 def test_bottom_k_breaks_hash_collisions_on_value(spark):
     """Rows that share (group, h) but differ in value: under the quantile
     sample's (h, value) order the lowest values survive, whatever the input
-    row order and partition count."""
+    row order and partition count — in the batch operator and in the
+    streaming state function under three micro-batch splits."""
     import random
+
+    import pandas as pd
+
+    from notion_timetracking_etl_spark.streaming.sketch import _bottomk_update_fn
 
     rows = [
         ("a", 5, 3.0), ("a", 5, 1.0), ("a", 5, 2.0), ("a", 7, 0.5),
@@ -340,3 +359,18 @@ def test_bottom_k_breaks_hash_collisions_on_value(spark):
                 assert {tuple(r) for r in got.collect()} == want, (
                     ordered, n_parts, k,
                 )
+        for batch_rows in (len(ordered), 3, 1):
+            for k, want in expected.items():
+                update, states = _bottomk_update_fn(k), {}
+                for i in range(0, len(ordered), batch_rows):
+                    batch = pd.DataFrame(
+                        ordered[i:i + batch_rows], columns=["g", "h", "value"]
+                    )
+                    for g, pdf in batch.groupby("g"):
+                        state = states.setdefault(g, _GroupState())
+                        emitted = pd.concat(list(update((g,), iter([pdf]), state)))
+                    assert len(emitted) <= k
+                got = {
+                    (g, h, v) for g, st in states.items() for h, v in zip(*st.get)
+                }
+                assert got == want, (ordered, batch_rows, k)
