@@ -422,7 +422,9 @@ def cmd_ann_fit(args, spark, seams) -> int:
     """Engine extension: train the ANN index models (k-means coarse
     quantizer + PQ subspace codebooks) on --sf-dir's embeddings and freeze
     them under --output (<out>/kmeans, <out>/pq) — the train-once half of
-    the train-once/serve-forever seam (operators/model_store.py)."""
+    the train-once/serve-forever seam (operators/model_store.py). The fits
+    are query-scoped: the command frees them once the models are written."""
+    from .lifecycle import release_scoped_caches
     from .operators.kmeans import kmeans_fit
     from .operators.model_store import save_kmeans_model, save_pq_model
     from .operators.pq import pq_fit
@@ -430,10 +432,12 @@ def cmd_ann_fit(args, spark, seams) -> int:
 
     out = args.output or "ann_models"
     emb = load_embeddings(spark, args.sf_dir).select("vec_id", "embedding")
-    _asg, cent = kmeans_fit(emb, k=8, iters=3, scoped=False)
-    save_kmeans_model(cent, os.path.join(out, "kmeans"))
-    models = pq_fit(emb, m=4, k=8, iters=2, scoped=False)
-    save_pq_model(models, os.path.join(out, "pq"))
+    try:
+        _asg, cent = kmeans_fit(emb, k=8, iters=3)
+        save_kmeans_model(cent, os.path.join(out, "kmeans"))
+        save_pq_model(pq_fit(emb, m=4, k=8, iters=2), os.path.join(out, "pq"))
+    finally:
+        release_scoped_caches()
     seams.log(f"froze kmeans (8 cells) + pq (4x8 codebooks) under {out}")
     return 0
 

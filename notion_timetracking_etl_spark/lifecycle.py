@@ -18,16 +18,20 @@ and read many times: the synthesized canon and the derived intermediates
 the ``pipeline_*`` queries share, the fitted k-means quantizer, the
 refined cells and routing lake, the PQ codebooks, the verified near-dup
 pair list. :func:`session_cached` keys them by corpus,
-``(applicationId, sf_dir)``. At most ``MAX_CORPORA`` corpora stay; the
-least recently used one is evicted whole, and all of its blocks are freed
-together. Caveat, evict-then-execute: eviction frees the
-blocks behind every DataFrame handed out for that corpus, and a checkpoint
-forfeits its lineage, so a lazy plan built on an evicted entry fails with a
-missing-block error instead of recomputing. Execute a plan before touching
-``MAX_CORPORA`` further corpora in the same session (bench, driver and test
-sessions touch at most three and execute eagerly). A user-facing session
-API would need reference counts here first. :func:`release_session_caches`
-frees every corpus now.
+``(applicationId, sf_dir)``. An entry whose plan has a broadcast join is
+stored as a checkpoint, never a persist: a persisted plan keeps its
+executed physical plan, and with it every broadcast hash relation, a whole
+driver memory page each (up to 64 MB) whatever its row count, for as long
+as the entry lives; a checkpoint keeps only the rows. At most
+``MAX_CORPORA`` corpora stay; the least recently used one is evicted whole,
+and all of its blocks are freed together. Caveat, evict-then-execute:
+eviction frees the blocks behind every DataFrame handed out for that
+corpus, and a checkpoint forfeits its lineage, so a lazy plan built on an
+evicted entry fails with a missing-block error instead of recomputing.
+Execute a plan before touching ``MAX_CORPORA`` further corpora in the same
+session (bench, driver and test sessions touch at most three and execute
+eagerly). A user-facing session API would need reference counts here
+first. :func:`release_session_caches` frees every corpus now.
 
 **Write-once files.** Lakes, model artifacts and staging directories a
 query writes once per process and reads back afterwards
@@ -39,9 +43,10 @@ CacheManager entries plus the RDD blocks behind a checkpoint, which
 ``unpersist()`` never reaches.
 
 Harnesses must never call ``spark.catalog.clearCache()``: it drops the
-session-scope persists (canon, derived) behind this module's back, so every
-later query re-derives them from source while the store keeps handing out
-the uncached frames. :func:`release_scoped_caches` is the per-query release.
+canon persists, the only session-scope persists, behind this module's
+back, so every later query re-derives canon from source while the store
+keeps handing out the uncached frames. :func:`release_scoped_caches` is the
+per-query release.
 
 One lock guards the bookkeeping only. Fills run outside it, so fills of
 different keys overlap (the forget sweeps run their legs in driver

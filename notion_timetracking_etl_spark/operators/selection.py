@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
+from ..lifecycle import free
 from .dedup import hash64, words
 
 # ---------------------------------------------------------------------------
@@ -339,7 +340,7 @@ def bpe_fit(freq: DataFrame, n_merges: int) -> list[tuple[str, int]]:
         merged = left + right
         # collapse every non-overlapping left+right adjacency, left to right:
         # an aggregate-style fold the JVM runs per row — no shuffle at all.
-        vocab = vocab.select(
+        next_vocab = vocab.select(
             F.expr(
                 "aggregate(syms, array(cast(null as string)), (acc, s) -> "
                 f"  CASE WHEN element_at(acc, -1) = '{left}' AND s = '{right}' "
@@ -349,4 +350,7 @@ def bpe_fit(freq: DataFrame, n_merges: int) -> list[tuple[str, int]]:
             ).alias("syms"),
             "cnt",
         ).localCheckpoint()
+        free(vocab)  # the superseded round; unpersist() never reaches it
+        vocab = next_vocab
+    free(vocab)
     return merges

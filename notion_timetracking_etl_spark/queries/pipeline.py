@@ -233,7 +233,7 @@ def synth_canon(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 def synth_derived(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """The derived intermediates of the pipeline_* family (fact, DimStage,
-    frame spine, hourly occupancy), persisted once per corpus — what the
+    frame spine, hourly occupancy), checkpointed once per corpus — what the
     reference's derivePbiTableRows does (derive/index.ts:94-297 builds each
     table once and every sink reads the same arrays)."""
     return session_cached(
@@ -242,10 +242,17 @@ def synth_derived(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 
 def _synth_derived(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Eager local checkpoints, not persists: the plans hold broadcast joins
+    (J1–J3, the occupancy lookups), whose relations a persist would pin
+    (lifecycle.py, session scope). Unlike ``flat_checkpoint``, a local
+    checkpoint keeps the size estimate, so joins on ``dim_stage`` still
+    broadcast."""
     c = synth_canon(spark, sf_dir)
-    fact = D.build_fact_timeslices(c["clean"], c["defs"], c["stages"]).persist()
-    dim_stage = D.build_dim_stage(c["stages"], c["defs"]).persist()
-    frames = D.build_dim_playback_frame(c["clean"]).persist()
+    fact = D.build_fact_timeslices(
+        c["clean"], c["defs"], c["stages"]
+    ).localCheckpoint(eager=True)
+    dim_stage = D.build_dim_stage(c["stages"], c["defs"]).localCheckpoint(eager=True)
+    frames = D.build_dim_playback_frame(c["clean"]).localCheckpoint(eager=True)
     occ, _skipped, _clamped = D.build_stage_occupancy_hourly(
         c["clean"], c["stages"], dim_stage, frames
     )
@@ -253,7 +260,7 @@ def _synth_derived(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         "fact": fact,
         "dim_stage": dim_stage,
         "frames": frames,
-        "occ": occ.persist(),
+        "occ": occ.localCheckpoint(eager=True),
     }
 
 
