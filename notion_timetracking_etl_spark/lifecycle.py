@@ -4,8 +4,10 @@ statement creating it is registered here, in one of three lifetimes.
 
 **Query scope.** Intermediates one plan reads several times: shingle and
 candidate tables, the edge and label checkpoints of connected components,
-the last round of an iterative loop, and the seven star tables of one
-publish (``plans/derive.py::run_derive``, read by every sink). They back
+the last round of an iterative loop, the latest generation of a
+streaming accumulator (:func:`next_generation`, which frees the one it
+replaces), and the seven star tables of one publish
+(``plans/derive.py::run_derive``, read by every sink). They back
 the DataFrames a query builder or ``run_derive`` returns, so they must
 outlive the call that made them but not the consuming actions. Register
 them with :func:`scoped_persist`, :func:`scoped_flat_checkpoint` or
@@ -117,6 +119,25 @@ def query_scoped(df: DataFrame) -> DataFrame:
 
 def scoped_persist(df: DataFrame) -> DataFrame:
     return query_scoped(df.persist())
+
+
+def next_generation(prev: DataFrame | None, df: DataFrame) -> DataFrame:
+    """Store ``df``, the next generation of state carried from batch to
+    batch (a ``foreachBatch`` accumulator), and free ``prev``, the
+    generation it replaces. The store is an eager local checkpoint: the
+    next batch reads rows, not lineage (O(1) plan depth), and unlike
+    :func:`flat_checkpoint` it keeps the size estimate the gates' broadcast
+    joins rely on. It is query-scoped, so :func:`release_scoped_caches`
+    frees the final generation after the consuming action. Pass as ``prev``
+    only what an earlier call returned, never a caller's initial state."""
+    ck = df.localCheckpoint(eager=True)
+    with _LOCK:
+        if prev is not None:
+            _SCOPED_CACHES[:] = [d for d in _SCOPED_CACHES if d is not prev]
+        _SCOPED_CACHES.append(ck)
+    if prev is not None:
+        free(prev)
+    return ck
 
 
 def release_scoped_caches() -> None:

@@ -30,10 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
-from ..lifecycle import write_once, written
+from ..lifecycle import next_generation, write_once, written
 from ..operators.cluster import connected_components
 from ..operators.sketch import KMV_K
 from ..sources.tpch import load_table
+from ..streaming.drain import drain_batches, read_parquet_stream
 from .dedup import MINHASH_PAIRS_CTES, near_dup_pairs_cached
 from .helpers import ordered_small
 from .lake import SKETCH_KINDS, group_key, sketch_lake
@@ -1809,10 +1810,21 @@ def deletion_propagation_pq_model(
 # continuously in production; these run the sketch-lake and visual-signature
 # sweeps as foreachBatch tombstone gates over staged request WAVES (one file
 # per micro-batch, Trigger.AvailableNow + maxFilesPerTrigger=1 — the CDC
-# drain shape) and prove the stitched post-stream state hash-equal to the
-# one-shot batch sweep of the full tombstone set. Order independence is
-# structural per surface (streaming/forgetgate.py module comment); a forced
-# 1-entity-per-batch split is pinned in tests/test_round12.py.
+# drain shape, streaming/drain.py) and prove the stitched post-stream state
+# hash-equal to the one-shot batch sweep of the full tombstone set. Each
+# micro-batch stores its lake generation and frees the one it replaces
+# (lifecycle.next_generation). A forced 1-entity-per-batch split is pinned
+# in tests/test_round12.py. Order independence per surface:
+#
+# - Signature lake (visual gate state): the sweep is a pure anti-join
+#   filter; the final state is the corpus minus the UNION of all waves —
+#   any wave split converges to the identical lake.
+# - KMV sketch lake: each wave rebuilds the partials of the date partitions
+#   ITS users appear in, excluding every tombstone seen SO FAR. A date's
+#   final version is written by the last wave touching it; users from later
+#   waves never appear in dates they do not touch, so each touched date's
+#   final partial excludes exactly the tombstoned users that appear in it —
+#   the stitched lake equals the one-shot sweep's for ANY wave split.
 # ---------------------------------------------------------------------------
 
 # The streaming cohort is RICHER than the batch sweeps' single entity so
@@ -1855,9 +1867,9 @@ def sketch_forget_step_factory(
     def step(batch: DataFrame) -> None:
         dead_now = batch.select("user_id")
         acc = state["dead"]
-        state["dead"] = (
-            dead_now if acc is None else acc.unionByName(dead_now)
-        ).localCheckpoint()
+        state["dead"] = next_generation(
+            acc, dead_now if acc is None else acc.unionByName(dead_now)
+        )
         # partitions THIS wave's users can affect (O(dates) rows)
         touched = F.broadcast(
             ev.join(dead_now, "user_id")
@@ -1881,7 +1893,9 @@ def sketch_forget_step_factory(
             ev_touched.join(state["dead"], "user_id", "left_anti")
         )
         rebuilt = kmv.partial(hashed_alive)
-        state["lake"] = kept.unionByName(rebuilt).localCheckpoint()
+        state["lake"] = next_generation(
+            state["lake"], kept.unionByName(rebuilt)
+        )
 
     return step
 
@@ -1914,8 +1928,6 @@ def streaming_forget_sketch_lake(
 ) -> DataFrame:
     import tempfile
 
-    from ..streaming.forgetgate import tombstone_drain
-
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
@@ -1936,8 +1948,10 @@ def streaming_forget_sketch_lake(
     state: dict = {"lake": None, "dead": None}
     step = sketch_forget_step_factory(spark, sf_dir, ev, before, state)
 
-    tombstone_drain(
-        spark, waves_dir, tempfile.mkdtemp(prefix="sg_forget_ckpt_"), step
+    drain_batches(
+        read_parquet_stream(spark, waves_dir, one_file_per_batch=True),
+        tempfile.mkdtemp(prefix="sg_forget_ckpt_"),
+        step,
     )
     stitched = state["lake"] if state["lake"] is not None else before
 
@@ -2004,7 +2018,6 @@ def streaming_forget_multimodal(
         attach_media_columns,
         phash_media,
     )
-    from ..streaming.forgetgate import tombstone_drain
     from .lake import _lake_path
 
     docs = load_table(spark, sf_dir, "documents").filter(
@@ -2032,12 +2045,17 @@ def streaming_forget_multimodal(
 
     def step(batch: DataFrame) -> None:
         lake = state["lake"] if state["lake"] is not None else lake0
-        state["lake"] = lake.join(
-            F.broadcast(batch.select("media_id")), "media_id", "left_anti"
-        ).localCheckpoint()
+        state["lake"] = next_generation(
+            state["lake"],
+            lake.join(
+                F.broadcast(batch.select("media_id")), "media_id", "left_anti"
+            ),
+        )
 
-    tombstone_drain(
-        spark, waves_dir, tempfile.mkdtemp(prefix="sg_forget_ckpt_"), step
+    drain_batches(
+        read_parquet_stream(spark, waves_dir, one_file_per_batch=True),
+        tempfile.mkdtemp(prefix="sg_forget_ckpt_"),
+        step,
     )
     swept = state["lake"] if state["lake"] is not None else lake0
 

@@ -21,6 +21,7 @@ from ..streaming import (
     user_stats_stateful,
     view_purchase_interval_join,
 )
+from ..streaming.drain import read_parquet_stream
 from .helpers import dsum, dsum_sql
 from .registry import register
 from .sketches import _HLL_NUM as _HLL_NUM_SQL
@@ -525,12 +526,8 @@ def streaming_countmin_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketch import CM_DEPTH, _cm_bucket, countmin_estimate
     from ..sources.tpch import load_table
 
-    # stream the documents table (single-file layout like the events reader)
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+    stream = read_parquet_stream(
+        spark, f"{sf_dir}/documents.parquet", one_file_per_batch=False
     )
     tok_stream = stream.select(
         F.explode(words(F.col("text"))).alias("item")
@@ -614,11 +611,8 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .helpers import ordered_small
     from .sketches import HH_K
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+    stream = read_parquet_stream(
+        spark, f"{sf_dir}/documents.parquet", one_file_per_batch=False
     )
     tok_stream = stream.select(
         F.explode(words(F.col("text"))).alias("item")
@@ -742,21 +736,9 @@ def streaming_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("q_micro")
     )
-    from ..streaming.rollup import _is_directory
-
-    path = f"{sf_dir}/documents.parquet"
-    raw_schema = spark.read.parquet(path).schema
-    if _is_directory(spark, path):
-        # directory layout (a real lake / the multi-batch test): stream it
-        stream = spark.readStream.schema(raw_schema).parquet(path)
-    else:
-        # single-file layout (the driver's testdata): the file source lists
-        # a directory, so stream the parent filtered to this one file
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir)
-        )
+    stream = read_parquet_stream(
+        spark, f"{sf_dir}/documents.parquet", one_file_per_batch=False
+    )
     emissions = run_stream_to_table(
         topk_quality_stream(
             stream.select("source", "doc_id", q_micro), SOURCE_CAP
@@ -852,7 +834,6 @@ def streaming_semdedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..lifecycle import scoped_persist
     from ..operators.kmeans import _as_double_vec, _assign
     from ..operators.similarity import norm_sq, srp_planes, srp_signature_bands
-    from ..streaming.rollup import _is_directory
     from ..streaming.semgate import semdedup_gate_drain
     from .kmeans import (
         K,
@@ -916,23 +897,12 @@ def streaming_semdedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nb",
         )
 
-    path = f"{sf_dir}/embeddings.parquet"
-    raw_schema = spark.read.parquet(path).schema
-    if _is_directory(spark, path):
-        # a real multi-file lake: one micro-batch per file — the forced
-        # split that makes the stream==batch claim non-vacuous (tests
-        # stage arrivals as 3 files and compare against the batch gate)
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
-    else:
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "embeddings.parquet")
-            .parquet(sf_dir)
-        )
+    # a multi-file lake streams one micro-batch per file — the forced split
+    # that makes the stream==batch claim non-vacuous (tests stage arrivals
+    # as 3 files and compare against the batch gate)
+    stream = read_parquet_stream(
+        spark, f"{sf_dir}/embeddings.parquet", one_file_per_batch=True
+    )
     arrivals = stream.filter(F.expr(VALID_EMB_PRED)).filter(is_new).select(
         "vec_id", "embedding"
     )
@@ -992,7 +962,6 @@ def streaming_multimodal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         phash_media,
     )
     from ..sources.tpch import load_table
-    from ..streaming.rollup import _is_directory
     from ..streaming.visualgate import phash_gate_drain
     from .multimodal import MM_MAX_HAMMING, MM_PX_L1_MAX
 
@@ -1006,22 +975,11 @@ def streaming_multimodal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         phash_media(attach_media_columns(docs, "doc_id", "text"))
     )
 
-    path = f"{sf_dir}/documents.parquet"
-    raw_schema = spark.read.parquet(path).schema
-    if _is_directory(spark, path):
-        # a real multi-file lake: one micro-batch per file — the forced
-        # split that makes the stream==batch claim non-vacuous
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
-    else:
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir)
-        )
+    # a multi-file lake streams one micro-batch per file — the forced split
+    # that makes the stream==batch claim non-vacuous
+    stream = read_parquet_stream(
+        spark, f"{sf_dir}/documents.parquet", one_file_per_batch=True
+    )
     arrivals = stream.filter(visual & is_new).select("doc_id", "text")
     verdicts, _n = phash_gate_drain(
         spark,

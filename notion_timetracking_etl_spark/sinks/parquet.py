@@ -28,6 +28,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
+from ..streaming.drain import drain
+
 
 def write_partitioned_lake(
     df: DataFrame,
@@ -94,17 +96,10 @@ def stream_to_parquet_lake(
     deployment runs the same call on a schedule as incremental batch
     ingest, reading only new files each run.
     """
-    q = (
+    drain(
         stream_df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
-        .partitionBy(*partition_cols)
-        .trigger(availableNow=True)
-        .start()
+        .partitionBy(*partition_cols),
+        timeout_s,
     )
-    try:
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(f"stream drain exceeded {timeout_s}s")
-    finally:
-        if q.isActive:
-            q.stop()

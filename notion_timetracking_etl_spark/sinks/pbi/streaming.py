@@ -31,6 +31,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
+from ...streaming.drain import drain
 from .batching import iter_df_batches
 from .client import PowerBiClient
 from .governor import RefreshGovernor
@@ -94,14 +95,13 @@ def stream_to_pbi(
     stream_df: DataFrame,
     writer: ForeachBatchPbiWriter,
     checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Start the streaming push. ``available_now=True`` drains the backlog
-    and stops (catch-up / scheduled cadence); ``False`` runs continuously on
-    the default trigger."""
-    ws = stream_df.writeStream.foreachBatch(writer).option(
-        "checkpointLocation", checkpoint_dir
+) -> None:
+    """Drain the stream's backlog into the push dataset and stop
+    (catch-up / scheduled cadence; streaming/drain.py). Blocks until every
+    micro-batch is pushed; raises ``TimeoutError`` when the drain does not
+    finish."""
+    drain(
+        stream_df.writeStream.foreachBatch(writer).option(
+            "checkpointLocation", checkpoint_dir
+        )
     )
-    if available_now:
-        ws = ws.trigger(availableNow=True)
-    return ws.start()

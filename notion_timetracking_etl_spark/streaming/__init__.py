@@ -6,7 +6,9 @@ aggregation semantics exposed over ``readStream``, plus a custom stateful
 operator via ``applyInPandasWithState``. Batch/stream parity is the design
 invariant — each streaming builder has identical semantics to a batch twin,
 verified by the oracle-checked registry queries and the pytest equivalence
-tests.
+tests. Every streaming sink runs through the one drain in ``drain.py``, and
+each ``foreachBatch`` accumulator frees the generation a batch replaces
+(``lifecycle.next_generation``).
 """
 
 from .cdc import merge_upsert_batch, upsert_drain

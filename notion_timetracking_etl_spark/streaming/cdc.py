@@ -3,7 +3,8 @@ incremental-merge sink pattern — each micro-batch of an I/U/D changelog
 merges into the accumulated snapshot state with last-write-wins semantics,
 the loop a production deployment runs with MERGE INTO against a Delta/
 Iceberg table. Here the merge target is an in-session DataFrame advanced
-per batch (localCheckpoint pins each generation); the MERGE itself is the
+per batch (each generation is stored and the one it replaces freed,
+``lifecycle.next_generation``); the MERGE itself is the
 same comparison-struct MAX as the batch CDC apply
 (queries/cdc.py::apply_changelog), so stream and batch provably share
 semantics.
@@ -20,6 +21,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
+
+from ..lifecycle import next_generation
+from .drain import drain_batches, read_parquet_stream
 
 _MERGE_COLS = ("seq", "op", "price_micros", "status")
 
@@ -46,35 +50,17 @@ def upsert_drain(
     """Drain a changelog directory as a file stream (one file per
     micro-batch) through a ``foreachBatch`` MERGE loop; returns the final
     tombstone-inclusive state and the number of micro-batches seen."""
-    schema = spark.read.parquet(changelog_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(changelog_dir)
-    )
-    state: dict = {"acc": None, "batches": 0}
+    state: dict = {"acc": None}
 
-    def step(batch: DataFrame, _bid: int) -> None:
-        state["batches"] += 1
-        # localCheckpoint materializes this generation so the next batch's
-        # merge never re-executes prior lineage (O(1) plan depth per batch)
-        state["acc"] = merge_upsert_batch(state["acc"], batch).localCheckpoint()
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(timeout_s)
-    if not finished:
-        # ADVICE r7: a timed-out drain must FAIL, not hand back whatever
-        # subset of batches happened to merge — a partial accumulator is a
-        # plausible-but-wrong table, strictly worse than an error.
-        q.stop()
-        raise TimeoutError(
-            f"CDC drain did not finish within {timeout_s}s "
-            f"({state['batches']} micro-batches applied); partial state "
-            "discarded"
+    def step(batch: DataFrame) -> None:
+        state["acc"] = next_generation(
+            state["acc"], merge_upsert_batch(state["acc"], batch)
         )
-    return state["acc"], state["batches"]
+
+    n = drain_batches(
+        read_parquet_stream(spark, changelog_dir, one_file_per_batch=True),
+        checkpoint_dir,
+        step,
+        timeout_s,
+    )
+    return state["acc"], n

@@ -2,8 +2,9 @@
 
 Design for scale: the stream shuffles once per aggregation on the group keys;
 watermarks bound state (late events beyond the delay are dropped, closed
-windows are evicted). ``availableNow`` runs drain the full backlog in bounded
-micro-batches — the cloud pattern for catch-up processing over a parquet lake.
+windows are evicted). ``availableNow`` runs (streaming/drain.py) drain the
+full backlog in bounded micro-batches — the cloud pattern for catch-up
+processing over a parquet lake.
 """
 
 from __future__ import annotations
@@ -12,6 +13,8 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 import pyspark.sql.functions as F
+
+from .drain import drain, read_parquet_stream
 
 
 def _dsum(col: Column) -> Column:
@@ -22,25 +25,6 @@ def _dsum(col: Column) -> Column:
     return F.sum(col.cast("decimal(38,6)")).cast("double")
 
 
-def _is_directory(spark: SparkSession, path: str) -> bool:
-    """Directory-layout detection that works for ANY Hadoop-visible
-    filesystem (s3a://, hdfs://, file://), not just the driver's local disk.
-    A driver-local ``os.path.isdir`` returns False for every remote URI and
-    would silently route a directory-layout lake table into the
-    single-file glob fallback — streaming 0 rows. Falls back to ``os.path``
-    only when the JVM gateway is unavailable (Spark Connect), where remote
-    listing isn't possible from the client anyway."""
-    try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return bool(fs.getFileStatus(hpath).isDirectory())
-    except Exception:
-        import os
-
-        return os.path.isdir(path)
-
-
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the events parquet with the batch reader's schema
     contract (TIMESTAMP(NANOS) arrives as long nanos under
@@ -48,19 +32,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tpch import ensure_nanos_readable
 
     ensure_nanos_readable(spark)
-    path = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(path).schema
-    if _is_directory(spark, path):
-        # directory layout (a real lake table): stream the directory itself
-        stream = spark.readStream.schema(raw_schema).parquet(path)
-    else:
-        # single-file layout (the driver's testdata): the file source needs
-        # a directory to list, so stream the parent filtered to this file
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
+    stream = read_parquet_stream(
+        spark, f"{sf_dir}/events.parquet", one_file_per_batch=False
+    )
     if dict(stream.dtypes).get("ts") == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return stream
@@ -140,10 +114,9 @@ def run_stream_to_table(
     stream_df: DataFrame,
     output_mode: str = "complete",
     timeout_s: int = 300,
-    state_partitions: int | None = 8,
     latest_by: tuple[list[str], str] | None = None,
 ) -> DataFrame:
-    """Drain a streaming DataFrame with ``Trigger.AvailableNow`` into a memory
+    """Drain a streaming DataFrame (:func:`.drain.drain`) into a memory
     sink and return the result as a batch DataFrame.
 
     Complete mode emits every window once the backlog is drained — the
@@ -156,44 +129,15 @@ def run_stream_to_table(
     intermediate rows per key. ``latest_by=(keys, monotone_col)`` keeps only
     the final update per key — the row maximizing ``monotone_col`` (e.g. a
     running count, which strictly increases for every key a batch re-emits).
-
-    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the drain
-    (restored after): a stateful stream creates one state store — and for
-    Python-stateful ops one worker — PER shuffle partition, per micro-batch.
-    The partition count is frozen into the checkpoint at first start, so it
-    must be sized to key cardinality / throughput up front; the default here
-    suits the local drain, a 100 TB deployment passes its own (hundreds).
-    ``None`` leaves the session setting untouched.
     """
     spark = stream_df.sparkSession
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_s)
-        finally:
-            if q.isActive:
-                q.stop()
-        if not finished:
-            # ADVICE r7: an availableNow drain that outlives its timeout has
-            # NOT committed every pending micro-batch — the memory sink would
-            # hold a plausible-but-wrong snapshot. Raise instead of returning
-            # partial state; the caller sizes timeout_s to the workload.
-            raise TimeoutError(
-                f"stream drain '{name}' did not finish within {timeout_s}s; "
-                "partial sink contents discarded"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drain(
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode),
+        timeout_s,
+    )
     out = spark.table(name)
     if latest_by is not None:
         from pyspark.sql.window import Window

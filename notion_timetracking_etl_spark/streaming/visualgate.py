@@ -22,6 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
+from ..lifecycle import next_generation
+from .drain import drain_batches
+
 
 def phash_gate_drain(
     spark: SparkSession,
@@ -40,8 +43,8 @@ def phash_gate_drain(
     gate emits each matched arrival's best corpus row by (lowest Hamming,
     lowest exact pixel L1, smallest corpus id) — the comparison-struct MIN
     shared with the batch query. Arrivals are disjoint across batches, so
-    the accumulator is a plain union; ``localCheckpoint`` per generation
-    keeps plan depth O(1) like the CDC merge loop (streaming/cdc.py).
+    the accumulator is a plain union, stored per generation like the CDC
+    merge loop's (streaming/cdc.py), which keeps plan depth O(1).
     """
     from ..operators.dedup import pigeonhole_level
     from ..operators.multimodal import (
@@ -53,10 +56,9 @@ def phash_gate_drain(
     # the adaptive blocking level depends on the CORPUS side only — compute
     # it once per drain, not per micro-batch (the corpus is fixed state here)
     level = pigeonhole_level(corpus_sig.count(), 64, max_hamming)
-    state: dict = {"acc": None, "batches": 0}
+    state: dict = {"acc": None}
 
-    def step(batch: DataFrame, _bid: int) -> None:
-        state["batches"] += 1
+    def step(batch: DataFrame) -> None:
         sig_new = phash_media(attach_media_columns(batch, "doc_id", "text"))
         pairs = phash_cross_near_dups(
             sig_new,
@@ -82,22 +84,9 @@ def phash_gate_drain(
             )
         )
         acc = state["acc"]
-        merged = best if acc is None else acc.unionByName(best)
-        state["acc"] = merged.localCheckpoint()
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(timeout_s)
-    if not finished:
-        q.stop()
-        # a timed-out drain must FAIL, not return a partial verdict set
-        raise TimeoutError(
-            f"visual gate drain did not finish within {timeout_s}s "
-            f"({state['batches']} micro-batches applied); partial state "
-            "discarded"
+        state["acc"] = next_generation(
+            acc, best if acc is None else acc.unionByName(best)
         )
-    return state["acc"], state["batches"]
+
+    n = drain_batches(stream, checkpoint_dir, step, timeout_s)
+    return state["acc"], n

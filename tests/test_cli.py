@@ -239,7 +239,8 @@ def test_cli_run_end_to_end_derives_once_and_releases(
     assert refresh["datasetId"] == "ds-1" and refresh["tables"] == 7
     assert len(seams.pbi_transport.deleted) == 7
     assert len(seams.pbi_transport.posted["FactTimeslices"]) == 1
-    assert set(jsc.getPersistentRDDs().keys()) == base_rdds
+    # the ContextCleaner may free baseline RDDs left by earlier tests
+    assert not set(jsc.getPersistentRDDs().keys()) - base_rdds
 
 
 def test_cli_audit_notion_schema_artifact(spark, tmp_path, config_path):

@@ -180,7 +180,9 @@ def test_publish_pass_is_materialized_then_released(spark, sf_dir, tmp_path):
     execute_wipe_and_reload(client, "g-e2e", "ds-e2e", spec, result.tables)
 
     release_scoped_caches()
-    assert set(jsc.getPersistentRDDs().keys()) == base_rdds
+    # RDDs earlier tests left persisted with no live handle may be freed by
+    # the ContextCleaner at any time, so assert on what the pass created.
+    assert not set(jsc.getPersistentRDDs().keys()) - base_rdds
     assert cache_manager.numCachedEntries() == base_entries
     # the pipeline_* queries fill their own session-scope entries
     for table, query in TABLE_TO_QUERY.items():

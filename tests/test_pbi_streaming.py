@@ -92,8 +92,7 @@ def test_stream_drain_pushes_all_rows_append_only(spark, sf_dir, tmp_path):
     stream = read_events_stream(spark, sf_dir).select(
         "event_id", "event_type"
     )
-    q = stream_to_pbi(stream, writer, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    stream_to_pbi(stream, writer, str(tmp_path / "ckpt"))  # blocks until drained
     n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     assert writer.stats.total_rows_posted == n_events
     assert writer.stats.micro_batches >= 1

@@ -247,8 +247,9 @@ def test_streaming_forget_sketch_lake_any_split_converges(spark, sf_dir):
         sketch_lake,
     )
     from notion_timetracking_etl_spark.sources.tpch import load_table
-    from notion_timetracking_etl_spark.streaming.forgetgate import (
-        tombstone_drain,
+    from notion_timetracking_etl_spark.streaming.drain import (
+        drain_batches,
+        read_parquet_stream,
     )
 
     ev = load_table(spark, sf_dir, "events").filter(
@@ -272,8 +273,10 @@ def test_streaming_forget_sketch_lake_any_split_converges(spark, sf_dir):
     before = sketch_lake(spark, sf_dir, "kmv")
     state: dict = {"lake": None, "dead": None}
     step = sketch_forget_step_factory(spark, sf_dir, ev, before, state)
-    n_batches = tombstone_drain(
-        spark, waves_dir, tempfile.mkdtemp(prefix="sg_split_ckpt_"), step
+    n_batches = drain_batches(
+        read_parquet_stream(spark, waves_dir, one_file_per_batch=True),
+        tempfile.mkdtemp(prefix="sg_split_ckpt_"),
+        step,
     )
     assert n_batches == len(users)
 

@@ -7,15 +7,25 @@ surface oracle-checkable in the driver's correctness gate.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import datetime as dt
+import time
 
+import pyspark.sql.functions as F
+import pytest
+
+from notion_timetracking_etl_spark.lifecycle import release_scoped_caches
 from notion_timetracking_etl_spark.sources.tpch import load_table
 from notion_timetracking_etl_spark.streaming import (
     hourly_rollup,
     read_events_stream,
     run_stream_to_table,
     session_window_rollup,
+    upsert_drain,
     user_stats_stateful,
+)
+from notion_timetracking_etl_spark.streaming.drain import (
+    drain_batches,
+    read_parquet_stream,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -118,3 +128,58 @@ def test_stateful_user_stats_equals_batch(spark):
         )
     )
     assert _sorted_tuples(stream_out) == _sorted_tuples(batch)
+
+
+def _stage_changelog(spark, path: str, n_files: int) -> None:
+    """A changelog of ``n_files`` seq waves, one parquet file per wave."""
+    from notion_timetracking_etl_spark.queries.cdc import changelog_from_orders
+
+    d = dt.datetime(2024, 1, 1)
+    orders = spark.createDataFrame(
+        [(k, k, "O", 100.0, d, "1-URGENT") for k in (1, 3, 7, 21)],
+        "o_orderkey long, o_custkey long, o_orderstatus string,"
+        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
+    )
+    changelog = changelog_from_orders(orders)
+    for seq in range(1, n_files + 1):
+        changelog.filter(F.col("seq") == seq).coalesce(1).write.mode(
+            "append"
+        ).parquet(path)
+
+
+def test_cdc_accumulator_holds_one_generation(spark, tmp_path):
+    """Each micro-batch frees the merge state it replaces: after a 3-batch
+    drain only the final generation is persisted, and the release frees
+    it. Set differences, not equality: RDDs earlier tests left persisted
+    with no live handle may be freed by the ContextCleaner at any time."""
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    clog_dir = str(tmp_path / "changelog")
+    _stage_changelog(spark, clog_dir, 3)
+    release_scoped_caches()
+    base = persisted()
+    final, batches = upsert_drain(spark, clog_dir, str(tmp_path / "ckpt"))
+    assert batches == 3
+    assert len(persisted() - base) == 1
+    assert final.count() == 4
+    release_scoped_caches()
+    assert not persisted() - base
+
+
+def test_timed_out_drain_raises_and_stops(spark, tmp_path):
+    """Every streaming sink runs through streaming/drain.py::drain, so one
+    slow ``foreachBatch`` step covers the timeout path of all of them: the
+    drain raises instead of returning a partial result, and leaves no
+    query running."""
+    clog_dir = str(tmp_path / "changelog")
+    _stage_changelog(spark, clog_dir, 2)
+    with pytest.raises(TimeoutError, match="partial results discarded"):
+        drain_batches(
+            read_parquet_stream(spark, clog_dir, one_file_per_batch=True),
+            str(tmp_path / "ckpt"),
+            lambda batch: time.sleep(2),
+            timeout_s=1,
+        )
+    assert not spark.streams.active
